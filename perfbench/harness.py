@@ -131,7 +131,10 @@ def _scratch_env(work: str):
     into ``work`` (inside the checkout); restore the environment after."""
     tmp = os.path.join(work, "tmp")
     os.makedirs(tmp, exist_ok=True)
-    env = {"TMPDIR": tmp, "UGFRAUD_SPARK_LOCAL_DIR": os.path.join(work, "local")}
+    env = {"TMPDIR": tmp, "UGFRAUD_SPARK_LOCAL_DIR": os.path.join(work, "local"),
+           # the JVM that spark-submit runs first to build the driver's
+           # command line; the driver JVM gets the same flags from conf
+           "SPARK_LAUNCHER_OPTS": f"-XX:-UsePerfData -Djava.io.tmpdir={tmp}"}
     saved = {k: os.environ.get(k) for k in env}
     os.environ.update(env)
     tempfile.tempdir = None
