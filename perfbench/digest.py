@@ -7,10 +7,13 @@ digest reads every column in one aggregate job:
 - ``rows``: the row count;
 - ``hsum``/``hxor``: an exact, order-independent hash of the id and label
   columns (every column that is not floating point);
-- ``sums``: one sum per floating-point (score) column.
+- ``sums``: one sum per floating-point (score) column;
+- ``wsums``: per score column, a sum weighted by the row's key (the hash
+  of its id and label columns, folded to 1..1021), so a score that moves
+  to another row changes the digest even when the plain sum does not.
 
 Two digests match when rows and hashes are equal and every score sum
-agrees to 1e-6 (relative and absolute).
+and weighted sum agrees to 1e-6 (relative and absolute).
 """
 
 from __future__ import annotations
@@ -23,6 +26,7 @@ from pyspark.sql import types as T
 
 FLOAT_TYPES = (T.FloatType, T.DoubleType, T.DecimalType)
 TOLERANCE = 1e-6
+WEIGHT_MOD = 1021  # prime; row weights are 1..WEIGHT_MOD
 
 
 def score_columns(df: DataFrame) -> list[str]:
@@ -33,19 +37,23 @@ def digest(df: DataFrame) -> dict:
     scores = score_columns(df)
     exact = [c for c in df.columns if c not in scores]
     aggs = [F.count(F.lit(1)).alias("rows")]
+    weight = F.lit(1)
     if exact:
         h = F.xxhash64(*[F.col(c) for c in exact])
         # pmod keeps the sum far from long overflow (ANSI mode raises)
         aggs += [F.sum(F.pmod(h, F.lit(1 << 31))).alias("hsum"),
                  F.bit_xor(h).alias("hxor")]
-    aggs += [F.sum(F.col(c).cast("double")).alias(f"s{i}")
-             for i, c in enumerate(scores)]
+        weight = F.pmod(h, F.lit(WEIGHT_MOD)) + 1
+    for i, c in enumerate(scores):
+        v = F.col(c).cast("double")
+        aggs += [F.sum(v).alias(f"s{i}"), F.sum(v * weight).alias(f"w{i}")]
     row = df.agg(*aggs).collect()[0]
     return {
         "rows": row["rows"],
         "hsum": row["hsum"] if exact else None,
         "hxor": row["hxor"] if exact else None,
         "sums": {c: row[f"s{i}"] for i, c in enumerate(scores)},
+        "wsums": {c: row[f"w{i}"] for i, c in enumerate(scores)},
     }
 
 
@@ -62,7 +70,8 @@ def matches(got: dict, want: dict) -> bool:
             and got["hsum"] == want["hsum"]
             and got["hxor"] == want["hxor"]
             and got["sums"].keys() == want["sums"].keys()
-            and all(_close(got["sums"][c], want["sums"][c]) for c in got["sums"]))
+            and all(_close(got[k][c], want[k][c])
+                    for k in ("sums", "wsums") for c in got["sums"]))
 
 
 def conform(expected: DataFrame, like: DataFrame) -> DataFrame:

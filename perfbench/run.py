@@ -40,8 +40,6 @@ def main(argv: list[str] | None = None) -> int:
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=float, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)
-    ap.add_argument("--size", choices=("full", "tiny"), default="full",
-                    help="input sizes (tiny: the self-test's)")
     args = ap.parse_args(argv)
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -52,7 +50,7 @@ def main(argv: list[str] | None = None) -> int:
 
     with open(os.path.join(root, "BENCHMARK.json")) as f:
         spec = json.load(f)
-    all_w = workloads.workloads(args.size)
+    all_w = workloads.workloads()
     if args.workload not in all_w:
         print(f"error: unknown workload {args.workload!r}; "
               f"choose from {sorted(all_w)}", file=sys.stderr)

@@ -1,15 +1,17 @@
-"""Self-test of the benchmark at tiny sizes (sf0.001 tables, a 20k-edge
-probe). Run from the repository root:
+"""Self-test of the benchmark at its shipped sizes (sf0.001 tables, a
+200k-edge probe), each run as short as the harness allows. Run from the
+repository root:
 
     python -m pytest perfbench/tests -q -p no:cacheprovider
 
 Each test that runs the harness starts its own Spark driver; the whole
-file takes a few minutes on a 4-core host.
+file takes about six minutes on a 4-core host.
 """
 
 from __future__ import annotations
 
 import json
+import math
 import os
 import shutil
 import subprocess
@@ -48,7 +50,7 @@ def _assert_metrics(res: dict, kind: str) -> None:
 @pytest.mark.parametrize("workload", [w["name"] for w in SPEC["workloads"]])
 def test_end_to_end_metrics_present(workload):
     res = _result(_cli(ROOT, "--workload", workload, "--seed", "3",
-                       "--seconds", "0", "--trace", "0", "--size", "tiny"))
+                       "--seconds", "0", "--trace", "0"))
     _assert_metrics(res, "end_to_end")
     assert all(m["value"] > 0 for m in res["metrics"].values())
 
@@ -65,7 +67,7 @@ LAYERS = {
 @pytest.mark.parametrize("workload", sorted(LAYERS))
 def test_traced_run_reports_every_layer(workload):
     res = _result(_cli(ROOT, "--workload", workload, "--seed", "3",
-                       "--seconds", "0", "--trace", "1", "--size", "tiny"))
+                       "--seconds", "0", "--trace", "1"))
     _assert_metrics(res, "per_layer")
     m = {k: v["value"] for k, v in res["metrics"].items()}
     for name in LAYERS[workload]:
@@ -82,14 +84,35 @@ def test_perturbed_output_counts_as_failure():
 
     from perfbench import harness, workloads
 
-    w = workloads.workloads("tiny")["link"]
+    w = workloads.workloads()["link"]
     q = next(q for q in w.queries if q.name == "pagerank_blocks_2")
     build = q.build
     q.build = lambda inp: build(inp).withColumn("pagerank", F.col("pagerank") + 1e-3)
     w.queries = [q]
     res = harness.run(w, seed=3, seconds=0, trace=False, root=ROOT)
-    assert res["attempted"] == 2 and res["failed"] == 2
+    passes = harness.WARM_PASSES + harness.MIN_TIMED_PASSES
+    assert res["attempted"] == passes and res["failed"] == passes
     assert "output mismatch" in res["reasons"]["pagerank_blocks_2"][0]
+
+
+def test_digest_ties_scores_to_ids():
+    """Swapping two rows' scores keeps the row count, the id hash and the
+    plain score sum; the weighted sum must still catch it."""
+    from ugfraud_spark.plans.session import get_spark
+
+    from perfbench import digest
+
+    rows = [(i, float(i) / 7) for i in range(50)]
+    swapped = [(i, rows[1 - i][1] if i < 2 else v) for i, v in rows]
+    spark = get_spark("perfbench-test", master="local[1]", shuffle_partitions=1)
+    try:
+        a, b = (digest.digest(spark.createDataFrame(r, "id long, score double"))
+                for r in (rows, swapped))
+    finally:
+        spark.stop()
+    assert a["rows"] == b["rows"] and a["hsum"] == b["hsum"]
+    assert math.isclose(a["sums"]["score"], b["sums"]["score"], rel_tol=1e-12)
+    assert not digest.matches(b, a)
 
 
 def test_seeds_give_different_inputs(tmp_path):

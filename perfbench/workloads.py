@@ -3,8 +3,7 @@ checked.
 
 Every workload is a closed loop with one client: one driver process runs
 its queries one after another and consumes each output in full (see
-``digest``) before the next starts. ``SIZES`` holds the input sizes of
-the measured runs and of the small self-test.
+``digest``) before the next starts.
 """
 
 from __future__ import annotations
@@ -19,11 +18,8 @@ from pyspark.sql import functions as F
 
 from . import datagen, reference
 
-SIZES = {
-    # edges of the probe graph, scale factor of the generated tables
-    "full": {"probe_edges": 200_000, "sf": 0.001},
-    "tiny": {"probe_edges": 20_000, "sf": 0.001},
-}
+PROBE_EDGES = 200_000  # edges of the seeded Zipf probe graph
+SF = 0.001  # scale factor of the generated tables
 PROBE_TOL = 1e-6
 PROBE_MAX_ITER = 100
 PROBE_CHECKPOINT_EVERY = 6  # as bench.py's convergence run
@@ -211,14 +207,17 @@ def _probe(n_edges: int) -> tuple[Query, Callable[[Inputs], None]]:
                   extra, check_extra), prepare)
 
 
-CORPUS_QUERIES = ["dedup_exact", "sessionize"]
+# one cheap leaf per pipeline layer: operators.dedup, streaming.events,
+# functions.text, operators.ann, operators.multimodal
+CORPUS_QUERIES = ["dedup_exact", "sessionize", "text_features",
+                  "ann_cosine_topk", "multimodal_decode"]
+CORPUS_TABLES = ["documents", "events", "embeddings"]
 
 
-def workloads(size: str = "full") -> dict[str, Workload]:
+def workloads() -> dict[str, Workload]:
     """Why each workload exists: perfbench/README.md and BENCHMARK.json."""
-    s = SIZES[size]
-    probe, probe_prepare = _probe(s["probe_edges"])
-    link_tables = _tables_prepare(s["sf"], ["lineitem"])
+    probe, probe_prepare = _probe(PROBE_EDGES)
+    link_tables = _tables_prepare(SF, ["lineitem"])
 
     def link_prepare(inp: Inputs) -> None:
         link_tables(inp)
@@ -233,8 +232,8 @@ def workloads(size: str = "full") -> dict[str, Workload]:
     fraud_corpus = Workload(
         "fraud_corpus",
         [_fraudar(), _svd()]
-        + [_registry_query(q, ["documents", "events"]) for q in CORPUS_QUERIES],
-        _tables_prepare(s["sf"], ["lineitem", "documents", "events"]),
+        + [_registry_query(q, CORPUS_TABLES) for q in CORPUS_QUERIES],
+        _tables_prepare(SF, ["lineitem", *CORPUS_TABLES]),
         derivations=["bipartite_edges"],
     )
     return {w.name: w for w in (link, fraud_corpus)}
