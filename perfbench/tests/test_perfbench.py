@@ -5,7 +5,7 @@ repository root:
     python -m pytest perfbench/tests -q -p no:cacheprovider
 
 Each test that runs the harness starts its own Spark driver; the whole
-file takes about six minutes on a 4-core host.
+file takes three to six minutes on a 4-core host.
 """
 
 from __future__ import annotations
