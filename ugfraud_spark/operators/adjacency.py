@@ -19,6 +19,14 @@ replicated to each (the classic two-level partial/final aggregation made
 explicit across the join, reference-free skew handling the reference
 never needed at 38k nodes).
 
+Partition width: ``n_blocks`` is the block-id (salt) domain, NOT the
+partition count. The packed blocks and the routes are laid out at the
+scoped ``spark.sql.shuffle.partitions`` (``pagerank_blocks`` runs the
+build under ``sized_plan(spark, min(m, n_blocks))``), so several blocks
+share one partition and one Python task of the per-superstep cogroup.
+The block side stays exchange-free because the cogroup plans at that
+same width.
+
 Reference parity: the blocks are exactly the reference's adjacency dicts
 ``{u_id: [(p_id, …)]}`` (``/root/reference/UGFraud/Utils/helper.py:132-167``)
 in columnar, partitioned form; `spmv` is its per-node neighbor loop
@@ -67,8 +75,10 @@ def build_adjacency_blocks(
 
     ``salt = pmod(xxhash64(dst), ceil(out_deg(src)/hub_cap))`` splits a
     hub's edge list deterministically; ``block_id = pmod(xxhash64(src,
-    salt), n_blocks)`` scatters the splits. The packed blocks are
-    repartitioned on block_id and pinned with ``persist()`` (NOT
+    salt), n_blocks)`` scatters the splits — ``n_blocks`` bounds the
+    block-id domain only. The packed blocks are repartitioned on
+    block_id to the scoped shuffle width (the width every later
+    cogroup plans at) and pinned with ``persist()`` (NOT
     localCheckpoint — an ExistingRDD scan reports UnknownPartitioning
     and the per-superstep cogroup would re-Exchange the |E|-sized block
     payload every iteration, exactly the movement this layout exists to
@@ -116,6 +126,7 @@ def build_adjacency_blocks(
             }
         )
 
+    n_conf = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     blocks = (
         salted.select("block_id", "src", "dst", "weight")
         .groupBy("block_id")
@@ -123,7 +134,7 @@ def build_adjacency_blocks(
         # the pack UDF's output attrs are fresh, so the groupBy's own
         # hash partitioning is not provable on them — re-key once here
         # (one-time build cost) to make it visible through the cache
-        .repartition(n_blocks, "block_id")
+        .repartition(n_conf, "block_id")
         .persist()
     )
     blocks.count()
@@ -133,7 +144,6 @@ def build_adjacency_blocks(
     # every iteration; InMemoryRelation keeps the HashPartitioning
     # visible and EnsureRequirements elides it, the colocate_edges
     # mechanism applied to the routing dim)
-    n_conf = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
     routes = (
         salted.select(F.col("src").alias("id"), "block_id")
         .distinct()

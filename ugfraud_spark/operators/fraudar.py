@@ -299,7 +299,13 @@ def fraudar_scores_scale(edges: DataFrame) -> DataFrame:
     get 1.0, everyone else the reference's 1e-6 floor — the documented
     approximation of the multi-block density normalization (single best
     block, Charikar-style 2(1+ε) guarantee). All joins/aggs distributed;
-    nothing O(E) or O(V) reaches the driver."""
+    nothing O(E) or O(V) reaches the driver.
+
+    Precondition: ``edges`` must already be DISTINCT (src, dst) pairs
+    (``fraudar_scores`` passes its materialized ``distinct()`` frame).
+    It is handed to ``bulk_peel(pre_deduped=True)``, which skips the
+    dedup; a duplicated edge would silently inflate the column degrees
+    behind the 1/log(deg+5) weights and every peel delta."""
     detected = bulk_peel(edges, pre_deduped=True).where(
         F.col("side") == "row").select("id")
     users = edges.select(F.col("src").alias("id")).distinct()

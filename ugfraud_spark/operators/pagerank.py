@@ -588,43 +588,60 @@ def pagerank_blocks(
     (north_star's literal boundary): Arrow list arrays flatten to numpy
     zero-copy, measured ~15% faster warm than the applyInPandas twin at
     sf0.1 and bit-compatible at the driver gate's 6dp rounding
-    (kernel-vs-kernel parity ≤1e-12, ``test_adjacency.py``)."""
+    (kernel-vs-kernel parity ≤1e-12, ``test_adjacency.py``).
+
+    ``n_blocks`` is the block-id (salt) domain, not the partition
+    width. The edges are laid out by ``colocate_edges_sized`` and the
+    block build, vertex base and loop all run under ``sized_plan`` at
+    ``w = min(m, n_blocks)`` partitions, so each superstep's Python
+    cogroup runs ``w`` tasks, each reducing several blocks — the cost
+    of a Python task is paid per task, not per block. The cap applies
+    to every stage of the kernel: when ``m > n_blocks`` (a cluster
+    session whose conf width exceeds ``n_blocks``) the vertex base,
+    the joins and the dst reduce also run only ``n_blocks`` wide, so
+    size ``n_blocks`` with the cluster. That case is unmeasured; on a
+    local session ``m`` ≤ the core count ≤ ``n_blocks``."""
     from .adjacency import build_adjacency_blocks, spmv_arrow as spmv
 
-    adj = build_adjacency_blocks(edges.select("src", "dst"), n_blocks=n_blocks,
-                                 hub_cap=hub_cap)
-    base = _vertex_base(edges.select("src", "dst")).persist()
-    n = base.count()
-    teleport = (1.0 - damping) / n
-    state0 = base.withColumn("value", F.lit(1.0 / n))
+    edges, m = colocate_edges_sized(edges.select("src", "dst"))
+    with sized_plan(edges.sparkSession, min(m, n_blocks)):
+        adj = build_adjacency_blocks(edges, n_blocks=n_blocks,
+                                     hub_cap=hub_cap)
+        base = _vertex_base(edges).persist()
+        n = base.count()
+        edges.unpersist()  # blocks, routes and base are materialized
+        teleport = (1.0 - damping) / n
+        state0 = base.withColumn("value", F.lit(1.0 / n))
 
-    def step(state: DataFrame, _i: int) -> DataFrame:
-        contribs = spmv(
-            adj,
-            state.where(F.col("out_deg").isNotNull()).select(
-                "id", (F.col("value") / F.col("out_deg")).alias("c")
-            ),
-        )
-        # shuffle_hash like the join kernel's step: unhinted this was a
-        # SortMergeJoin re-sorting base AND the contribs every superstep
-        return base.join(contribs.hint("shuffle_hash"), "id", "left").select(
-            "id",
-            "out_deg",
-            (F.lit(teleport) + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias(
-                "value"
-            ),
-        )
+        def step(state: DataFrame, _i: int) -> DataFrame:
+            contribs = spmv(
+                adj,
+                state.where(F.col("out_deg").isNotNull()).select(
+                    "id", (F.col("value") / F.col("out_deg")).alias("c")
+                ),
+            )
+            # shuffle_hash like the join kernel's step: unhinted this was
+            # a SortMergeJoin re-sorting base AND the contribs every
+            # superstep
+            return base.join(contribs.hint("shuffle_hash"), "id", "left").select(
+                "id",
+                "out_deg",
+                (F.lit(teleport)
+                 + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias(
+                    "value"
+                ),
+            )
 
-    res = iterate(
-        state0,
-        step,
-        residual_fn=(None if tol is None else l1_residual),
-        max_iter=max_iter,
-        tol=tol or 0.0,
-        checkpoint_every=checkpoint_every,
-        checkpoint_dir=checkpoint_dir,
-        fixed_plan_loop=True,
-    )
+        res = iterate(
+            state0,
+            step,
+            residual_fn=(None if tol is None else l1_residual),
+            max_iter=max_iter,
+            tol=tol or 0.0,
+            checkpoint_every=checkpoint_every,
+            checkpoint_dir=checkpoint_dir,
+            fixed_plan_loop=True,
+        )
     res.state = res.state.select("id", "value")
     return res
 

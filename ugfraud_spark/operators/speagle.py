@@ -106,11 +106,10 @@ def speagle(
         .withColumnRenamed("lp1", "r1")
         .select("src", "dst", *static_cols,
                 *[F.lit(0.0).alias(c) for c in msg_cols])
-        # no explicit repartition: the derivation already arrives
-        # hash(src)-partitioned (sources.tables._part_first) and the
-        # eager checkpoint discards partitioning info regardless — the
-        # old repartition("src") was a full 16-column |E| exchange that
-        # reproduced the layout the frame already had
+        # no explicit repartition: the eager checkpoint below discards
+        # partitioning info (it scans as UnknownPartitioning), so the
+        # old repartition("src") — a full 16-column |E| exchange — bought
+        # no layout the loop could use
         .localCheckpoint(eager=True)
     )
     # loop shuffle width from the measured state size (the count reads

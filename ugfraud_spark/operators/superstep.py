@@ -9,6 +9,13 @@ the reference's convergence checks (Δ<0.1 GANG, ≤1e-8 ZooBP, tol BP).
 
 Scale concerns handled here rather than in each algorithm:
 
+- **One job per converging superstep**: with the stock ``l1_residual``
+  the residual is not a second action over two checkpoints (a join that
+  re-exchanges both, since checkpoints report UnknownPartitioning). It
+  is observed (``DataFrame.observe``) as a null-skipping
+  Σ|value − old| over a left join of the old value onto the step
+  output, inside the ``localCheckpoint`` job that materializes the step
+  anyway. Custom residual callables keep the two-job path.
 - **Lineage truncation**: an iterative DataFrame plan grows per
   superstep; without truncation Catalyst re-analyzes an ever-deeper tree
   and recovery replays every iteration. We ``localCheckpoint(eager)``
@@ -32,7 +39,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -217,10 +224,25 @@ def iterate(
     fixed_plan_loop: bool = False,
 ) -> SuperstepResult:
     """Run ``state ← step_fn(state, i)`` until ``residual_fn`` < tol or
-    ``max_iter``. ``residual_fn(old, new) → float`` is evaluated as one
-    scalar Spark action (reference A4 convergence sums); pass ``None``
-    to run a fixed iteration count with a single materialization per
-    checkpoint interval (cheaper: no per-step action).
+    ``max_iter``. ``residual_fn(old, new) → float`` is the convergence
+    scalar (reference A4 convergence sums); pass ``None`` to run a fixed
+    iteration count with a single materialization per checkpoint
+    interval (cheaper: no per-step action).
+
+    Converging mode materializes every superstep. With ``l1_residual``
+    (the PageRank family, GANG, ZooBP) that is ONE Spark job per
+    superstep: the residual is observed inside the checkpoint job
+    (``_checkpoint_l1``). Any other callable (components, SpEagle) runs
+    as a second action over the two checkpoints.
+
+    ``metrics`` gets one record per superstep in both modes:
+    ``superstep``, ``wall_s`` (seconds since the loop started),
+    ``residual`` when converging, and, for a step whose state was
+    checkpointed, ``num_partitions`` and ``aqe`` (adaptive execution
+    on/off while it ran). An unmaterialized fixed-mode step was only
+    planned; its work runs in the next checkpointed step. Recording
+    these adds no Spark job.
+
     ``fixed_plan_loop=True`` runs the loop under ``fixed_plan`` (AQE
     off) — only for kernels whose step is the hinted co-partitioned
     join+groupBy shape; see ``fixed_plan``'s docstring for the measured
@@ -239,26 +261,30 @@ def iterate(
             new_state = step_fn(state, i)
             i += 1
             need_truncate = (i % checkpoint_every == 0) or i == max_iter
-            if residual_fn is not None:
-                # residual computation is an action → also materializes new_state
+            materialize = residual_fn is not None or need_truncate
+            rec: dict = {"superstep": i}
+            r = float("nan")
+            if residual_fn is l1_residual:
+                new_state, r = _checkpoint_l1(state, new_state)
+            elif materialize:
                 new_state = new_state.localCheckpoint(eager=True)
-                r = residual_fn(state, new_state)
+                if residual_fn is not None:
+                    r = residual_fn(state, new_state)
+            if residual_fn is not None:
                 residuals.append(r)
-                metrics.append({"superstep": i, "residual": r,
-                                "wall_s": round(time.time() - t0, 3)})
-                if checkpoint_dir and need_truncate:
-                    _write_checkpoint(new_state, checkpoint_dir, i, r, t0)
-                state = new_state
-                if r < tol:
-                    converged = True
-                    break
-            else:
-                if need_truncate:
-                    new_state = new_state.localCheckpoint(eager=True)
-                    if checkpoint_dir:
-                        _write_checkpoint(new_state, checkpoint_dir, i,
-                                          float("nan"), t0)
-                state = new_state
+                rec["residual"] = r
+            if materialize:
+                rec["num_partitions"] = new_state.rdd.getNumPartitions()
+                rec["aqe"] = (
+                    spark.conf.get("spark.sql.adaptive.enabled") == "true")
+            rec["wall_s"] = round(time.time() - t0, 3)
+            metrics.append(rec)
+            if checkpoint_dir and need_truncate:
+                _write_checkpoint(new_state, checkpoint_dir, i, r, t0)
+            state = new_state
+            if residual_fn is not None and r < tol:
+                converged = True
+                break
 
     return SuperstepResult(
         state=state,
@@ -273,9 +299,34 @@ def iterate(
 def l1_residual(old: DataFrame, new: DataFrame, key: str = "id",
                 value: str = "value") -> float:
     """Σ|new−old| over the state vector (reference A4: ``GANG.py:127-136``,
-    ``ZooBP.py:141-145``, ``SpEagle.py:218``)."""
+    ``ZooBP.py:141-145``, ``SpEagle.py:218``). ``iterate`` recognises
+    this function and computes the same sum inside the checkpoint job
+    (``_checkpoint_l1``); this body is the reference it is tested
+    against."""
     j = new.alias("n").join(old.alias("o"), on=key, how="inner")
     row = j.select(
         F.sum(F.abs(F.col(f"n.{value}") - F.col(f"o.{value}"))).alias("r")
     ).collect()[0]
     return float(row["r"] if row["r"] is not None else 0.0)
+
+
+def _checkpoint_l1(old: DataFrame,
+                   new: DataFrame) -> tuple[DataFrame, float]:
+    """``new.localCheckpoint(eager=True)`` and ``l1_residual(old, new)``
+    in ONE Spark job: the old value is left-joined onto ``new`` (old side
+    hinted shuffle_hash — it is the |V|-sized checkpoint, ``new`` keeps
+    its id partitioning), Σ|value − old| is observed on the joined rows
+    and the projection back to ``new``'s columns is checkpointed. The
+    sum skips the nulls of ids that exist only in ``new``, and ids only
+    in ``old`` never reach it, so it covers exactly the pairs of
+    ``l1_residual``'s inner join."""
+    obs = Observation()
+    prev = old.select("id", F.col("value").alias("_old")).hint("shuffle_hash")
+    out = (
+        new.join(prev, "id", "left")
+        .observe(obs, F.sum(F.abs(F.col("value") - F.col("_old"))).alias("r"))
+        .select(*new.columns)
+        .localCheckpoint(eager=True)
+    )
+    r = obs.get["r"]
+    return out, float(r if r is not None else 0.0)

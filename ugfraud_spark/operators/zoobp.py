@@ -20,7 +20,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .superstep import (SuperstepResult, colocate_edges_sized,
-                        iterate, sized_plan)
+                        iterate, l1_residual, sized_plan)
 
 
 def zoobp(
@@ -68,18 +68,10 @@ def _zoobp_loop(sym, priors, *, ep, max_iter, tol, checkpoint_dir):
             (F.col("p") + F.lit(h) * F.coalesce("m", F.lit(0.0))).alias("value"),
         )
 
-    def residual(old: DataFrame, new: DataFrame) -> float:
-        r = (
-            new.alias("n").join(old.alias("o"), "id")
-            .select(F.sum(F.abs(F.col("n.value") - F.col("o.value"))).alias("r"))
-            .collect()[0]["r"]
-        )
-        return float(r or 0.0)
-
     res = iterate(
         state0,
         step,
-        residual_fn=(None if tol is None else residual),
+        residual_fn=(None if tol is None else l1_residual),
         max_iter=max_iter,
         tol=tol or 0.0,
         checkpoint_every=1,
