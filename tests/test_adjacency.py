@@ -7,7 +7,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from ugfraud_spark.operators import pagerank
-from ugfraud_spark.operators.adjacency import build_adjacency_blocks, spmv
+from ugfraud_spark.operators.adjacency import build_adjacency_blocks, spmv_arrow
 from ugfraud_spark.sources import tables
 
 
@@ -53,6 +53,14 @@ def test_salting_splits_hubs(spark):
     assert total == 100
 
 
+def _join_mass(edges, state):
+    """The join message step over (id, c) sources — the kernel the
+    pagerank-family oracles gate."""
+    return {r["id"]: r["mass"] for r in pagerank._contribs(
+        edges, state.withColumn("out_deg", F.lit(1)), {"mass": F.col("c")}
+    ).collect()}
+
+
 def test_spmv_exact_small(spark):
     # A = {(0,2,2.0), (1,2,3.0), (0,1,1.0)}, c = {0: 10, 1: 100}
     edges = spark.createDataFrame(
@@ -60,32 +68,22 @@ def test_spmv_exact_small(spark):
     )
     state = spark.createDataFrame([(0, 10.0), (1, 100.0)], "id long, c double")
     adj = build_adjacency_blocks(edges, n_blocks=4)
-    out = {r["id"]: r["mass"] for r in spmv(adj, state).collect()}
-    assert out == {2: 2.0 * 10 + 3.0 * 100, 1: 10.0}
-
-
-def test_spmv_arrow_matches_pandas_kernel(spark, sf_small):
-    """The applyInArrow kernel (north_star's literal boundary) must agree
-    with the applyInPandas kernel edge-for-edge: exact on the tiny case,
-    1e-12 on a real graph (block-internal float summation order may
-    differ)."""
-    from ugfraud_spark.operators.adjacency import spmv_arrow
-    from ugfraud_spark.sources import tables
-
-    edges = spark.createDataFrame(
-        [(0, 2, 2.0), (1, 2, 3.0), (0, 1, 1.0)], "src long, dst long, weight double"
-    )
-    state = spark.createDataFrame([(0, 10.0), (1, 100.0)], "id long, c double")
-    adj = build_adjacency_blocks(edges, n_blocks=4)
     out = {r["id"]: r["mass"] for r in spmv_arrow(adj, state).collect()}
-    assert out == {2: 2.0 * 10 + 3.0 * 100, 1: 10.0}
+    want = {2: 2.0 * 10 + 3.0 * 100, 1: 10.0}
+    assert out == want
+    assert _join_mass(edges.withColumnRenamed("weight", "w"), state) == want
 
+
+def test_spmv_arrow_matches_join_step(spark, sf_small):
+    """The applyInArrow block kernel must agree with the join message
+    step edge-for-edge on a real graph with hub salting: 1e-12 (the
+    float summation order inside a block may differ)."""
     e = tables.uni_edges_directed(spark, sf_small)
-    adj2 = build_adjacency_blocks(e, n_blocks=8, hub_cap=50)
+    adj = build_adjacency_blocks(e, n_blocks=8, hub_cap=50)
     st = e.select(F.col("src").alias("id")).distinct().select(
         "id", (F.col("id") % 7 + 1.0).alias("c")
     )
-    a = {r["id"]: r["mass"] for r in spmv(adj2, st).collect()}
-    b = {r["id"]: r["mass"] for r in spmv_arrow(adj2, st).collect()}
+    a = _join_mass(e.select("src", "dst"), st)
+    b = {r["id"]: r["mass"] for r in spmv_arrow(adj, st).collect()}
     assert set(a) == set(b)
     assert max(abs(a[k] - b[k]) for k in a) < 1e-12

@@ -10,6 +10,7 @@ from __future__ import annotations
 import contextlib
 import io
 
+import pytest
 from pyspark.sql import functions as F
 
 from ugfraud_spark.operators import ann, dedup
@@ -160,6 +161,33 @@ def test_sssp_superstep_edge_side_stays_put(spark):
     edge_branch = plan[join_at:plan.find("InMemoryTableScan")]
     assert "Exchange" not in edge_branch, plan
     ew.unpersist()
+
+
+@pytest.mark.parametrize("weighted", [False, True], ids=["unweighted", "w"])
+def test_pagerank_message_step_edge_side_stays_put(spark, weighted):
+    """The PageRank family's shared message step (``_contribs``: pagerank,
+    PPR, teleport, warm start, topic PPR, dangling, katz, weighted) must
+    probe the colocated edge cache without re-shuffling it: a
+    ShuffledHashJoin whose edge branch is a bare InMemoryTableScan, so
+    only the |V|-sized state side moves each superstep. A ``w`` edge
+    column (pagerank_weighted) must not change that."""
+    from ugfraud_spark.operators.pagerank import _contribs
+    from ugfraud_spark.operators.superstep import colocate_edges
+
+    edges = spark.createDataFrame(
+        [(i % 7, (i * 3) % 11, 1.0 + i % 5) for i in range(60)],
+        "src long, dst long, w double",
+    ).where("src != dst")
+    ec = colocate_edges(edges if weighted else edges.select("src", "dst"))
+    state = spark.createDataFrame(
+        [(i, 1.0, 2) for i in range(7)], "id long, value double, out_deg long")
+    msgs = _contribs(ec, state, {"mass": F.col("value") / F.col("out_deg")})
+    plan = msgs._jdf.queryExecution().executedPlan().toString()
+    join_at = plan.find("ShuffledHashJoin")
+    assert join_at >= 0, plan
+    edge_branch = plan[join_at:plan.find("InMemoryTableScan")]
+    assert "Exchange" not in edge_branch, plan
+    ec.unpersist()
 
 
 def test_pack_sequences_no_corpus_single_partition(spark):

@@ -7,17 +7,18 @@ superstep is a partition-local SpMV (Arrow-vectorized numpy over one
 block) followed by a shuffle-reduce of the partial messages
 (``groupBy(dst).sum`` with map-side combine).
 
-Why blocks beat the plain join at 100 TB: the per-superstep
-``edges ⋈ state`` shuffle re-hashes the full *edge* table every
-iteration. Blocks shuffle the edges ONCE at build time; every superstep
-then moves only the (|V|-sized) state into the (pre-partitioned) blocks
-and the (≤|V|·fanout partial-aggregated) messages out — the 100 TB edge
-payload never crosses the wire again. Salting bounds the largest block:
-a Zipfian hub whose out-edges would otherwise land in one task is split
-into ``ceil(out_deg / hub_cap)`` salt groups, its state value is
-replicated to each (the classic two-level partial/final aggregation made
-explicit across the join, reference-free skew handling the reference
-never needed at 38k nodes).
+Blocks shuffle the edges ONCE at build time; every superstep then moves
+only the (|V|-sized) state into the (pre-partitioned) blocks and the
+(≤|V|·fanout partial-aggregated) messages out. The join message step
+``pagerank._contribs`` moves the same two sides (its edges are pinned
+on ``src`` by ``superstep.colocate_edges``), so blocks differ from it
+in the per-block kernel, not in edge traffic. ``tests/test_adjacency.py``
+checks ``spmv_arrow`` against that join step. Salting bounds the
+largest block: a Zipfian hub whose out-edges would otherwise land in one
+task is split into ``ceil(out_deg / hub_cap)`` salt groups, its state
+value is replicated to each (the classic two-level partial/final
+aggregation made explicit across the join, reference-free skew handling
+the reference never needed at 38k nodes).
 
 Partition width: ``n_blocks`` is the block-id (salt) domain, NOT the
 partition count. The packed blocks and the routes are laid out at the
@@ -29,8 +30,8 @@ same width.
 
 Reference parity: the blocks are exactly the reference's adjacency dicts
 ``{u_id: [(p_id, …)]}`` (``/root/reference/UGFraud/Utils/helper.py:132-167``)
-in columnar, partitioned form; `spmv` is its per-node neighbor loop
-(``GANG.py:128``, ``ZooBP.py:144``) as one vectorized kernel.
+in columnar, partitioned form; ``spmv_arrow`` is its per-node neighbor
+loop (``GANG.py:128``, ``ZooBP.py:144``) as one vectorized kernel.
 """
 
 from __future__ import annotations
@@ -154,67 +155,23 @@ def build_adjacency_blocks(
     return AdjacencyBlocks(blocks=blocks, routes=routes, n_blocks=n_blocks)
 
 
-def spmv(adj: AdjacencyBlocks, state: DataFrame) -> DataFrame:
+def spmv_arrow(adj: AdjacencyBlocks, state: DataFrame) -> DataFrame:
     """One superstep: (id, c) state → (id, mass) where
     ``mass(v) = Σ_{(u,v)∈E} w(u,v) · c(u)``.
 
     Physical plan: state is routed to its salted blocks (join on id —
     state side is |V|, tiny next to |E|), cogrouped with the
     pre-partitioned blocks on block_id, reduced partition-locally with
-    numpy inside Arrow (`np.bincount` over block-local dst codes), and
+    numpy inside Arrow (``np.bincount`` over block-local dst codes), and
     the per-block partials are shuffle-reduced by dst. Only state and
     partial messages move; the edge arrays stay put.
-    """
-    routed = adj.routes.join(
-        state.select("id", "c").hint("shuffle_hash"), "id"
-    ).select("block_id", "id", "c")
 
-    def kernel(block_pdf: pd.DataFrame, state_pdf: pd.DataFrame) -> pd.DataFrame:
-        if block_pdf.empty or state_pdf.empty:
-            return pd.DataFrame({"id": np.array([], dtype="int64"),
-                                 "partial": np.array([], dtype="float64")})
-        out_ids: list[np.ndarray] = []
-        out_vals: list[np.ndarray] = []
-        lut = pd.Series(
-            state_pdf["c"].to_numpy(dtype="float64"),
-            index=state_pdf["id"].to_numpy(dtype="int64"),
-        )
-        # one row per block (a block_id group normally holds exactly one)
-        for i in range(len(block_pdf)):
-            srcs = np.asarray(block_pdf["srcs"].iloc[i], dtype="int64")
-            ids = np.asarray(block_pdf["dst_ids"].iloc[i], dtype="int64")
-            codes = np.asarray(block_pdf["dst_codes"].iloc[i], dtype="int64")
-            ws = np.asarray(block_pdf["weights"].iloc[i], dtype="float64")
-            if len(ws) == 0:  # unit-weight block (build-time elision)
-                ws = np.ones(len(srcs))
-            # absent state = contribution 0 (same sums as the old mask)
-            c = np.nan_to_num(lut.reindex(srcs).to_numpy(dtype="float64"))
-            partial = np.bincount(codes, weights=ws * c, minlength=len(ids))
-            out_ids.append(ids)
-            out_vals.append(partial)
-        return pd.DataFrame(
-            {"id": np.concatenate(out_ids), "partial": np.concatenate(out_vals)}
-        )
-
-    partials = (
-        adj.blocks.groupby("block_id")
-        .cogroup(routed.groupby("block_id"))
-        .applyInPandas(kernel, schema="id long, partial double")
-    )
-    return partials.groupBy("id").agg(F.sum("partial").alias("mass"))
-
-
-def spmv_arrow(adj: AdjacencyBlocks, state: DataFrame) -> DataFrame:
-    """``spmv`` with the north_star's literal kernel boundary:
-    ``applyInArrow`` (Spark 4) instead of ``applyInPandas`` — the block
-    list arrays flatten to numpy ZERO-COPY from Arrow (no pandas
-    object-Series materialization of array<long> columns, no per-row
-    ``.iloc``), and the state lookup is a sorted-array ``searchsorted``
-    instead of a pandas reindex. Same partial-message contract: the
-    per-block partials are exact sums over that block's edges, reduced
-    by the downstream ``groupBy(id).sum`` (float summation order inside
-    a block may differ from ``spmv`` by ~1e-15 — both kernels are
-    fixpoint-equivalent, asserted in tests)."""
+    The boundary is ``applyInArrow`` (north_star's literal kernel
+    boundary): the block list arrays flatten to numpy ZERO-COPY from
+    Arrow, and the state lookup is a sorted-array ``searchsorted``.
+    Float summation order inside a block differs from the join message
+    step ``pagerank._contribs`` by ~1e-15; the two are asserted equal
+    to 1e-12 in tests."""
     import pyarrow as pa
 
     # state side hinted shuffle_hash: the routes side arrives already

@@ -509,20 +509,6 @@ def doc_chunks(docs: DataFrame, w: int = CHUNK_W) -> DataFrame:
     )
 
 
-def boilerplate_spans(docs: DataFrame, w: int = CHUNK_W,
-                      min_docs: int = BOILER_MIN_DOCS) -> DataFrame:
-    """(chunk, df): spans occurring in >= ``min_docs`` distinct docs —
-    one groupBy(chunk) with a distinct-count; the shuffle key is the
-    span text itself, and partial aggregation bounds reducer input by
-    map-partition count, not by a span's corpus frequency."""
-    return (
-        doc_chunks(docs, w)
-        .groupBy("chunk")
-        .agg(F.count_distinct("doc_id").alias("df"))
-        .where(F.col("df") >= min_docs)
-    )
-
-
 def remove_boilerplate(docs: DataFrame, w: int = CHUNK_W,
                        min_docs: int = BOILER_MIN_DOCS,
                        broadcast_spans: bool = True) -> DataFrame:

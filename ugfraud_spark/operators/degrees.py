@@ -24,13 +24,6 @@ def in_degree(edges: DataFrame) -> DataFrame:
     )
 
 
-def weighted_in_degree(edges: DataFrame, weight: str = "weight") -> DataFrame:
-    """Reference A2: ``M.sum(axis=0)`` column sums (``Fraudar.py:155-156``)."""
-    return edges.groupBy(F.col("dst").alias("id")).agg(
-        F.sum(weight).alias("w_in_deg")
-    )
-
-
 def degree(edges_undirected_ab: DataFrame) -> DataFrame:
     """Undirected degree from canonical (a,b) edges."""
     u = edges_undirected_ab

@@ -1,31 +1,47 @@
-"""PageRank as join+groupBy SpMV supersteps.
+"""The PageRank family as join+groupBy SpMV supersteps.
 
-Kernel (deterministic, mirrored 1:1 by the DuckDB oracle in
+Every kernel here runs one superstep, written once:
+
+    messages   = groupBy(dst).sum(edges ⋈ pruned state on src)
+    next state = update(base ⟕ messages on id)
+
+``_contribs`` is the message step (SURVEY J2, ``A·x``): the state is
+pruned to vertices with out-edges, each keeps its per-source
+contribution (``value/out_deg`` for PageRank, ``value`` for Katz, one
+column per topic for ``topic_ppr``; a ``w`` edge column, as in
+``pagerank_weighted``, weights each message and makes out_deg the
+out-weight), and it is joined to the edge layout pinned on ``src`` by
+``colocate_edges_sized`` with the state side hinted ``shuffle_hash`` —
+the |E|-sized edge side never moves, only the |V|-sized state and the
+map-side-combined messages cross the wire. ``_propagate`` owns the rest:
+a left join of the messages onto the persisted vertex base
+(hash-partitioned on id, so only the messages shuffle), the variant's
+update expression, and the ``iterate`` loop (AQE off, L1 residual fused
+into the checkpoint job when ``tol`` is set). A variant only builds its
+vertex base, its initial state, its contribution columns and its update
+expression; ``pagerank_blocks`` swaps the join message step for the
+CSR-block ``spmv_arrow``, and ``pagerank_dangling`` adds a crossJoin'd
+dangling-mass row to the update.
+
+Base kernel (deterministic, mirrored 1:1 by the DuckDB oracle in
 ``ugfraud_spark/oracle.py``):
 
     r_0(v)     = 1/N
     r_{t+1}(v) = (1-d)/N + d * Σ_{(u,v)∈E} r_t(u) / outdeg(u)
 
 Dangling mass is dropped (documented simplification — the fixed-point
-still sums < 1; convergence tests additionally check the
-mass-redistributed variant against a numpy oracle).
-
-Physical plan per superstep: broadcast-or-shuffle hash join
-edges⋈ranks on ``src`` (Catalyst's choice; ranks side is |V| rows, tiny
-relative to |E| for web graphs so it is broadcast at bench scale), then
-one shuffle for ``groupBy(dst).sum`` with map-side partial aggregation.
-Contributions ``r/outdeg`` are precomputed by fusing outdeg into the
-rank state — saving one join per superstep versus the naive 3-way plan.
+still sums < 1; ``pagerank_dangling`` is the mass-redistributed variant).
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from typing import Callable
+
+from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from .superstep import (
     SuperstepResult,
-    colocate_edges,
     colocate_edges_sized,
     iterate,
     l1_residual,
@@ -38,14 +54,82 @@ def _vertex_base(edges: DataFrame) -> DataFrame:
     vertices carried with out_deg NULL — via a single shuffle: union the
     endpoint columns with an is_src marker, one groupBy(id) with partial
     aggregation. Output is hash-partitioned on id, exactly what the
-    per-superstep state joins need."""
-    marked = edges.select(F.col("src").alias("id"), F.lit(1).alias("is_src")).unionAll(
-        edges.select(F.col("dst").alias("id"), F.lit(0).alias("is_src"))
+    per-superstep state joins need. A ``w`` edge column is summed
+    instead of counted: out_deg is then the vertex's out-weight."""
+    one, zero = ((F.col("w"), F.lit(0.0)) if "w" in edges.columns
+                 else (F.lit(1), F.lit(0)))
+    marked = edges.select(F.col("src").alias("id"), one.alias("is_src")).unionAll(
+        edges.select(F.col("dst").alias("id"), zero.alias("is_src"))
     )
     counted = marked.groupBy("id").agg(F.sum("is_src").alias("_od"))
     return counted.select(
         "id", F.when(F.col("_od") > 0, F.col("_od")).alias("out_deg")
     )
+
+
+def _contribs(edges: DataFrame, state: DataFrame,
+              sums: dict[str, Column]) -> DataFrame:
+    """The shared message step: (id, *sums) with
+    ``sums[k](v) = Σ_{(u,v)∈E} [w(u,v) ·] sums[k](u)``.
+
+    ``sums`` maps each message column to its per-source contribution,
+    an expression over a state row. Vertices with a NULL ``out_deg``
+    have no out-edges; pruning them is plan-only (the inner join would
+    drop them). The state side is hinted ``shuffle_hash`` against the
+    colocated edges, and one ``groupBy(dst)`` with map-side partial
+    aggregation sums every message column; a ``w`` edge column weights
+    each message."""
+    src = state.where(F.col("out_deg").isNotNull()).select(
+        F.col("id").alias("src"), *[c.alias(k) for k, c in sums.items()])
+    w = F.col("w") if "w" in edges.columns else None
+    return (
+        edges.join(src.hint("shuffle_hash"), "src")
+        .groupBy(F.col("dst").alias("id"))
+        .agg(*[F.sum(F.col(k) if w is None else F.col(k) * w).alias(k)
+               for k in sums])
+    )
+
+
+def _rank_contribs(edges: DataFrame) -> Callable[[DataFrame], DataFrame]:
+    """PageRank's message step: each source sends ``value/out_deg``."""
+    return lambda s: _contribs(
+        edges, s, {"mass": F.col("value") / F.col("out_deg")})
+
+
+def _damped(teleport: Column, damping: float, mass: str = "mass") -> Column:
+    """The family's update: ``teleport + damping · messages`` (0 for a
+    vertex that received none)."""
+    return teleport + F.lit(damping) * F.coalesce(mass, F.lit(0.0))
+
+
+def _iterate(state0: DataFrame, step: Callable[[DataFrame, int], DataFrame],
+             values: list[str], *, tol: float | None = None,
+             **loop) -> SuperstepResult:
+    """The family's loop: ``iterate`` with AQE off (the step is the hinted
+    co-partitioned join shape). Any ``tol``, 0.0 included, converges on
+    ``l1_residual`` fused into the checkpoint job and records every
+    residual; ``tol=None`` runs exactly ``max_iter`` steps. The result
+    state is projected to ``(id, *values)``."""
+    res = iterate(state0, step,
+                  residual_fn=None if tol is None else l1_residual,
+                  tol=tol or 0.0, fixed_plan_loop=True, **loop)
+    res.state = res.state.select("id", *values)
+    return res
+
+
+def _propagate(base: DataFrame, state0: DataFrame,
+               contribs: Callable[[DataFrame], DataFrame],
+               values: dict[str, Column], **loop) -> SuperstepResult:
+    """The shared superstep and loop: left-join ``contribs(state)`` onto
+    the persisted vertex ``base`` (both sides hash-partitioned on id, the
+    messages hinted ``shuffle_hash``), carry the base columns and compute
+    each ``values[k]`` from them and the message columns. ``loop`` goes
+    to ``_iterate``."""
+    def step(state: DataFrame, _i: int) -> DataFrame:
+        return base.join(contribs(state).hint("shuffle_hash"), "id", "left").select(
+            *base.columns, *[v.alias(k) for k, v in values.items()])
+
+    return _iterate(state0, step, list(values), **loop)
 
 
 def pagerank(
@@ -75,45 +159,11 @@ def pagerank(
         # stays visible to the per-superstep left join against contribs.
         base = _vertex_base(edges).persist()
         n = base.count()
-        teleport = (1.0 - damping) / n
-
-        state0 = base.withColumn("value", F.lit(1.0 / n))
-
-        def step(state: DataFrame, _i: int) -> DataFrame:
-            contribs = (
-                edges.join(
-                    state.where(F.col("out_deg").isNotNull())
-                    .select(
-                        F.col("id").alias("src"),
-                        (F.col("value") / F.col("out_deg")).alias("c"),
-                    )
-                    .hint("shuffle_hash"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("mass"))
-            )
-            return base.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id",
-                "out_deg",
-                (F.lit(teleport)
-                 + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias(
-                    "value"
-                ),
-            )
-
-        res = iterate(
-            state0,
-            step,
-            residual_fn=(None if tol is None else l1_residual),
-            max_iter=max_iter,
-            tol=tol or 0.0,
-            checkpoint_every=checkpoint_every,
-            checkpoint_dir=checkpoint_dir,
-            fixed_plan_loop=True,
-        )
-    res.state = res.state.select("id", "value")
-    return res
+        return _propagate(
+            base, base.withColumn("value", F.lit(1.0 / n)), _rank_contribs(edges),
+            {"value": _damped(F.lit((1.0 - damping) / n), damping)},
+            max_iter=max_iter, tol=tol,
+            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir)
 
 
 def personalized_pagerank(
@@ -158,36 +208,11 @@ def personalized_pagerank(
         )
         base.count()
         vb.unpersist()
-        state0 = base.withColumn("value", F.col("tp") / F.lit(1.0 - damping))
-
-        def step(state: DataFrame, _i: int) -> DataFrame:
-            contribs = (
-                edges.join(
-                    state.where(F.col("out_deg").isNotNull())
-                    .select(F.col("id").alias("src"),
-                            (F.col("value") / F.col("out_deg")).alias("c"))
-                    .hint("shuffle_hash"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("mass"))
-            )
-            return base.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id", "out_deg", "tp",
-                (F.col("tp") + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias(
-                    "value"
-                ),
-            )
-
-        res = iterate(
-            state0, step,
-            residual_fn=(None if tol is None else l1_residual),
-            max_iter=max_iter, tol=tol or 0.0,
-            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir,
-            fixed_plan_loop=True,
-        )
-    res.state = res.state.select("id", "value")
-    return res
+        return _propagate(
+            base, base.withColumn("value", F.col("tp") / F.lit(1.0 - damping)),
+            _rank_contribs(edges), {"value": _damped(F.col("tp"), damping)},
+            max_iter=max_iter, tol=tol,
+            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir)
 
 
 def teleport_pagerank(
@@ -238,35 +263,11 @@ def teleport_pagerank(
         )
         base.count()
         vb.unpersist()
-        state0 = base.withColumn("value", F.col("wn"))
-
-        def step(state: DataFrame, _i: int) -> DataFrame:
-            contribs = (
-                edges.join(
-                    state.where(F.col("out_deg").isNotNull())
-                    .select(F.col("id").alias("src"),
-                            (F.col("value") / F.col("out_deg")).alias("c"))
-                    .hint("shuffle_hash"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("mass"))
-            )
-            return base.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id", "out_deg", "wn",
-                (F.lit(1.0 - damping) * F.col("wn")
-                 + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias("value"),
-            )
-
-        res = iterate(
-            state0, step,
-            residual_fn=(None if tol is None else l1_residual),
-            max_iter=max_iter, tol=tol or 0.0,
-            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir,
-            fixed_plan_loop=True,
-        )
-    res.state = res.state.select("id", "value")
-    return res
+        return _propagate(
+            base, base.withColumn("value", F.col("wn")), _rank_contribs(edges),
+            {"value": _damped(F.lit(1.0 - damping) * F.col("wn"), damping)},
+            max_iter=max_iter, tol=tol,
+            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir)
 
 
 def pagerank_from(
@@ -298,41 +299,16 @@ def pagerank_from(
     with sized_plan(edges.sparkSession, m):
         base = _vertex_base(edges).persist()
         n = base.count()
-        teleport = (1.0 - damping) / n
-
         state0 = (
             base.join(init.select("id", F.col("value").cast("double")
                                   .alias("value")), "id", "left")
             .withColumn("value", F.coalesce(F.col("value"), F.lit(1.0 / n)))
         )
-
-        def step(state: DataFrame, _i: int) -> DataFrame:
-            contribs = (
-                edges.join(
-                    state.where(F.col("out_deg").isNotNull())
-                    .select(F.col("id").alias("src"),
-                            (F.col("value") / F.col("out_deg")).alias("c"))
-                    .hint("shuffle_hash"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("mass"))
-            )
-            return base.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id", "out_deg",
-                (F.lit(teleport)
-                 + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias("value"),
-            )
-
-        res = iterate(
-            state0, step,
-            residual_fn=(None if tol is None else l1_residual),
-            max_iter=max_iter, tol=tol or 0.0,
-            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir,
-            fixed_plan_loop=True,
-        )
-    res.state = res.state.select("id", "value")
-    return res
+        return _propagate(
+            base, state0, _rank_contribs(edges),
+            {"value": _damped(F.lit((1.0 - damping) / n), damping)},
+            max_iter=max_iter, tol=tol,
+            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir)
 
 
 def topic_ppr(
@@ -407,37 +383,15 @@ def topic_ppr(
             *[(F.col(f"tp{t}") / F.lit(1.0 - damping)).alias(f"v{t}")
               for t in range(n_topics)],
         )
-
-        def step(state: DataFrame, _i: int) -> DataFrame:
-            contribs = (
-                edges.join(
-                    state.where(F.col("out_deg").isNotNull())
-                    .select(F.col("id").alias("src"),
-                            *[(F.col(f"v{t}") / F.col("out_deg")).alias(f"c{t}")
-                              for t in range(n_topics)])
-                    .hint("shuffle_hash"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(*[F.sum(f"c{t}").alias(f"m{t}") for t in range(n_topics)])
-            )
-            return base.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id", "out_deg",
-                *[f"tp{t}" for t in range(n_topics)],
-                *[(F.col(f"tp{t}")
-                   + F.lit(damping) * F.coalesce(f"m{t}", F.lit(0.0))
-                   ).alias(f"v{t}") for t in range(n_topics)],
-            )
-
-        res = iterate(
-            state0, step, residual_fn=None,
+        return _propagate(
+            base, state0,
+            lambda s: _contribs(edges, s, {
+                f"m{t}": F.col(f"v{t}") / F.col("out_deg")
+                for t in range(n_topics)}),
+            {f"v{t}": _damped(F.col(f"tp{t}"), damping, f"m{t}")
+             for t in range(n_topics)},
             max_iter=max_iter,
-            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir,
-            fixed_plan_loop=True,
-        )
-    res.state = res.state.select(
-        "id", *[f"v{t}" for t in range(n_topics)])
-    return res
+            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir)
 
 
 def pagerank_dangling(
@@ -465,24 +419,13 @@ def pagerank_dangling(
         base = _vertex_base(edges).persist()
         n = base.count()
         teleport = (1.0 - damping) / n
-        state0 = base.withColumn("value", F.lit(1.0 / n))
+        contribs = _rank_contribs(edges)
 
         def step(state: DataFrame, _i: int) -> DataFrame:
-            contribs = (
-                edges.join(
-                    state.where(F.col("out_deg").isNotNull())
-                    .select(F.col("id").alias("src"),
-                            (F.col("value") / F.col("out_deg")).alias("c"))
-                    .hint("shuffle_hash"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("mass"))
-            )
             dang = state.where(F.col("out_deg").isNull()).agg(
                 F.coalesce(F.sum("value"), F.lit(0.0)).alias("dm"))
             return (
-                base.join(contribs.hint("shuffle_hash"), "id", "left")
+                base.join(contribs(state).hint("shuffle_hash"), "id", "left")
                 .crossJoin(dang)
                 .select(
                     "id",
@@ -493,18 +436,10 @@ def pagerank_dangling(
                 )
             )
 
-        res = iterate(
-            state0,
-            step,
-            residual_fn=(None if tol is None else l1_residual),
-            max_iter=max_iter,
-            tol=tol or 0.0,
-            checkpoint_every=checkpoint_every,
-            checkpoint_dir=checkpoint_dir,
-            fixed_plan_loop=True,
-        )
-    res.state = res.state.select("id", "value")
-    return res
+        return _iterate(
+            base.withColumn("value", F.lit(1.0 / n)), step, ["value"],
+            max_iter=max_iter, tol=tol,
+            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir)
 
 
 def katz(
@@ -531,41 +466,12 @@ def katz(
     with sized_plan(edges.sparkSession, m):
         base = _vertex_base(edges).persist()
         base.count()
-        state0 = base.withColumn("value", F.lit(beta))
-
-        def step(state: DataFrame, _i: int) -> DataFrame:
-            contribs = (
-                edges.join(
-                    # dangling vertices have no out-edges — pruning them from
-                    # the probe side is plan-only (the join would drop them)
-                    state.where(F.col("out_deg").isNotNull())
-                    .select(F.col("id").alias("src"), F.col("value").alias("c"))
-                    .hint("shuffle_hash"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("mass"))
-            )
-            return base.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id",
-                "out_deg",
-                (F.lit(beta) + F.lit(alpha) * F.coalesce("mass", F.lit(0.0))).alias(
-                    "value"
-                ),
-            )
-
-        res = iterate(
-            state0,
-            step,
-            residual_fn=(None if tol is None else l1_residual),
-            max_iter=max_iter,
-            tol=tol or 0.0,
-            checkpoint_every=checkpoint_every,
-            checkpoint_dir=checkpoint_dir,
-            fixed_plan_loop=True,
-        )
-    res.state = res.state.select("id", "value")
-    return res
+        return _propagate(
+            base, base.withColumn("value", F.lit(beta)),
+            lambda s: _contribs(edges, s, {"mass": F.col("value")}),
+            {"value": _damped(F.lit(beta), alpha)},
+            max_iter=max_iter, tol=tol,
+            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir)
 
 
 def pagerank_blocks(
@@ -584,11 +490,11 @@ def pagerank_blocks(
     equal to 1e-12 in tests — but each superstep moves only state and
     partial messages; the edge arrays are shuffled exactly once at
     build. Preferred at 100 TB; the plain join kernel stays as the
-    oracle-parity twin. The SpMV uses the ``applyInArrow`` kernel
-    (north_star's literal boundary): Arrow list arrays flatten to numpy
-    zero-copy, measured ~15% faster warm than the applyInPandas twin at
-    sf0.1 and bit-compatible at the driver gate's 6dp rounding
-    (kernel-vs-kernel parity ≤1e-12, ``test_adjacency.py``).
+    oracle-parity twin. The message step is ``spmv_arrow``
+    (``applyInArrow``, north_star's literal boundary: Arrow list arrays
+    flatten to numpy zero-copy) in place of the join step
+    ``_contribs``; the two agree to ≤1e-12 (``test_adjacency.py``),
+    far inside the driver gate's 6dp rounding.
 
     ``n_blocks`` is the block-id (salt) domain, not the partition
     width. The edges are laid out by ``colocate_edges_sized`` and the
@@ -601,7 +507,7 @@ def pagerank_blocks(
     the joins and the dst reduce also run only ``n_blocks`` wide, so
     size ``n_blocks`` with the cluster. That case is unmeasured; on a
     local session ``m`` ≤ the core count ≤ ``n_blocks``."""
-    from .adjacency import build_adjacency_blocks, spmv_arrow as spmv
+    from .adjacency import build_adjacency_blocks, spmv_arrow
 
     edges, m = colocate_edges_sized(edges.select("src", "dst"))
     with sized_plan(edges.sparkSession, min(m, n_blocks)):
@@ -610,40 +516,17 @@ def pagerank_blocks(
         base = _vertex_base(edges).persist()
         n = base.count()
         edges.unpersist()  # blocks, routes and base are materialized
-        teleport = (1.0 - damping) / n
-        state0 = base.withColumn("value", F.lit(1.0 / n))
 
-        def step(state: DataFrame, _i: int) -> DataFrame:
-            contribs = spmv(
-                adj,
-                state.where(F.col("out_deg").isNotNull()).select(
-                    "id", (F.col("value") / F.col("out_deg")).alias("c")
-                ),
-            )
-            # shuffle_hash like the join kernel's step: unhinted this was
-            # a SortMergeJoin re-sorting base AND the contribs every
-            # superstep
-            return base.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id",
-                "out_deg",
-                (F.lit(teleport)
-                 + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias(
-                    "value"
-                ),
-            )
+        def contribs(state: DataFrame) -> DataFrame:
+            return spmv_arrow(adj, state.where(F.col("out_deg").isNotNull())
+                              .select("id", (F.col("value") / F.col("out_deg"))
+                                      .alias("c")))
 
-        res = iterate(
-            state0,
-            step,
-            residual_fn=(None if tol is None else l1_residual),
-            max_iter=max_iter,
-            tol=tol or 0.0,
-            checkpoint_every=checkpoint_every,
-            checkpoint_dir=checkpoint_dir,
-            fixed_plan_loop=True,
-        )
-    res.state = res.state.select("id", "value")
-    return res
+        return _propagate(
+            base, base.withColumn("value", F.lit(1.0 / n)), contribs,
+            {"value": _damped(F.lit((1.0 - damping) / n), damping)},
+            max_iter=max_iter, tol=tol,
+            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir)
 
 
 def pagerank_weighted(
@@ -668,53 +551,14 @@ def pagerank_weighted(
         edges_w.select("src", "dst", F.col(weight).cast("double").alias("w"))
     )
     with sized_plan(edges.sparkSession, m):
-        marked = edges.select(
-            F.col("src").alias("id"), F.col("w").alias("ow")
-        ).unionAll(
-            edges.select(F.col("dst").alias("id"), F.lit(0.0).alias("ow"))
-        )
-        base = (
-            marked.groupBy("id").agg(F.sum("ow").alias("_ow"))
-            .select("id", F.when(F.col("_ow") > 0, F.col("_ow")).alias("out_w"))
-            .persist()
-        )
+        # the w column makes out_deg W_out(u) and weights every message
+        base = _vertex_base(edges).persist()
         n = base.count()
-        teleport = (1.0 - damping) / n
-        state0 = base.withColumn("value", F.lit(1.0 / n))
-
-        def step(state: DataFrame, _i: int) -> DataFrame:
-            contribs = (
-                edges.join(
-                    state.where(F.col("out_w").isNotNull())
-                    .select(
-                        F.col("id").alias("src"),
-                        (F.col("value") / F.col("out_w")).alias("c"),
-                    )
-                    .hint("shuffle_hash"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum(F.col("c") * F.col("w")).alias("mass"))
-            )
-            return base.join(contribs.hint("shuffle_hash"), "id", "left").select(
-                "id",
-                "out_w",
-                (F.lit(teleport)
-                 + F.lit(damping) * F.coalesce("mass", F.lit(0.0))).alias("value"),
-            )
-
-        res = iterate(
-            state0,
-            step,
-            residual_fn=(None if tol is None else l1_residual),
-            max_iter=max_iter,
-            tol=tol or 0.0,
-            checkpoint_every=checkpoint_every,
-            checkpoint_dir=checkpoint_dir,
-            fixed_plan_loop=True,
-        )
-    res.state = res.state.select("id", "value")
-    return res
+        return _propagate(
+            base, base.withColumn("value", F.lit(1.0 / n)), _rank_contribs(edges),
+            {"value": _damped(F.lit((1.0 - damping) / n), damping)},
+            max_iter=max_iter, tol=tol,
+            checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir)
 
 
 def residual_curve(edges: DataFrame, iters: int = 5) -> DataFrame:

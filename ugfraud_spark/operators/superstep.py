@@ -60,7 +60,11 @@ def fixed_plan(spark: SparkSession, enabled: bool = True):
     k-core peeling, BFS) run FASTER with AQE's partition coalescing —
     measured sf0.1 regressions with AQE off: hits 6.7s → 12.2s, kcore
     1.6s → 5.1s, bfs_hops 3.2s → 4.0s — so those keep AQE on.
-    Restores the previous value even when the loop raises."""
+    Restores the previous value even when the loop raises.
+
+    Assumes a single-threaded driver: the scope sets SESSION-global
+    conf, so two queries running concurrently on one SparkSession
+    would plan under each other's settings."""
     if not enabled:
         yield
         return
@@ -97,7 +101,12 @@ def sized_plan(spark: SparkSession, shuffle_partitions: int,
     AQE — for the broadcast-frontier loops (HITS, k-core, BFS) where
     AQE coalescing wins but the layout/shuffle width should still track
     the measured data size (A/B at sf0.1, AQE on: hits 6.1-7.6 s at 32
-    partitions vs 4.1-5.1 s at 10)."""
+    partitions vs 4.1-5.1 s at 10).
+
+    Same single-threaded-driver assumption as ``fixed_plan``; and Spark
+    reads these confs when a plan EXECUTES, so only actions run inside
+    the scope are sized — a lazy frame returned from it runs at the
+    session width."""
     prev_n = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     try:

@@ -277,40 +277,3 @@ def svm_classify(train: DataFrame, test: DataFrame,
         test.crossJoin(F.broadcast(wdf))
         .select("id", (decision > 0).cast("int").alias("pred_label"))
     )
-
-
-def centroid_classify(train: DataFrame, test: DataFrame) -> DataFrame:
-    """Nearest-centroid on the embedding (sandbox stand-in for the
-    reference's SVC, sklearn absent). Returns (id, pred_label).
-
-    Fully distributed: centroids come from one posexplode + groupBy avg
-    (tiny result — n_labels × k), kept as a BROADCAST dim table the test
-    rows fan out against; the argmin is a map-side-combined
-    min(struct(dist, label)) — plan size O(1) in n_labels·k (no literal
-    expression chains), ties → smallest label. Nothing O(|V|) ever
-    reaches the driver."""
-    cent_df = (
-        train.select("label", F.posexplode("comps").alias("pos", "x"))
-        .groupBy("label", "pos")
-        .agg(F.avg("x").alias("c"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select("label", F.transform("pc", lambda s: s["c"]).alias("centroid"))
-    )
-    return (
-        test.crossJoin(F.broadcast(cent_df.withColumnRenamed("label", "_lb")))
-        .select(
-            "id",
-            F.struct(
-                F.aggregate(
-                    F.zip_with(F.col("comps"), F.col("centroid"),
-                               lambda x, c: (x - c) * (x - c)),
-                    F.lit(0.0),
-                    lambda acc, d: acc + d,
-                ).alias("d"),
-                F.col("_lb"),
-            ).alias("dl"),
-        )
-        .groupBy("id")
-        .agg(F.min("dl")["_lb"].cast("int").alias("pred_label"))
-    )

@@ -50,17 +50,7 @@ def triangles_per_vertex(edges_ab: DataFrame, oriented: bool = True) -> DataFram
     # closing-edge join then broadcasts (few MB); at web scale the same
     # plan falls back to shuffle joins on real stats
     und = und.persist()
-    n_edges = und.count()
-    from .superstep import LAYOUT_ROWS_PER_PARTITION, sized_plan
-
-    spark = und.sparkSession
-    n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    mparts = max(1, min(n_conf, -(-n_edges // LAYOUT_ROWS_PER_PARTITION)))
-    with sized_plan(spark, mparts, adaptive_off=False):
-        return _triangles_count(und)
-
-
-def _triangles_count(und: DataFrame) -> DataFrame:
+    und.count()
     e1 = und.alias("e1")
     e2 = und.alias("e2")
     e3 = und.alias("e3")
