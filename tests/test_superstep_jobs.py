@@ -1,6 +1,7 @@
-"""Superstep loop fixed costs: Spark jobs per superstep, the residual
-fused into the checkpoint job, per-step metrics, and the CSR-block
-cogroup's executed width.
+"""Superstep loop fixed costs: Spark jobs per superstep, residuals
+observed inside the checkpoint job (PageRank's l1, connected
+components' Σlbl, SpEagle's Σ|Δmsg|), per-step metrics, and the
+CSR-block cogroup's executed width.
 
 Results are pinned elsewhere (the pagerank-family, GANG and ZooBP
 oracle gates); these tests pin the mechanisms, so a refactor that
@@ -12,19 +13,18 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from ugfraud_spark.operators import adjacency, pagerank
+from ugfraud_spark.operators import adjacency, components, pagerank, speagle
 from ugfraud_spark.operators.superstep import (
     LAYOUT_ROWS_PER_PARTITION,
-    _checkpoint_l1,
     l1_residual,
 )
 
 
-def _loop_jobs(monkeypatch, spark, group: str) -> list[int]:
-    """Wrap ``pagerank.iterate`` so only the loop's jobs land in
+def _loop_jobs(monkeypatch, spark, group: str, module=pagerank) -> list[int]:
+    """Wrap ``module.iterate`` so only the loop's jobs land in
     ``group``; returns the (filled after the run) list of their ids."""
     sc = spark.sparkContext
-    real = pagerank.iterate
+    real = module.iterate
     jobs: list[int] = []
 
     def grouped(*args, **kwargs):
@@ -37,7 +37,7 @@ def _loop_jobs(monkeypatch, spark, group: str) -> list[int]:
         jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
         return res
 
-    monkeypatch.setattr(pagerank, "iterate", grouped)
+    monkeypatch.setattr(module, "iterate", grouped)
     return jobs
 
 
@@ -80,6 +80,22 @@ def test_converging_metrics_carry_residual_and_layout(spark):
                for m in res.metrics)
 
 
+def _join_l1(old, new) -> float:
+    """The two-action reference: Σ|new − old| over an inner join on id
+    of two materialized states."""
+    j = new.alias("n").join(old.alias("o"), on="id", how="inner")
+    row = j.select(
+        F.sum(F.abs(F.col("n.value") - F.col("o.value"))).alias("r")
+    ).collect()[0]
+    return float(row["r"] if row["r"] is not None else 0.0)
+
+
+def _observed(residual_fn, old, new):
+    frame, read = residual_fn(old, new)
+    out = frame.localCheckpoint(eager=True)
+    return out, read()
+
+
 def test_fused_l1_matches_join_residual(spark):
     # ids 0-4 only in old, 10-14 only in new: neither may contribute
     old = spark.createDataFrame(
@@ -87,16 +103,83 @@ def test_fused_l1_matches_join_residual(spark):
     new = spark.createDataFrame(
         [(i, 1.0 + i * i, i % 3) for i in range(5, 15)],
         "id long, value double, out_deg long")
-    out, r = _checkpoint_l1(old, new)
+    out, r = _observed(l1_residual, old, new)
     want = sum(abs((1.0 + i * i) - 0.5 * i) for i in range(5, 10))
     assert r == pytest.approx(want, rel=1e-15)
-    assert r == pytest.approx(l1_residual(old, new), rel=1e-15)
+    assert r == pytest.approx(_join_l1(old, new), rel=1e-15)
     assert out.columns == new.columns
     assert sorted(out.collect()) == sorted(new.collect())
 
     disjoint = spark.createDataFrame([(99, 1.0)], "id long, value double")
-    _, r0 = _checkpoint_l1(old, disjoint)
-    assert r0 == 0.0 == l1_residual(old, disjoint)
+    _, r0 = _observed(l1_residual, old, disjoint)
+    assert r0 == 0.0 == _join_l1(old, disjoint)
+
+
+def test_connected_components_one_job_per_superstep(spark, monkeypatch):
+    # a 40-vertex path needs more doubling rounds than one superstep runs
+    edges = spark.range(39).select(F.col("id").alias("a"),
+                                   (F.col("id") + 1).alias("b"))
+    jobs = _loop_jobs(monkeypatch, spark, "test-cc-loop", components)
+    info: dict = {}
+    cc = components.connected_components(edges, info=info)
+    assert info["converged"]
+    steps = info["iterations"] // components.ROUNDS_PER_STEP
+    assert steps >= 2
+    assert len(jobs) == steps, jobs
+    assert {r["component"] for r in cc.collect()} == {0}
+
+
+def _speagle_inputs(spark):
+    e = spark.range(600).select(
+        (F.col("id") % 41).alias("src"),
+        (1000 + (F.col("id") * 7) % 29).alias("dst"),
+    ).distinct()
+
+    def prior(key, mod):
+        return ((key % mod + 1) / (mod + 2.0)).alias("prior")
+
+    up = e.select(F.col("src").alias("id")).distinct()
+    pp = e.select(F.col("dst").alias("id")).distinct()
+    return (e, up.select("id", prior(F.col("id"), 7)),
+            pp.select("id", prior(F.col("id"), 5)),
+            e.select("src", "dst", prior(F.col("src") + F.col("dst"), 3)))
+
+
+def test_converging_speagle_runs_fixed_mode_jobs(spark, monkeypatch):
+    inputs = _speagle_inputs(spark)
+    fixed_jobs = _loop_jobs(monkeypatch, spark, "test-speagle-fixed", speagle)
+    fixed, *_ = speagle.speagle(*inputs, max_iter=3)
+    monkeypatch.undo()
+    conv_jobs = _loop_jobs(monkeypatch, spark, "test-speagle-conv", speagle)
+    conv, *_ = speagle.speagle(*inputs, max_iter=3, tol=0.0)
+    assert fixed.iterations == conv.iterations == 3
+    assert len(conv.residuals) == 3 and all(r > 0 for r in conv.residuals)
+    assert len(conv_jobs) == len(fixed_jobs), (conv_jobs, fixed_jobs)
+    assert sorted(conv.state.collect()) == sorted(fixed.state.collect())
+
+
+def test_observed_speagle_residual_matches_join(spark, monkeypatch):
+    """The observed Σ|Δmsg| equals the (src, dst) join of the two
+    checkpointed states it replaced."""
+    msgs = ["ur0", "ur1", "ru0", "ru1", "rp0", "rp1", "pr0", "pr1"]
+    states = []
+    real = speagle.iterate
+
+    def capture(state0, step, residual_fn, **kw):
+        def rf(old, new):
+            states.append(old)
+            return residual_fn(old, new)
+        return real(state0, step, rf, **kw)
+
+    monkeypatch.setattr(speagle, "iterate", capture)
+    res, *_ = speagle.speagle(*_speagle_inputs(spark), max_iter=4, tol=0.0)
+    states.append(res.state)
+    assert len(states) == len(res.residuals) + 1 == 5
+    delta = sum(F.abs(F.col(f"n.{c}") - F.col(f"o.{c}")) for c in msgs)
+    for r, old, new in zip(res.residuals, states, states[1:]):
+        want = (new.alias("n").join(old.alias("o"), ["src", "dst"])
+                .select(F.sum(delta)).collect()[0][0])
+        assert r == pytest.approx(want, rel=1e-12, abs=0.0)
 
 
 @pytest.mark.parametrize("n_blocks,width", [(8, 3), (2, 2)])

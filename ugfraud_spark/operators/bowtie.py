@@ -18,10 +18,10 @@ to EXACT full labels with a distributed certificate whenever the
 off-pivot remainder trims acyclic (the regime real web graphs are
 in), flagging any residue honestly instead of recursing.
 
-Fixed ``iters`` rounds on both sweeps (oracle-parity mode, the
-cc_minprop pattern): regions are exact once iters ≥ the directed
-graph's effective reach depth from/to the pivot; the DuckDB oracle
-unrolls the identical recurrence either way. Each sweep is the
+Fixed ``iters`` rounds on both sweeps (oracle-parity mode): regions
+are exact once iters ≥ the directed graph's effective reach depth
+from/to the pivot; the DuckDB oracle unrolls the identical recurrence
+either way. Each sweep is the
 frontier-delta BFS kernel (one state-side shuffle per round over the
 colocated edge cache); the classification is two vertex-keyed left
 joins.

@@ -1,21 +1,19 @@
 """Connected components.
 
-Two modes:
-
-- ``cc_minprop(..., iters=k)``: k rounds of synchronous min-label
-  propagation — the fixed-iteration kernel mirrored by the SQL oracle.
-- ``connected_components(...)``: run to convergence (no label changed),
-  returning exact components (reference parity bar: exact match; cross
-  checked against a pure-python union-find oracle in tests). Each round
-  combines neighbor min-propagation with a POINTER-DOUBLING shortcut
-  (``lbl ← min(lbl, lbl[lbl])`` — one state-on-state join): the shortcut
-  doubles the distance a label travels per round, so rounds grow as
-  O(log d) in the graph diameter instead of the O(d) of plain min-prop.
-  This is the pointer-jumping half of the classic Shiloach–Vishkin /
-  "hash-to-min" family; it reaches the same exact fixpoint (labels are
-  monotone non-increasing, bounded below by the component minimum, and
-  the neighbor-min fixpoint condition forces a constant label per
-  component).
+``connected_components(...)`` runs to convergence (no label changed),
+returning exact components (reference parity bar: exact match; cross
+checked against a pure-python union-find oracle in tests, and against
+the SQL oracle's unrolled min-label propagation,
+``oracle.sql_cc_minprop``). Each round combines neighbor
+min-propagation with a POINTER-DOUBLING shortcut (``lbl ← min(lbl,
+lbl[lbl])`` — one state-on-state join): the shortcut doubles the
+distance a label travels per round, so rounds grow as O(log d) in the
+graph diameter instead of the O(d) of plain min-prop. This is the
+pointer-jumping half of the classic Shiloach–Vishkin / "hash-to-min"
+family; it reaches the same exact fixpoint (labels are monotone
+non-increasing, bounded below by the component minimum, and the
+neighbor-min fixpoint condition forces a constant label per
+component).
 
 Scale: each round is one edge⋈state join + groupBy-min plus one
 |V|⋈|V| shortcut join (three shuffles, all on id/lbl); rounds ~
@@ -26,7 +24,7 @@ superstep driver.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .superstep import colocate_edges_sized, iterate, sized_plan
@@ -36,56 +34,6 @@ def _sym(edges_ab: DataFrame) -> DataFrame:
     return edges_ab.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
         edges_ab.select(F.col("b").alias("src"), F.col("a").alias("dst"))
     )
-
-
-def cc_minprop(edges_ab: DataFrame, iters: int = 30) -> DataFrame:
-    """edges(a, b) canonical undirected → (id, component) after at most
-    ``iters`` synchronous min-propagation rounds, stopping early at the
-    fixpoint. Min-prop labels only ever DECREASE (lbl ← least(lbl, …)),
-    so an unchanged Σlbl — one exact-integer scalar agg per round, no
-    old⋈new join — proves no label moved and every further round is a
-    no-op: the early exit is output-identical to running out the fixed
-    count the SQL oracle unrolls (sf0.1 measured: fixpoint at round 6
-    of 10).
-
-    Self-loops are unioned into the colocated edge set once (|V| rows
-    next to 2|E|), which folds the ``least(own, neighbor-min)`` update
-    into the message reduce itself — min over (neighbors ∪ self) — so a
-    round is ONE gather join + groupBy-min, with no per-round |V| state
-    join."""
-    sym_raw = _sym(edges_ab)
-    verts_raw = sym_raw.select(F.col("src").alias("id")).distinct()
-    sym, m = colocate_edges_sized(
-        sym_raw.unionAll(verts_raw.select(F.col("id").alias("src"),
-                                          F.col("id").alias("dst")))
-    )
-    with sized_plan(sym.sparkSession, m):
-        state0 = sym.select(F.col("src").alias("id")).distinct().withColumn(
-            "lbl", F.col("id"))
-
-        def step(state: DataFrame, _i: int) -> DataFrame:
-            return (
-                sym.join(
-                    state.select(F.col("id").alias("src"), "lbl").hint("shuffle_hash"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.min("lbl").alias("lbl"))
-            )
-
-        prev_sum = [None]
-
-        def residual(_old: DataFrame, new: DataFrame) -> float:
-            cur = new.agg(F.sum("lbl")).collect()[0][0] or 0
-            r = float("inf") if prev_sum[0] is None else float(prev_sum[0] - cur)
-            prev_sum[0] = cur
-            return r
-
-        # checkpoint_every=1: constant-depth plans — measured 2.6x faster than
-        # every-4 chaining at sf0.1 (Catalyst re-analysis of deep trees dominates)
-        res = iterate(state0, step, residual, max_iter=iters, tol=0.5,
-                      checkpoint_every=1, fixed_plan_loop=True)
-    return res.state.select("id", F.col("lbl").alias("component"))
 
 
 def pairs_to_clusters(pairs: DataFrame, a_col: str, b_col: str,
@@ -141,18 +89,18 @@ def connected_components(edges_ab: DataFrame, max_iter: int = 100,
     Plan economics (why each piece looks the way it does):
     - self-loops are unioned into the colocated edge set once, folding
       ``least(own, neighbor-min)`` into the gather's groupBy-min — the
-      per-round |V| state join of the naive formulation disappears
-      (same trick as ``cc_minprop``);
+      per-round |V| state join of the naive formulation disappears;
     - the shortcut looks up the PREVIOUS round's (already materialized)
       state instead of self-joining the fresh gather output: the gather
       plan is computed once per round, the parent side arrives already
       hash-partitioned on the join key (state is partitioned by id,
       renamed to lbl), and the recurrence d_k = 2·d_{k-1}+1 still
       doubles per round;
-    - convergence is the same monotone Σlbl trick as ``cc_minprop``
-      (every update is a ``least``, so labels only decrease and an
-      unchanged exact-integer sum proves the fixpoint) — one scalar
-      agg per round, no old⋈new join."""
+    - convergence is a monotone Σlbl test (every update is a ``least``,
+      so labels only decrease and an unchanged exact-integer sum proves
+      the fixpoint): each round's Σlbl is observed inside the one
+      checkpoint job of its superstep — no old⋈new join and no extra
+      Spark job."""
     sym_raw = _sym(edges_ab)
     verts_raw = sym_raw.select(F.col("src").alias("id")).distinct()
     sym, m = colocate_edges_sized(
@@ -186,46 +134,51 @@ def _cc_doubling_loop(sym: DataFrame, m: int, max_iter: int,
             .select("id", F.least("lbl", F.coalesce("lbl2", "lbl")).alias("lbl"))
         )
 
-    # ROUNDS_PER_STEP unrolled rounds share ONE job / residual action /
-    # checkpoint: at gate scale the per-round wall is dominated by fixed
-    # driver costs (job scheduling + eager checkpoint + the scalar agg),
-    # not data — unrolling amortizes them 3-to-1 while the monotone-sum
-    # convergence proof survives unchanged (sum flat across a 3-round
-    # step ⟺ flat across each of its rounds). Intermediates get a LAZY
-    # persist: each round's output feeds BOTH the next gather (exchange
-    # on src) and the next shortcut (exchange on lbl), and without the
-    # persist Catalyst plans the subtree twice per consumer — 2^k plan
-    # blowup across the unroll. Unpersisted as soon as the step's action
-    # has run (in the residual callback).
-    pending: list[DataFrame] = []
+    # ROUNDS_PER_STEP unrolled rounds share ONE job / checkpoint: at
+    # gate scale the per-round wall is dominated by fixed driver costs
+    # (job scheduling + eager checkpoint), not data — unrolling
+    # amortizes them 3-to-1 while the monotone-sum convergence proof
+    # survives unchanged (sum flat across a 3-round step ⟺ flat across
+    # each of its rounds). Intermediates get a LAZY persist: each
+    # round's output feeds BOTH the next gather (exchange on src) and
+    # the next shortcut (exchange on lbl), and without the persist
+    # Catalyst plans the subtree twice per consumer — 2^k plan blowup
+    # across the unroll. Every round's Σlbl is observed on its output
+    # (under the persist for the intermediates), so the checkpoint job
+    # of the final round reports all of them.
+    observations: list[Observation] = []
+    cached: list[DataFrame] = []
+
+    def observed(df: DataFrame) -> DataFrame:
+        observations.append(Observation())
+        return df.observe(observations[-1], F.sum("lbl").alias("s"))
 
     def step(state: DataFrame, _i: int) -> DataFrame:
         cur = state
-        for k in range(ROUNDS_PER_STEP):
-            cur = one_round(cur)
-            if k < ROUNDS_PER_STEP - 1:
-                cur = cur.persist()
-                pending.append(cur)
-        return cur
+        for _ in range(ROUNDS_PER_STEP - 1):
+            cur = observed(one_round(cur)).persist()
+            cached.append(cur)
+        return one_round(cur)
 
     prev_sum = [None]
 
-    def residual(_old: DataFrame, new: DataFrame) -> float:
-        # the step's action has materialized every intermediate round
-        # (they're persisted and feed the final frame), so their Σlbl
-        # aggs here read from cache — and a flat sum between ANY two
-        # adjacent rounds inside the step proves the fixpoint (labels
-        # are monotone), letting convergence be detected mid-step
-        # instead of costing a whole extra no-op step.
-        sums = [df.agg(F.sum("lbl")).collect()[0][0] or 0 for df in pending]
-        sums.append(new.agg(F.sum("lbl")).collect()[0][0] or 0)
-        for df in pending:
+    def read() -> float:
+        # a flat sum between ANY two adjacent rounds inside the step
+        # proves the fixpoint (labels are monotone), letting convergence
+        # be detected mid-step instead of costing a whole extra no-op
+        # step
+        sums = [obs.get["s"] or 0 for obs in observations]
+        for df in cached:
             df.unpersist()
-        pending.clear()
+        observations.clear()
+        cached.clear()
         chain = ([] if prev_sum[0] is None else [prev_sum[0]]) + sums
         converged_inside = any(a == b for a, b in zip(chain, chain[1:]))
         prev_sum[0] = sums[-1]
         return 0.0 if converged_inside else float("inf")
+
+    def residual(_old: DataFrame, new: DataFrame):
+        return observed(new), read
 
     with sized_plan(sym.sparkSession, m):
         res = iterate(state0, step, residual,

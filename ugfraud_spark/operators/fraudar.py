@@ -413,7 +413,7 @@ def bulk_peel(edges: DataFrame, eps: float = 0.1,
     the ONE deduped frame instead of re-running the derivation+distinct
     a second time inside ``fraudar_col_weights`` (same 1/log(deg+5)
     values, one fewer full |E| shuffle + scan)."""
-    from .superstep import LAYOUT_ROWS_PER_PARTITION, sized_plan
+    from .superstep import layout_width, sized_plan
 
     d = (edges.select("src", "dst") if pre_deduped
          else edges.select("src", "dst").distinct()
@@ -425,10 +425,8 @@ def bulk_peel(edges: DataFrame, eps: float = 0.1,
     # sf0.1: fraudar_scores 6.1-9.3 s at the 32-partition session
     # default vs 5.4-6.1 s sized; conf-saturating sizes unchanged.
     spark = edges.sparkSession
-    n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    mparts = max(1, min(n_conf,
-                        -(-d.count() // LAYOUT_ROWS_PER_PARTITION)))
-    with sized_plan(spark, mparts, adaptive_off=False):
+    with sized_plan(spark, layout_width(spark, d.count()),
+                    adaptive_off=False):
         return _bulk_peel_loop(spark, d, eps, max_rounds, bcast_ids,
                                finish_max_edges)
 

@@ -32,12 +32,11 @@ from __future__ import annotations
 
 import math
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..functions.numeric import clamp_prior, lse2
-from .superstep import (LAYOUT_ROWS_PER_PARTITION,
-                        SuperstepResult, iterate, sized_plan)
+from .superstep import SuperstepResult, iterate, layout_width, sized_plan
 
 
 def _log_h(eps: float) -> tuple[float, float]:
@@ -116,9 +115,12 @@ def speagle(
     # the checkpoint just materialized — no extra pass); AQE stays on
     # (see the iterate call below)
     spark = edges.sparkSession
-    n_conf = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    mparts = max(1, min(n_conf,
-                        -(-state0.count() // LAYOUT_ROWS_PER_PARTITION)))
+    mparts = layout_width(spark, state0.count())
+    # converging mode carries the old messages through the step as
+    # ``_<msg>`` columns; the residual observes Σ|new − old| on them and
+    # projects them away (no |E|⋈|E| join of two checkpoints)
+    old_msgs = ([F.col(c).alias(f"_{c}") for c in msg_cols]
+                if tol is not None else [])
 
     def step(state: DataFrame, _i: int) -> DataFrame:
         # user beliefs: lp_u + Σ_p m_ru   (groupBy src)
@@ -154,18 +156,15 @@ def speagle(
             n_ru0.alias("ru0"), n_ru1.alias("ru1"),
             n_rp0.alias("rp0"), n_rp1.alias("rp1"),
             n_pr0.alias("pr0"), n_pr1.alias("pr1"),
+            *old_msgs,
         )
 
-    def residual(old: DataFrame, new: DataFrame) -> float:
-        expr = None
-        for c in msg_cols:
-            d = F.abs(F.col(f"n.{c}") - F.col(f"o.{c}"))
-            expr = d if expr is None else expr + d
-        r = (
-            new.alias("n").join(old.alias("o"), ["src", "dst"])
-            .select(F.sum(expr).alias("r")).collect()[0]["r"]
-        )
-        return float(r or 0.0)
+    def residual(_old: DataFrame, new: DataFrame):
+        obs = Observation()
+        delta = sum(F.abs(F.col(c) - F.col(f"_{c}")) for c in msg_cols)
+        frame = (new.observe(obs, F.sum(delta).alias("r"))
+                 .select("src", "dst", *static_cols, *msg_cols))
+        return frame, lambda: float(obs.get["r"] or 0.0)
 
     with sized_plan(spark, mparts, adaptive_off=False):
         # AQE stays ON here (unlike the |V|-message kernels): the state

@@ -9,13 +9,14 @@ the reference's convergence checks (Δ<0.1 GANG, ≤1e-8 ZooBP, tol BP).
 
 Scale concerns handled here rather than in each algorithm:
 
-- **One job per converging superstep**: with the stock ``l1_residual``
-  the residual is not a second action over two checkpoints (a join that
-  re-exchanges both, since checkpoints report UnknownPartitioning). It
-  is observed (``DataFrame.observe``) as a null-skipping
-  Σ|value − old| over a left join of the old value onto the step
-  output, inside the ``localCheckpoint`` job that materializes the step
-  anyway. Custom residual callables keep the two-job path.
+- **One job per converging superstep**: a residual is never a second
+  action over two checkpoints (a join that re-exchanges both, since
+  checkpoints report UnknownPartitioning). ``residual_fn(old, new)``
+  returns the frame to checkpoint with its convergence sum planted
+  in it (``DataFrame.observe``) plus a reader; the reader runs after
+  the ``localCheckpoint`` job that materializes the step anyway.
+  ``l1_residual`` observes a null-skipping Σ|value − old| over a left
+  join of the old value onto the step output.
 - **Lineage truncation**: an iterative DataFrame plan grows per
   superstep; without truncation Catalyst re-analyzes an ever-deeper tree
   and recovery replays every iteration. We ``localCheckpoint(eager)``
@@ -140,22 +141,28 @@ def colocate_edges(edges: DataFrame, key: str = "src") -> DataFrame:
     return out
 
 
+def layout_width(spark: SparkSession, rows: int) -> int:
+    """Shuffle width for ``rows`` measured rows: ``clamp(ceil(rows /
+    LAYOUT_ROWS_PER_PARTITION), 1, spark.sql.shuffle.partitions)``."""
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return max(1, min(n, -(-rows // LAYOUT_ROWS_PER_PARTITION)))
+
+
 def colocate_edges_sized(edges: DataFrame,
                          key: str = "src") -> tuple[DataFrame, int]:
     """``colocate_edges`` that additionally derives the layout's
     partition count from the MEASURED row count (the count it takes
-    anyway): ``m = clamp(ceil(rows / LAYOUT_ROWS_PER_PARTITION), 1,
-    conf)``. When m < conf the materialized frame is re-laid-out from
-    cache (one cheap cache-read shuffle, ~0.1 s at bench scale) so the
-    caller can run its whole kernel under ``sized_plan(spark, m)`` with
-    every shuffle at m partitions. Returns ``(edges, m)``. At conf-
-    saturating sizes (the bench probe's 64M edges, any real-cluster
-    run) m == conf and this is exactly ``colocate_edges``."""
+    anyway): ``m = layout_width(spark, rows)``. When m < conf the
+    materialized frame is re-laid-out from cache (one cheap cache-read
+    shuffle, ~0.1 s at bench scale) so the caller can run its whole
+    kernel under ``sized_plan(spark, m)`` with every shuffle at m
+    partitions. Returns ``(edges, m)``. At conf-saturating sizes (the
+    bench probe's 64M edges, any real-cluster run) m == conf and this
+    is exactly ``colocate_edges``."""
     spark = edges.sparkSession
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     out = edges.repartition(n, key).persist()
-    rows = out.count()
-    m = max(1, min(n, -(-rows // LAYOUT_ROWS_PER_PARTITION)))
+    m = layout_width(spark, out.count())
     if m == n:
         return out, n
     resized = out.repartition(m, key).persist()
@@ -220,10 +227,14 @@ def latest_checkpoint(spark: SparkSession, checkpoint_dir: str):
     return catalog.read_state(spark, last["path"]), last["superstep"]
 
 
+Residual = Callable[[DataFrame, DataFrame],
+                    tuple[DataFrame, Callable[[], float]]]
+
+
 def iterate(
     state: DataFrame,
     step_fn: Callable[[DataFrame, int], DataFrame],
-    residual_fn: Callable[[DataFrame, DataFrame], float] | None = None,
+    residual_fn: Residual | None = None,
     *,
     max_iter: int,
     tol: float = 0.0,
@@ -232,17 +243,18 @@ def iterate(
     start_iteration: int = 0,
     fixed_plan_loop: bool = False,
 ) -> SuperstepResult:
-    """Run ``state ← step_fn(state, i)`` until ``residual_fn`` < tol or
-    ``max_iter``. ``residual_fn(old, new) → float`` is the convergence
-    scalar (reference A4 convergence sums); pass ``None`` to run a fixed
-    iteration count with a single materialization per checkpoint
-    interval (cheaper: no per-step action).
+    """Run ``state ← step_fn(state, i)`` until the residual < tol or
+    ``max_iter``. The residual is the convergence scalar (reference A4
+    convergence sums); pass ``None`` to run a fixed iteration count
+    with a single materialization per checkpoint interval.
 
-    Converging mode materializes every superstep. With ``l1_residual``
-    (the PageRank family, GANG, ZooBP) that is ONE Spark job per
-    superstep: the residual is observed inside the checkpoint job
-    (``_checkpoint_l1``). Any other callable (components, SpEagle) runs
-    as a second action over the two checkpoints.
+    ``residual_fn(old, new) → (frame, read)`` returns the next state
+    ``frame`` (``new``'s rows, with the residual's observation planted
+    in its plan by ``DataFrame.observe``); ``iterate`` checkpoints
+    ``frame`` and then calls ``read()`` for the scalar. Converging mode therefore runs ONE
+    Spark job per superstep. Every observation must sit inside
+    ``frame``: ``Observation.get`` waits forever for a node that never
+    executes.
 
     ``metrics`` gets one record per superstep in both modes:
     ``superstep``, ``wall_s`` (seconds since the loop started),
@@ -260,6 +272,7 @@ def iterate(
     residuals: list[float] = []
     metrics: list[dict] = []
     converged = False
+    converging = residual_fn is not None
     spark = state.sparkSession
     if checkpoint_dir:
         os.makedirs(checkpoint_dir, exist_ok=True)
@@ -270,28 +283,25 @@ def iterate(
             new_state = step_fn(state, i)
             i += 1
             need_truncate = (i % checkpoint_every == 0) or i == max_iter
-            materialize = residual_fn is not None or need_truncate
             rec: dict = {"superstep": i}
             r = float("nan")
-            if residual_fn is l1_residual:
-                new_state, r = _checkpoint_l1(state, new_state)
-            elif materialize:
+            if converging:
+                new_state, read = residual_fn(state, new_state)
+            if converging or need_truncate:
                 new_state = new_state.localCheckpoint(eager=True)
-                if residual_fn is not None:
-                    r = residual_fn(state, new_state)
-            if residual_fn is not None:
-                residuals.append(r)
-                rec["residual"] = r
-            if materialize:
                 rec["num_partitions"] = new_state.rdd.getNumPartitions()
                 rec["aqe"] = (
                     spark.conf.get("spark.sql.adaptive.enabled") == "true")
+            if converging:
+                r = read()
+                residuals.append(r)
+                rec["residual"] = r
             rec["wall_s"] = round(time.time() - t0, 3)
             metrics.append(rec)
             if checkpoint_dir and need_truncate:
                 _write_checkpoint(new_state, checkpoint_dir, i, r, t0)
             state = new_state
-            if residual_fn is not None and r < tol:
+            if converging and r < tol:
                 converged = True
                 break
 
@@ -305,37 +315,22 @@ def iterate(
     )
 
 
-def l1_residual(old: DataFrame, new: DataFrame, key: str = "id",
-                value: str = "value") -> float:
-    """Σ|new−old| over the state vector (reference A4: ``GANG.py:127-136``,
-    ``ZooBP.py:141-145``, ``SpEagle.py:218``). ``iterate`` recognises
-    this function and computes the same sum inside the checkpoint job
-    (``_checkpoint_l1``); this body is the reference it is tested
-    against."""
-    j = new.alias("n").join(old.alias("o"), on=key, how="inner")
-    row = j.select(
-        F.sum(F.abs(F.col(f"n.{value}") - F.col(f"o.{value}"))).alias("r")
-    ).collect()[0]
-    return float(row["r"] if row["r"] is not None else 0.0)
-
-
-def _checkpoint_l1(old: DataFrame,
-                   new: DataFrame) -> tuple[DataFrame, float]:
-    """``new.localCheckpoint(eager=True)`` and ``l1_residual(old, new)``
-    in ONE Spark job: the old value is left-joined onto ``new`` (old side
-    hinted shuffle_hash — it is the |V|-sized checkpoint, ``new`` keeps
-    its id partitioning), Σ|value − old| is observed on the joined rows
-    and the projection back to ``new``'s columns is checkpointed. The
-    sum skips the nulls of ids that exist only in ``new``, and ids only
-    in ``old`` never reach it, so it covers exactly the pairs of
-    ``l1_residual``'s inner join."""
+def l1_residual(old: DataFrame,
+                new: DataFrame) -> tuple[DataFrame, Callable[[], float]]:
+    """Σ|new−old| over the ``value`` column keyed by ``id`` (reference
+    A4: ``GANG.py:127-136``, ``ZooBP.py:141-145``, ``SpEagle.py:218``),
+    as an ``iterate`` residual: the old value is left-joined onto
+    ``new`` (old side hinted shuffle_hash — it is the |V|-sized
+    checkpoint, ``new`` keeps its id partitioning), the sum is observed
+    on the joined rows and the frame projects back to ``new``'s
+    columns. The sum skips the nulls of ids that exist only in ``new``,
+    and ids only in ``old`` never reach it, so it covers exactly the
+    pairs of an inner join on ``id``."""
     obs = Observation()
     prev = old.select("id", F.col("value").alias("_old")).hint("shuffle_hash")
-    out = (
+    frame = (
         new.join(prev, "id", "left")
         .observe(obs, F.sum(F.abs(F.col("value") - F.col("_old"))).alias("r"))
         .select(*new.columns)
-        .localCheckpoint(eager=True)
     )
-    r = obs.get["r"]
-    return out, float(r if r is not None else 0.0)
+    return frame, lambda: float(obs.get["r"] or 0.0)

@@ -145,8 +145,8 @@ def ktruss_edges(edges_ab: DataFrame, k: int = 4,
     triangles among the REMAINING edges, repeat. Peeling is monotone
     (support only falls as edges leave), so stopping early at a round
     that removes nothing is output-identical to running out the fixed
-    count the SQL oracle unrolls — the same early-exit argument as
-    cc_minprop. Each round is the oriented triangle enumeration plus
+    count the SQL oracle unrolls (a monotone fixpoint: once a round
+    changes nothing, every later round is a no-op). Each round is the oriented triangle enumeration plus
     one groupBy on the edge key and one anti-ish left join; rounds
     needed ≈ peel depth (small on web graphs, like k-core's)."""
     cur = edges_ab.select("a", "b")
