@@ -158,6 +158,32 @@ def test_converging_speagle_runs_fixed_mode_jobs(spark, monkeypatch):
     assert sorted(conv.state.collect()) == sorted(fixed.state.collect())
 
 
+@pytest.mark.parametrize("max_iter", [0, 2])
+def test_speagle_runs_no_job_after_its_loop(spark, monkeypatch, max_iter):
+    """``iterate`` leaves its last state checkpointed (and ``state0`` is
+    checkpointed before the loop), so nothing after the loop runs a
+    Spark job: the returned state is the loop's own checkpoint."""
+    sc = spark.sparkContext
+    real = speagle.iterate
+    out: dict = {}
+
+    def then_group(*args, **kwargs):
+        out["loop"] = real(*args, **kwargs)
+        sc.setJobGroup("test-speagle-after", "test-speagle-after")
+        return out["loop"]
+
+    monkeypatch.setattr(speagle, "iterate", then_group)
+    try:
+        res, *beliefs = speagle.speagle(*_speagle_inputs(spark),
+                                        max_iter=max_iter)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert sc.statusTracker().getJobIdsForGroup("test-speagle-after") == []
+    assert res is out["loop"] and res.iterations == max_iter
+    assert all(b.count() > 0 for b in beliefs)
+
+
 def test_observed_speagle_residual_matches_join(spark, monkeypatch):
     """The observed Σ|Δmsg| equals the (src, dst) join of the two
     checkpointed states it replaced."""

@@ -364,21 +364,20 @@ def dedup_clusters(docs: DataFrame, threshold: float = 0.8,
 
 
 def simhash(docs: DataFrame) -> DataFrame:
-    """(doc_id, simhash): 16-char '0'/'1' signature string."""
-    tok = docs.select("doc_id", F.explode(F.split("text", " ")).alias("w"))
-    h = F.md5("w")
+    """(doc_id, simhash): 16-char '0'/'1' signature string. The 16 vote
+    sums and the bit string are SQL strings (``functions/text.py``
+    explains why)."""
+    tok = docs.selectExpr("doc_id", "explode(split(text, ' ')) AS w")
+    high = ", ".join(f"'{c}'" for c in _HIGH_NIBBLE)
     votes = [
-        F.sum(
-            F.when(F.substring(h, b + 1, 1).isin(*_HIGH_NIBBLE), 1).otherwise(-1)
-        ).alias(f"v{b}")
+        F.expr(f"sum(CASE WHEN substring(md5(w), {b + 1}, 1) IN ({high})"
+               f" THEN 1 ELSE -1 END) AS v{b}")
         for b in range(SIMHASH_BITS)
     ]
-    agg = tok.groupBy("doc_id").agg(*votes)
-    bits = [
-        F.when(F.col(f"v{b}") > 0, F.lit("1")).otherwise(F.lit("0"))
-        for b in range(SIMHASH_BITS)
-    ]
-    return agg.select("doc_id", F.concat(*bits).alias("simhash"))
+    bits = ", ".join(f"CASE WHEN v{b} > 0 THEN '1' ELSE '0' END"
+                     for b in range(SIMHASH_BITS))
+    return (tok.groupBy("doc_id").agg(*votes)
+            .selectExpr("doc_id", f"concat({bits}) AS simhash"))
 
 
 def ngram_jaccard_pairs(docs: DataFrame, threshold: float = 0.0,

@@ -82,9 +82,7 @@ def pack_sequences(docs: DataFrame, budget: int = PACK_BUDGET,
     (``floor(tok_offset / budget)``) and how many consecutive
     sequences it straddles. ``token_count`` is >= 1 for any string, so
     every doc occupies at least one sequence."""
-    toks = docs.select(
-        "doc_id", token_count(F.col("text")).alias("n_tokens")
-    )
+    toks = docs.selectExpr("doc_id", f"{token_count('text')} AS n_tokens")
     return _pack_by(toks, "doc_id", budget, bucket_docs)
 
 
@@ -101,8 +99,8 @@ def epoch_pack(docs: DataFrame, seed: int = 1,
     doc_id-keyed join between them."""
     from .shuffle import epoch_shuffle
 
-    toks = docs.select(
-        "doc_id", token_count(F.col("text")).alias("n_tokens")
+    toks = docs.selectExpr(
+        "doc_id", f"{token_count('text')} AS n_tokens"
     ).join(epoch_shuffle(docs, seed=seed), "doc_id")
     return _pack_by(toks, "shuffle_pos", budget, bucket_docs)
 

@@ -47,7 +47,7 @@ def quality_filter(docs: DataFrame) -> DataFrame:
     """(doc_id, n_tokens, n_failed, fail_rules, keep): the per-doc
     filter verdict with its audit trail — which rules failed, in rule
     order, comma-joined (empty string when the doc passes)."""
-    q = quality_exprs(F.col("text"))
+    q = {k: F.expr(v) for k, v in quality_exprs("text").items()}
     r = repetition_exprs(F.col("text"))
     rules = _rules(q, r)
     n_failed = None
@@ -121,7 +121,7 @@ def langid_agreement(docs: DataFrame) -> DataFrame:
     counts, ONE double division."""
     from ..functions.text import predicted_lang
 
-    agree = (predicted_lang(F.col("text")) == F.col("lang")).cast("bigint")
+    agree = (F.expr(predicted_lang("text")) == F.col("lang")).cast("bigint")
     return (
         docs.groupBy("lang")
         .agg(
@@ -152,7 +152,7 @@ def quality_score(docs: DataFrame) -> DataFrame:
     the §63 floor-quantization recipe (floor of identical doubles is
     engine-independent; decimal ROUND is not): micro-units via FLOOR,
     one division at read-out. Pure narrow map — zero shuffle."""
-    q = quality_exprs(F.col("text"))
+    q = {k: F.expr(v) for k, v in quality_exprs("text").items()}
     r = repetition_exprs(F.col("text"))
     raw = (
         F.lit(0.4) * q["stopword_ratio"]

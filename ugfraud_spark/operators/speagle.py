@@ -182,8 +182,9 @@ def speagle(
             checkpoint_every=1,
             checkpoint_dir=checkpoint_dir,
         )
-    state = res.state.localCheckpoint(eager=True)
-    res.state = state
+    # iterate checkpointed the last state (checkpoint_every=1), and
+    # state0 when max_iter=0: the beliefs below read it as it is
+    state = res.state
 
     def softmax1(b0, b1):
         z = lse2(b0, b1)

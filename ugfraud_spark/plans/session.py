@@ -74,6 +74,25 @@ def _scratch_dir() -> str | None:
     return None
 
 
+DRIVER_MEM_CAP_MB = 16 * 1024
+DRIVER_MEM_RAM_SHARE = 0.6
+
+
+def _driver_memory(ram_bytes: int | None = None) -> str:
+    """``spark.driver.memory``: ``SPARK_DRIVER_MEM`` when set, else 60%
+    of physical RAM (``ram_bytes``, default the host's MemTotal), capped
+    at 16g. A local-mode driver JVM also runs every executor task, so a
+    fixed 16g heap on a 16 GB host let the JVM grow until the kernel
+    killed it."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env is not None:
+        return env
+    if ram_bytes is None:
+        ram_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    mb = int(ram_bytes * DRIVER_MEM_RAM_SHARE) // 2**20
+    return f"{min(DRIVER_MEM_CAP_MB, mb)}m"
+
+
 def get_spark(
     app_name: str = "ugfraud_spark",
     master: str | None = None,
@@ -99,7 +118,7 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", _driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", str(128 * 1024 * 1024))
     )

@@ -1964,13 +1964,13 @@ def q_text_features(spark: SparkSession, sf_dir: str) -> DataFrame:
     free a registry slot for the sketch-path gate; all codegen column
     exprs)."""
     d = tables.load(spark, sf_dir, "documents")
-    ex = tx.quality_exprs(F.col("text"))
-    feats = d.select(
+    ex = tx.quality_exprs("text")
+    feats = d.selectExpr(
         "doc_id",
-        *[v.alias(k) for k, v in ex.items()],
+        *[f"{v} AS {k}" for k, v in ex.items()],
         "lang",
-        tx.predicted_lang(F.col("text")).alias("pred_lang"),
-        tx.fingerprint(F.col("text")).alias("fingerprint"),
+        f"{tx.predicted_lang('text')} AS pred_lang",
+        f"{tx.fingerprint('text')} AS fingerprint",
     )
     return feats.join(dedup.simhash(d), "doc_id")
 

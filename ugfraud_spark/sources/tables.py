@@ -30,8 +30,11 @@ At 100 TB these builders are replaced by the pages→links extraction in
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 PART_OFFSET = 1_000_000_000  # part-vertex id namespace offset
 UNI_MOD = 1000  # unipartite vertex-id modulus at sf0.001 (baseline)
@@ -59,9 +62,33 @@ TABLES = (
 ).split()
 
 
+# inferred parquet schemas, keyed by (path, st_mtime_ns, st_size)
+_SCHEMAS: dict[tuple[str, int, int], StructType] = {}
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Columnar parquet scan; Catalyst pushes filters/pruning into it."""
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Columnar parquet scan; Catalyst pushes filters/pruning into it.
+
+    Inferring a parquet schema runs a one-task Spark job (about 0.1 s,
+    against about 15 ms for a scan given its schema), and every query
+    loads its tables again. So each path's inferred ``StructType`` is
+    kept, keyed by ``(path, st_mtime_ns, st_size)`` from ``os.stat``,
+    and a later load of the same unchanged file passes it to
+    ``spark.read.schema``. A rewritten file has a new key and is
+    inferred again; a path ``os.stat`` cannot read (a remote URI) is
+    inferred on every load."""
+    path = f"{sf_dir}/{name}.parquet"
+    try:
+        st = os.stat(path)
+    except OSError:
+        return spark.read.parquet(path)
+    key = (path, st.st_mtime_ns, st.st_size)
+    schema = _SCHEMAS.get(key)
+    if schema is not None:
+        return spark.read.schema(schema).parquet(path)
+    df = spark.read.parquet(path)
+    _SCHEMAS[key] = df.schema
+    return df
 
 
 def _part_first(df: DataFrame, key: str) -> DataFrame:
