@@ -55,41 +55,24 @@ def main() -> None:
         start_state, start_step = latest_checkpoint(spark, args.checkpoint_dir)
 
     if start_state is not None:
-        # resume: re-enter the superstep loop from the durable state
+        # resume: re-enter pagerank's own superstep from the durable
+        # state, laid out and scoped exactly as a fresh run
         from pyspark.sql import functions as F
 
-        from ugfraud_spark.operators.superstep import colocate_edges, iterate
+        from ugfraud_spark.operators.superstep import (colocate_edges_sized,
+                                                       sized_plan)
 
-        e = colocate_edges(edges.select("src", "dst"))
-        n = start_state.count()
-        teleport = (1.0 - 0.85) / n
-
-        def step(state, _i):
-            contribs = (
-                e.join(
-                    state.where(F.col("out_deg").isNotNull())
-                    .select(F.col("id").alias("src"),
-                            (F.col("value") / F.col("out_deg")).alias("c"))
-                    .hint("shuffle_hash"),
-                    "src",
-                )
-                .groupBy(F.col("dst").alias("id"))
-                .agg(F.sum("c").alias("mass"))
-            )
-            return (
-                state.select("id", "out_deg").join(
-                    contribs.hint("shuffle_hash"), "id", "left"
-                ).select(
-                    "id", "out_deg",
-                    (F.lit(teleport)
-                     + F.lit(0.85) * F.coalesce("mass", F.lit(0.0))).alias("value"),
-                )
-            )
-
-        res = iterate(start_state, step, max_iter=args.iters,
-                      start_iteration=start_step,
-                      checkpoint_dir=args.checkpoint_dir)
-        state = res.state.select("id", "value")
+        e, m = colocate_edges_sized(edges.select("src", "dst"))
+        with sized_plan(spark, m):
+            base = pagerank._vertex_base(e).persist()
+            n = base.count()
+            res = pagerank._propagate(
+                base, start_state, pagerank._rank_contribs(e),
+                {"value": pagerank._damped(F.lit((1.0 - 0.85) / n), 0.85)},
+                max_iter=args.iters, tol=args.tol, checkpoint_every=1,
+                start_iteration=start_step,
+                checkpoint_dir=args.checkpoint_dir)
+        state = res.state
         iters_run = res.iterations - start_step
     else:
         res = pagerank.pagerank(

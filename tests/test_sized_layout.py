@@ -2,21 +2,24 @@
 
 These pin the NEW mechanisms (not results — every consumer query stays
 oracle-gated): the sketch-partition sizing rule, the measured-size
-colocate variant, and the conf restore discipline of the scoped plan
-contexts (a raise inside a loop must never leak AQE-off or a shrunken
-shuffle width into the rest of the session — the ADVICE-r3 failure
-mode)."""
+colocate variant, the conf restore discipline of ``sized_plan`` (a
+raise inside a loop must never leak AQE-off or a shrunken shuffle
+width into the rest of the session — the ADVICE-r3 failure mode), and
+that nothing a sized kernel returns runs outside its scope."""
 
 from __future__ import annotations
+
+from types import SimpleNamespace
 
 import pytest
 from pyspark.sql import functions as F
 
+from ugfraud_spark.operators import (bfs, components, fraudar, gang, hits,
+                                    labelprop, pagerank, zoobp)
 from ugfraud_spark.operators.linalg import sketch_partitions
 from ugfraud_spark.operators.superstep import (
     LAYOUT_ROWS_PER_PARTITION,
     colocate_edges_sized,
-    fixed_plan,
     sized_plan,
 )
 
@@ -74,12 +77,6 @@ def test_scoped_plan_contexts_restore_on_raise(spark):
     aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
     n0 = spark.conf.get("spark.sql.shuffle.partitions")
     with pytest.raises(RuntimeError):
-        with fixed_plan(spark):
-            assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
-            raise RuntimeError("boom")
-    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
-
-    with pytest.raises(RuntimeError):
         with sized_plan(spark, 3):
             assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
             assert spark.conf.get("spark.sql.adaptive.enabled") == "false"
@@ -92,3 +89,89 @@ def test_scoped_plan_contexts_restore_on_raise(spark):
         assert spark.conf.get("spark.sql.shuffle.partitions") == "3"
         assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
     assert spark.conf.get("spark.sql.shuffle.partitions") == n0
+
+
+@pytest.mark.parametrize("kernel", [hits.hits, hits.eigenvector_centrality])
+def test_kernel_raise_restores_conf(spark, kernel):
+    # the empty-edge ValueError is raised inside the kernel's sized_plan
+    aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
+    n0 = spark.conf.get("spark.sql.shuffle.partitions")
+    with pytest.raises(ValueError):
+        kernel(spark.createDataFrame([], "src long, dst long"))
+    assert spark.conf.get("spark.sql.shuffle.partitions") == n0
+    assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
+
+
+def _tiny_inputs(spark) -> SimpleNamespace:
+    """A 40-vertex 4-regular graph (so k-cores exist) as directed
+    ``e``, undirected ``ab`` and symmetric ``sym`` edges; a bipartite
+    signed review graph ``bip`` with ``priors``; one BFS seed."""
+    pairs = [(i, (i + d) % 40) for d in (1, 2) for i in range(40)]
+    e = spark.createDataFrame(pairs, "src long, dst long")
+    bip = spark.range(200).select(
+        (F.col("id") % 23).alias("src"), (100 + F.col("id") % 7).alias("dst"),
+        (1 + F.col("id") % 2).cast("int").alias("sign")).distinct()
+    return SimpleNamespace(
+        e=e,
+        ab=e.select(F.col("src").alias("a"), F.col("dst").alias("b")),
+        sym=e.unionAll(e.select(F.col("dst").alias("src"),
+                                F.col("src").alias("dst"))),
+        bip=bip,
+        priors=bip.select(F.col("src").alias("id")).unionAll(
+            bip.select(F.col("dst").alias("id"))).distinct().select(
+            "id", ((F.col("id") % 10) / 10.0).alias("prior")),
+        seeds=spark.createDataFrame([(0,)], "id long"),
+    )
+
+
+KERNELS = {
+    "pagerank": lambda t: pagerank.pagerank(t.e, max_iter=3).state,
+    "connected_components": lambda t: components.connected_components(t.ab),
+    "lpa": lambda t: labelprop.lpa(t.ab),
+    "label_spreading": lambda t: labelprop.label_spreading(t.ab),
+    "gang": lambda t: gang.gang(t.bip, t.priors).state,
+    "zoobp": lambda t: zoobp.zoobp(t.bip, t.priors).state,
+    "bfs_hops": lambda t: bfs.bfs_hops(t.sym, t.seeds),
+    "sssp_weighted": lambda t: bfs.sssp_weighted(
+        t.e.withColumn("w", F.col("src") % 3 + 1), t.seeds),
+    "hits": lambda t: hits.hits(t.e),
+    "eigenvector_centrality": lambda t: hits.eigenvector_centrality(t.e),
+    "kcore": lambda t: hits.kcore(t.sym, k=3),
+    "coreness": lambda t: hits.coreness(t.sym),
+    # finish_max_edges=0: the Spark peel, not the driver finisher
+    "bulk_peel": lambda t: fraudar.bulk_peel(t.bip, finish_max_edges=0),
+}
+
+
+@pytest.mark.parametrize("name", sorted(KERNELS))
+def test_kernel_output_runs_at_sized_width(spark, name):
+    """A sized kernel's output runs nothing at the session width: with
+    the session at 8 partitions (AQE coalescing off, so 8 stays 8) and
+    a tiny input (m = 1), no stage of a job that consumes the output
+    may run 8 tasks — a shuffle left lazy in the returned frame would
+    run after the kernel's sized_plan scope, at the session width."""
+    sc = spark.sparkContext
+    keys = ("spark.sql.shuffle.partitions",
+            "spark.sql.adaptive.coalescePartitions.enabled")
+    prev = [spark.conf.get(k) for k in keys]
+    group = f"test-sized-output-{name}"
+    try:
+        spark.conf.set(keys[0], "8")
+        spark.conf.set(keys[1], "false")
+        out = KERNELS[name](_tiny_inputs(spark))
+        sc.setJobGroup(group, group)
+        try:
+            assert out.collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+    finally:
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+    tracker = sc.statusTracker()
+    jobs = tracker.getJobIdsForGroup(group)
+    assert jobs
+    tasks = [tracker.getStageInfo(sid).numTasks
+             for j in jobs for sid in tracker.getJobInfo(j).stageIds]
+    assert 8 not in tasks, tasks

@@ -67,7 +67,7 @@ def test_fixed_mode_metrics_add_no_job(spark, monkeypatch):
     assert "num_partitions" not in res.metrics[0]
     for m in res.metrics[1:]:
         assert m["num_partitions"] >= 1
-        assert m["aqe"] is False  # pagerank runs its loop under fixed_plan
+        assert m["aqe"] is False  # pagerank's sized_plan turns AQE off
     assert all("residual" not in m for m in res.metrics)
     walls = [m["wall_s"] for m in res.metrics]
     assert walls == sorted(walls)

@@ -118,47 +118,63 @@ def semi_supervised_sample(labeled: DataFrame, frac: float,
     )
 
 
+def running_sums(df: DataFrame, key: str,
+                 cols: list[str]) -> tuple[DataFrame, dict[str, int]]:
+    """``df`` with ``_cum_<c>`` for each ``c`` in ``cols``: the sum of
+    ``c`` over every row whose ``key`` is ≤ this row's (``key`` must
+    be unique), plus each column's grand total.
+
+    Two-phase, never a global single-task ``Window.orderBy`` (for a
+    continuous key |distinct| ≈ |rows| and a single-task sort dies at
+    web scale): range-partition on ``key`` at the session width, pin
+    the partitioning with a localCheckpoint, collect one sum row per
+    partition, and add each partition's offset (a tiny broadcast join)
+    to a partition-local running window. The same pattern as
+    ``linalg.dense_col_index``."""
+    from pyspark.sql import Window
+
+    g = (
+        df.repartitionByRange(key)
+        .withColumn("_pid", F.spark_partition_id())
+        .localCheckpoint(eager=True)  # pin partitioning for both consumers
+    )
+    parts = sorted(
+        g.groupBy("_pid").agg(*[F.sum(c).alias(c) for c in cols]).collect(),
+        key=lambda r: r["_pid"],
+    )
+    offs, acc = [], [0] * len(cols)
+    for r in parts:
+        offs.append((r["_pid"], *acc))
+        acc = [a + r[c] for a, c in zip(acc, cols)]
+    types = "".join(f", _off_{c} {df.schema[c].dataType.simpleString()}"
+                    for c in cols)
+    off_df = df.sparkSession.createDataFrame(offs, "_pid int" + types)
+    w = (
+        Window.partitionBy("_pid").orderBy(key)
+        .rowsBetween(Window.unboundedPreceding, 0)
+    )
+    out = g.join(F.broadcast(off_df), "_pid").select(
+        *df.columns,
+        *[(F.col(f"_off_{c}") + F.sum(c).over(w)).alias(f"_cum_{c}")
+          for c in cols],
+    )
+    return out, dict(zip(cols, acc))
+
+
 def rank_stats(values: DataFrame, col: str) -> DataFrame:
     """(min_v, med_v, max_v): the reference's rank-based extraction
     (``helper.py:71-74,99-107``) — its "mean" is the middle *element* of
     the sorted list (``ranked[int(len/2)]``), i.e. the upper median, not
     the arithmetic mean. min/max are plain aggregates; the median element
-    is an exact-percentile-free sort + element pick via row_number to
-    match the reference's integer indexing exactly."""
-    from pyspark.sql import Window
-
-    n = values.count()
-    mid = n // 2  # 0-based index int(len/2), matching the reference
-    # two-phase selection, fully partitioned (no global Window.orderBy —
-    # for a continuous column |distinct| ≈ |rows| and a single-task sort
-    # dies at web scale): count per distinct value, RANGE-partition the
-    # distinct-value distribution, cumulative-sum inside each sorted
-    # partition, then add per-partition count offsets (tiny broadcast
-    # join) — the same pattern as linalg.dense_col_index
-    g = (
-        values.groupBy(F.col(col).alias("v")).agg(F.count(F.lit(1)).alias("c"))
-        .repartitionByRange(32, "v")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partitioning for both consumers
-    )
-    spark = values.sparkSession
-    totals = sorted(
-        (r["_pid"], r["_t"])
-        for r in g.groupBy("_pid").agg(F.sum("c").alias("_t")).collect()
-    )
-    offs, acc = [], 0
-    for pid, t in totals:
-        offs.append((pid, acc))
-        acc += t
-    off_df = spark.createDataFrame(offs or [(0, 0)], "_pid int, _off long")
-    w = (
-        Window.partitionBy("_pid").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
+    is picked from the running count over the distinct values
+    (``running_sums``) to match the reference's integer indexing
+    exactly."""
+    g, tot = running_sums(
+        values.groupBy(F.col(col).alias("v")).agg(F.count(F.lit(1)).alias("c")),
+        "v", ["c"])
+    mid = tot["c"] // 2  # 0-based index int(len/2), matching the reference
     med = (
-        g.join(F.broadcast(off_df), "_pid")
-        .withColumn("_cum", F.col("_off") + F.sum("c").over(w))
-        .where(F.col("_cum") > mid)  # smallest v whose cum count ≥ mid+1
+        g.where(F.col("_cum_c") > mid)  # smallest v whose cum count ≥ mid+1
         .orderBy("v")
         .limit(1)
         .select(F.col("v").alias("med_v"))

@@ -183,7 +183,7 @@ def _cc_doubling_loop(sym: DataFrame, m: int, max_iter: int,
     with sized_plan(sym.sparkSession, m):
         res = iterate(state0, step, residual,
                       max_iter=-(-max_iter // ROUNDS_PER_STEP), tol=0.5,
-                      checkpoint_every=1, fixed_plan_loop=True)
+                      checkpoint_every=1)
     if info is not None:
         info["iterations"] = res.iterations * ROUNDS_PER_STEP
         info["converged"] = res.converged

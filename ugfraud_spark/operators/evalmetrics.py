@@ -10,62 +10,35 @@ versions as exact rank statistics:
   descending.
 
 Both are one groupBy(score) plus cumulative sums over *distinct*
-scores. The cumulative sums are two-phase (range-partition the distinct
-scores, per-partition windows, driver-broadcast partition offsets) — no
-global single-task ``Window.orderBy`` anywhere, so the plan survives a
-continuous unbounded score column whose |distinct| ≈ |rows|.
+scores. The cumulative sums are two-phase (``attrs.running_sums``:
+range-partition the distinct scores, per-partition windows,
+driver-broadcast partition offsets) — no global single-task
+``Window.orderBy`` anywhere, so the plan survives a continuous unbounded
+score column whose |distinct| ≈ |rows|.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .attrs import running_sums
 
 
 def auc_ap(scored: DataFrame, score: str = "score", label: str = "label") -> DataFrame:
     """scored(score, label ∈ {0,1}) → 1 row (auc, ap)."""
-    g = (
+    g, tot = running_sums(
         scored.groupBy(F.col(score).alias("s")).agg(
             F.count(F.lit(1)).alias("c"), F.sum(label).alias("pos")
-        )
-        .repartitionByRange(32, "s")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)  # pin partitioning for both consumers
-    )
-    spark = scored.sparkSession
-    totals = sorted(
-        (r["_pid"], r["_c"], r["_p"])
-        for r in g.groupBy("_pid")
-        .agg(F.sum("c").alias("_c"), F.sum("pos").alias("_p"))
-        .collect()
-    )
-    # ascending offsets (count mass strictly below the partition) and
-    # descending offsets (count/pos mass strictly above it)
-    total_c = sum(t[1] for t in totals)
-    total_p = sum(t[2] for t in totals)
-    offs, acc_c, acc_p = [], 0, 0
-    for pid, tc, tp in totals:
-        offs.append((pid, acc_c, total_c - acc_c - tc, total_p - acc_p - tp))
-        acc_c += tc
-        acc_p += tp
-    off_df = spark.createDataFrame(
-        offs or [(0, 0, 0, 0)],
-        "_pid int, _below_c long, _above_c long, _above_p long",
-    )
-    w_asc = (
-        Window.partitionBy("_pid").orderBy("s")
-        .rowsBetween(Window.unboundedPreceding, -1)
-    )
-    w_desc = (
-        Window.partitionBy("_pid").orderBy(F.desc("s"))
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    o = g.join(F.broadcast(off_df), "_pid").select(
+        ),
+        "s", ["c", "pos"])
+    # count mass strictly below each score, and count/pos mass at or
+    # above it
+    o = g.select(
         "s", "c", "pos",
-        (F.col("_below_c")
-         + F.coalesce(F.sum("c").over(w_asc), F.lit(0))).alias("lower"),
-        (F.col("_above_p") + F.sum("pos").over(w_desc)).alias("ctp"),
-        (F.col("_above_c") + F.sum("c").over(w_desc)).alias("cn"),
+        (F.col("_cum_c") - F.col("c")).alias("lower"),
+        (F.lit(tot["pos"]) - F.col("_cum_pos") + F.col("pos")).alias("ctp"),
+        (F.lit(tot["c"]) - F.col("_cum_c") + F.col("c")).alias("cn"),
     )
     return o.agg(
         (

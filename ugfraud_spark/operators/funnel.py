@@ -21,6 +21,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .attrs import running_sums
+
 FUNNEL_STAGES = ("view", "click", "purchase")
 
 
@@ -116,37 +118,15 @@ def activity_gini(events: DataFrame) -> DataFrame:
 
     Scale shape: per-user counts are one map-side-combined groupBy;
     the histogram is tiny (distinct activity levels); the exclusive
-    cumulative count uses the rank_stats two-phase pattern — range
+    cumulative count comes from ``attrs.running_sums`` — range
     partition by value, partition-local running sum, per-partition
-    offsets via a bounded 32-row driver collect — never a global
+    offsets via one driver row per partition — never a global
     window."""
-    from pyspark.sql import Window
-
     uc = events.groupBy("user_id").agg(F.count(F.lit(1)).alias("c"))
-    h = (
-        uc.groupBy(F.col("c").alias("v")).agg(F.count(F.lit(1)).alias("cnt"))
-        .repartitionByRange(32, "v")
-        .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
-    )
-    spark = events.sparkSession
-    totals = sorted(
-        (r["_pid"], r["_t"])
-        for r in h.groupBy("_pid").agg(F.sum("cnt").alias("_t")).collect()
-    )
-    offs, acc = [], 0
-    for pid, t in totals:
-        offs.append((pid, acc))
-        acc += t
-    off_df = spark.createDataFrame(offs or [(0, 0)], "_pid int, _off long")
-    w = (
-        Window.partitionBy("_pid").orderBy("v")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    cum = (
-        h.join(F.broadcast(off_df), "_pid")
-        .withColumn("r", F.col("_off") + F.sum("cnt").over(w) - F.col("cnt"))
-    )
+    h, _ = running_sums(
+        uc.groupBy(F.col("c").alias("v")).agg(F.count(F.lit(1)).alias("cnt")),
+        "v", ["cnt"])
+    cum = h.withColumn("r", F.col("_cum_cnt") - F.col("cnt"))
     agg = cum.agg(
         F.sum("cnt").alias("n"),
         F.sum(F.col("v") * F.col("cnt")).alias("s"),

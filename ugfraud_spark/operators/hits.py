@@ -22,10 +22,12 @@ from .superstep import colocate_edges, colocate_edges_sized, sized_plan
 
 
 def hits(edges: DataFrame, iters: int = 5) -> DataFrame:
-    """edges(src, dst) directed → (id, hub, authority), L2-normalized."""
+    """edges(src, dst) directed → (id, hub, authority), L2-normalized.
+    The output is materialized inside the ``sized_plan`` scope (one
+    job), so its zero-fill joins run at the measured width too."""
     fwd, m = colocate_edges_sized(edges.select("src", "dst"))
     with sized_plan(fwd.sparkSession, m, adaptive_off=False):
-        return _hits_body(fwd, edges, iters)
+        return _hits_body(fwd, edges, iters).localCheckpoint(eager=True)
 
 
 def _hits_body(fwd: DataFrame, edges: DataFrame, iters: int) -> DataFrame:
@@ -124,10 +126,11 @@ def eigenvector_centrality(edges: DataFrame, iters: int = 5) -> DataFrame:
     message-only state discipline (a vertex receiving no message is an
     exact 0 contributing nothing to the norm or the next step — the
     |V| zero-fill join happens ONCE at the end), one co-partitioned
-    SpMV + one scalar norm agg per iteration."""
+    SpMV + one scalar norm agg per iteration. Like ``hits``, the output
+    is materialized inside the ``sized_plan`` scope."""
     fwd, m = colocate_edges_sized(edges.select("src", "dst"))
     with sized_plan(fwd.sparkSession, m, adaptive_off=False):
-        return _eigenvector_body(fwd, iters)
+        return _eigenvector_body(fwd, iters).localCheckpoint(eager=True)
 
 
 def _eigenvector_body(fwd: DataFrame, iters: int) -> DataFrame:
@@ -182,12 +185,13 @@ def kcore(edges_sym: DataFrame, k: int, iters: int = 10) -> DataFrame:
 
     Each round: one degree agg + two semi-joins — all co-partitioned on
     the cached symmetric edge set; the shrinking edge frame is
-    re-checkpointed per round to keep lineage flat.
+    re-checkpointed per round to keep lineage flat. The survivor
+    ``distinct`` is materialized inside the ``sized_plan`` scope.
     """
     e, m = colocate_edges_sized(edges_sym.select("src", "dst"))
     with sized_plan(e.sparkSession, m, adaptive_off=False):
         return _peel_edges(e, k, iters).select(
-            F.col("src").alias("id")).distinct()
+            F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
 
 
 def _peel_edges(e: DataFrame, k: int, iters: int) -> DataFrame:
@@ -252,10 +256,12 @@ def coreness(edges_sym: DataFrame, k_max: int = CORENESS_K_MAX,
     exact by construction and true-coreness agreement is separately
     asserted against a brute-force oracle in pytest. The cap is the
     documented contract: vertices at coreness k_max may sit in deeper
-    cores (the capped sweep is what bounded-budget pipelines run)."""
+    cores (the capped sweep is what bounded-budget pipelines run).
+    The per-vertex max over the levels is materialized inside the
+    ``sized_plan`` scope."""
     e, m = colocate_edges_sized(edges_sym.select("src", "dst"))
     with sized_plan(e.sparkSession, m, adaptive_off=False):
-        return _coreness_sweep(e, k_max, iters)
+        return _coreness_sweep(e, k_max, iters).localCheckpoint(eager=True)
 
 
 def _coreness_sweep(e: DataFrame, k_max: int, iters: int) -> DataFrame:

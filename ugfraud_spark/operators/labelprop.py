@@ -52,8 +52,7 @@ def lpa(edges_ab: DataFrame, iters: int = 4) -> DataFrame:
                 F.max(F.struct(F.col("c"), (-F.col("lbl")).alias("neg"))).alias("w")
             ).select("id", (-F.col("w.neg")).alias("lbl"))
 
-        res = iterate(state0, step, max_iter=iters, checkpoint_every=1,
-                      fixed_plan_loop=True)
+        res = iterate(state0, step, max_iter=iters, checkpoint_every=1)
     return res.state.select("id", F.col("lbl").alias("label"))
 
 
@@ -186,8 +185,9 @@ def label_spreading(edges_ab: DataFrame, seed_mod: int = LS_SEED_MOD,
     the clamp is a per-row expression recomputable from the id, so no
     seed table ever joins into the loop. Scores round to 6 dp at the
     END only (the pagerank discipline — groupBy sum order's low bits
-    are absorbed once)."""
-    sym = colocate_edges(
+    are absorbed once). Sized like ``lpa``: the loop runs under
+    ``sized_plan`` at the measured layout width, AQE off."""
+    sym, m = colocate_edges_sized(
         edges_ab.select(F.col("a").alias("src"),
                         F.col("b").alias("dst")).unionAll(
             edges_ab.select(F.col("b").alias("src"),
@@ -214,8 +214,8 @@ def label_spreading(edges_ab: DataFrame, seed_mod: int = LS_SEED_MOD,
         )
         return means.select("id", clamp(F.col("mean")).alias("score"))
 
-    res = iterate(state0, step, max_iter=iters, checkpoint_every=1,
-                  fixed_plan_loop=True)
+    with sized_plan(sym.sparkSession, m):
+        res = iterate(state0, step, max_iter=iters, checkpoint_every=1)
     return res.state.select(
         "id", F.round("score", 6).alias("score"),
         (F.col("id") % seed_mod == 0).cast("long").alias("is_seed"),

@@ -41,7 +41,7 @@ from pyspark.sql import types as T
 DENSE_IDX_COLLECT_MAX = 1_000_000
 
 
-def dense_col_index(edges: DataFrame, n_parts: int = 32,
+def dense_col_index(edges: DataFrame,
                     collect_max: int = DENSE_IDX_COLLECT_MAX) -> DataFrame:
     """(dst, cidx): deterministic dense 0-based index by sorted dst —
     the typed replacement for the reference's id↔idx dicts
@@ -87,7 +87,7 @@ def dense_col_index(edges: DataFrame, n_parts: int = 32,
 
     ranked = (
         d
-        .repartitionByRange(n_parts, "dst")
+        .repartitionByRange("dst")
         .sortWithinPartitions("dst")
         .withColumn("_pid", F.spark_partition_id())
         .mapInPandas(local_rank, schema="dst long, _pid int, _lrank long")

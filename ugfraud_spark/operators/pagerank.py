@@ -105,14 +105,15 @@ def _damped(teleport: Column, damping: float, mass: str = "mass") -> Column:
 def _iterate(state0: DataFrame, step: Callable[[DataFrame, int], DataFrame],
              values: list[str], *, tol: float | None = None,
              **loop) -> SuperstepResult:
-    """The family's loop: ``iterate`` with AQE off (the step is the hinted
-    co-partitioned join shape). Any ``tol``, 0.0 included, converges on
-    ``l1_residual`` fused into the checkpoint job and records every
-    residual; ``tol=None`` runs exactly ``max_iter`` steps. The result
-    state is projected to ``(id, *values)``."""
+    """The family's loop, run inside the caller's ``sized_plan`` (AQE
+    off: the step is the hinted co-partitioned join shape). Any ``tol``,
+    0.0 included, converges on ``l1_residual`` fused into the checkpoint
+    job and records every residual; ``tol=None`` runs exactly
+    ``max_iter`` steps. The result state is projected to
+    ``(id, *values)``."""
     res = iterate(state0, step,
                   residual_fn=None if tol is None else l1_residual,
-                  tol=tol or 0.0, fixed_plan_loop=True, **loop)
+                  tol=tol or 0.0, **loop)
     res.state = res.state.select("id", *values)
     return res
 

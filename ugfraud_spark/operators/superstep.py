@@ -29,6 +29,16 @@ Scale concerns handled here rather than in each algorithm:
   the partitioning is reused across supersteps, so the per-superstep
   join against edges shuffles only the (smaller) message side when the
   planner can prove co-partitioning.
+- **One plan scope**: ``sized_plan`` is the only place that sets
+  ``spark.sql.shuffle.partitions`` and AQE. A kernel measures its edge
+  rows once (``colocate_edges_sized`` / ``layout_width``), runs its
+  whole body, loop and final shuffle included, inside
+  ``sized_plan(spark, m)``, and returns only materialized frames. AQE
+  is off for the hinted co-partitioned join loops (per-stage
+  re-planning there is pure driver overhead: pagerank 2.6 s → 2.2 s,
+  label_propagation 3.3 s → 2.6 s on the sf0.1 suite) and kept on for
+  broadcast-frontier and peeling loops, which it speeds up (hits
+  12.2 s → 6.7 s, kcore 5.1 s → 1.6 s, bfs_hops 4.0 s → 3.2 s).
 """
 
 from __future__ import annotations
@@ -42,39 +52,6 @@ from typing import Callable
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
-
-
-@contextmanager
-def fixed_plan(spark: SparkSession, enabled: bool = True):
-    """Scoped AQE-off for a superstep loop whose per-iteration plan is
-    fixed, explicitly hinted, and CO-PARTITIONED end to end
-    (shuffle_hash state joins against the pinned ``colocate_edges``
-    layout): there AQE's per-stage runtime re-planning is pure
-    driver-serial overhead repeated every superstep — the same
-    rationale (and measured ~10-20% win) as the bench probe's AQE-off
-    window in ``bench.py:superstep_throughput``; measured on the sf0.1
-    suite: pagerank 2.6s → 2.2s, label_propagation 3.3s → 2.6s.
-
-    Deliberately OPT-IN per kernel (callers pass ``fixed_plan=True`` to
-    ``iterate``): loops that lean on broadcast frontiers, per-round
-    1-row-agg crossJoins, or localCheckpointed intermediates (HITS,
-    k-core peeling, BFS) run FASTER with AQE's partition coalescing —
-    measured sf0.1 regressions with AQE off: hits 6.7s → 12.2s, kcore
-    1.6s → 5.1s, bfs_hops 3.2s → 4.0s — so those keep AQE on.
-    Restores the previous value even when the loop raises.
-
-    Assumes a single-threaded driver: the scope sets SESSION-global
-    conf, so two queries running concurrently on one SparkSession
-    would plan under each other's settings."""
-    if not enabled:
-        yield
-        return
-    prev = spark.conf.get("spark.sql.adaptive.enabled")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
 
 
 # Target edge rows per partition for the size-derived superstep layout
@@ -92,29 +69,49 @@ LAYOUT_ROWS_PER_PARTITION = 64_000
 @contextmanager
 def sized_plan(spark: SparkSession, shuffle_partitions: int,
                adaptive_off: bool = True):
-    """``fixed_plan`` plus a scoped ``spark.sql.shuffle.partitions``:
-    the whole kernel body (vertex base, state init, superstep loop)
-    plans against the SAME partition count as the sized edge layout, so
-    every state⋈edges join stays exchange-elided end to end. Restores
-    both conf values even when the body raises.
+    """The one scope that sets a kernel's plan: it scopes
+    ``spark.sql.shuffle.partitions`` to ``shuffle_partitions`` (the
+    ``m`` of ``colocate_edges_sized`` or ``layout_width``) and, by
+    default, turns AQE off. Both values are restored when the body
+    exits, also when it raises.
 
-    ``adaptive_off=False`` scopes only the partition count and keeps
-    AQE — for the broadcast-frontier loops (HITS, k-core, BFS) where
-    AQE coalescing wins but the layout/shuffle width should still track
-    the measured data size (A/B at sf0.1, AQE on: hits 6.1-7.6 s at 32
-    partitions vs 4.1-5.1 s at 10).
+    Contract: Spark reads these confs when a plan EXECUTES, so every
+    shuffle a sized kernel runs must run inside the scope. A kernel
+    returns either the state ``iterate`` checkpointed inside it or a
+    frame it materialized inside it (``localCheckpoint`` or a
+    persisted, counted frame); it never returns a lazy plan whose last
+    shuffle would run after the scope, at the session width.
 
-    Same single-threaded-driver assumption as ``fixed_plan``; and Spark
-    reads these confs when a plan EXECUTES, so only actions run inside
-    the scope are sized — a lazy frame returned from it runs at the
-    session width."""
+    AQE off (the default) is for a loop whose per-iteration plan is
+    fixed, explicitly hinted and co-partitioned end to end
+    (shuffle_hash state joins against the pinned ``colocate_edges``
+    layout): there AQE's per-stage re-planning is driver-serial
+    overhead repeated every superstep (the bench probe's AQE-off window
+    in ``bench.py:superstep_throughput`` measured ~10-20%; on the sf0.1
+    suite pagerank 2.6 s → 2.2 s, label_propagation 3.3 s → 2.6 s).
+
+    ``adaptive_off=False`` scopes only the width and keeps AQE, for
+    loops that lean on broadcast frontiers, per-round 1-row-agg
+    crossJoins or localCheckpointed intermediates (HITS, k-core, BFS,
+    the Fraudar peel). They run faster with AQE's partition coalescing:
+    with AQE off at sf0.1, hits 6.7 s → 12.2 s, kcore 1.6 s → 5.1 s,
+    bfs_hops 3.2 s → 4.0 s. Their width should still track the data
+    (A/B at sf0.1, AQE on: hits 6.1-7.6 s at 32 partitions vs
+    4.1-5.1 s at 10).
+
+    Assumes a single-threaded driver: the scope sets SESSION-global
+    conf, so two queries running concurrently on one SparkSession
+    would plan under each other's settings."""
     prev_n = spark.conf.get("spark.sql.shuffle.partitions")
+    prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
+    if adaptive_off:
+        spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        with fixed_plan(spark, enabled=adaptive_off):
-            yield
+        yield
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev_n)
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
 def colocate_edges(edges: DataFrame, key: str = "src") -> DataFrame:
@@ -241,7 +238,6 @@ def iterate(
     checkpoint_every: int = 5,
     checkpoint_dir: str | None = None,
     start_iteration: int = 0,
-    fixed_plan_loop: bool = False,
 ) -> SuperstepResult:
     """Run ``state ← step_fn(state, i)`` until the residual < tol or
     ``max_iter``. The residual is the convergence scalar (reference A4
@@ -264,10 +260,9 @@ def iterate(
     planned; its work runs in the next checkpointed step. Recording
     these adds no Spark job.
 
-    ``fixed_plan_loop=True`` runs the loop under ``fixed_plan`` (AQE
-    off) — only for kernels whose step is the hinted co-partitioned
-    join+groupBy shape; see ``fixed_plan``'s docstring for the measured
-    per-kernel decision."""
+    ``iterate`` sets no conf: a sized kernel calls it inside its
+    ``sized_plan`` scope, which fixes the width and AQE for every
+    superstep (``aqe`` in ``metrics`` records what the scope chose)."""
     t0 = time.time()
     residuals: list[float] = []
     metrics: list[dict] = []
@@ -278,32 +273,31 @@ def iterate(
         os.makedirs(checkpoint_dir, exist_ok=True)
 
     i = start_iteration
-    with fixed_plan(spark, enabled=fixed_plan_loop):
-        while i < max_iter:
-            new_state = step_fn(state, i)
-            i += 1
-            need_truncate = (i % checkpoint_every == 0) or i == max_iter
-            rec: dict = {"superstep": i}
-            r = float("nan")
-            if converging:
-                new_state, read = residual_fn(state, new_state)
-            if converging or need_truncate:
-                new_state = new_state.localCheckpoint(eager=True)
-                rec["num_partitions"] = new_state.rdd.getNumPartitions()
-                rec["aqe"] = (
-                    spark.conf.get("spark.sql.adaptive.enabled") == "true")
-            if converging:
-                r = read()
-                residuals.append(r)
-                rec["residual"] = r
-            rec["wall_s"] = round(time.time() - t0, 3)
-            metrics.append(rec)
-            if checkpoint_dir and need_truncate:
-                _write_checkpoint(new_state, checkpoint_dir, i, r, t0)
-            state = new_state
-            if converging and r < tol:
-                converged = True
-                break
+    while i < max_iter:
+        new_state = step_fn(state, i)
+        i += 1
+        need_truncate = (i % checkpoint_every == 0) or i == max_iter
+        rec: dict = {"superstep": i}
+        r = float("nan")
+        if converging:
+            new_state, read = residual_fn(state, new_state)
+        if converging or need_truncate:
+            new_state = new_state.localCheckpoint(eager=True)
+            rec["num_partitions"] = new_state.rdd.getNumPartitions()
+            rec["aqe"] = (
+                spark.conf.get("spark.sql.adaptive.enabled") == "true")
+        if converging:
+            r = read()
+            residuals.append(r)
+            rec["residual"] = r
+        rec["wall_s"] = round(time.time() - t0, 3)
+        metrics.append(rec)
+        if checkpoint_dir and need_truncate:
+            _write_checkpoint(new_state, checkpoint_dir, i, r, t0)
+        state = new_state
+        if converging and r < tol:
+            converged = True
+            break
 
     return SuperstepResult(
         state=state,

@@ -19,8 +19,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .superstep import (SuperstepResult, colocate_edges_sized,
-                        iterate, l1_residual, sized_plan)
+from .gang import _linear_bp
+from .superstep import SuperstepResult
 
 
 def zoobp(
@@ -32,54 +32,12 @@ def zoobp(
     tol: float | None = None,
     checkpoint_dir: str | None = None,
 ) -> SuperstepResult:
-    """edges(src, dst, sign 1|2) + priors(id, prior) → state(id, belief)."""
+    """edges(src, dst, sign 1|2) + priors(id, prior) → state(id, belief).
+    GANG's loop (``gang._linear_bp``) with coefficient ep/2 and the
+    edge sign s = ±1 weighting each message."""
     s_col = F.when(F.col("sign") == 1, F.lit(1.0)).otherwise(F.lit(-1.0))
-    sym, m = colocate_edges_sized(
-        edges.select("src", "dst", s_col.alias("s")).unionAll(
-            edges.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), s_col.alias("s")
-            )
-        )
-    )
-    with sized_plan(sym.sparkSession, m):
-        return _zoobp_loop(sym, priors, ep=ep, max_iter=max_iter, tol=tol,
-                           checkpoint_dir=checkpoint_dir)
-
-
-def _zoobp_loop(sym, priors, *, ep, max_iter, tol, checkpoint_dir):
-    pri = priors.select(
-        "id", (F.col("prior") - F.lit(0.5)).alias("p")
-    ).repartition("id").persist()
-    pri.count()
-    state0 = pri.select("id", F.col("p").alias("value"))
-    h = ep / 2.0
-
-    def step(state: DataFrame, _i: int) -> DataFrame:
-        msg = (
-            sym.join(
-                state.select(F.col("id").alias("src"), "value").hint("shuffle_hash"),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("s") * F.col("value")).alias("m"))
-        )
-        return pri.join(msg.hint("shuffle_hash"), "id", "left").select(
-            "id",
-            (F.col("p") + F.lit(h) * F.coalesce("m", F.lit(0.0))).alias("value"),
-        )
-
-    res = iterate(
-        state0,
-        step,
-        residual_fn=(None if tol is None else l1_residual),
-        max_iter=max_iter,
-        tol=tol or 0.0,
-        checkpoint_every=1,
-        checkpoint_dir=checkpoint_dir,
-        fixed_plan_loop=True,
-    )
-    res.state = res.state.select("id", F.col("value").alias("belief"))
-    return res
+    return _linear_bp(edges, priors, coeff=ep / 2.0, sign=s_col,
+                      max_iter=max_iter, tol=tol, checkpoint_dir=checkpoint_dir)
 
 
 def zoobp_literal(edges: DataFrame, priors: DataFrame, *,

@@ -93,7 +93,7 @@ def _page_fields(i: int, n_pages: int, seed: int, n_links: int = 8,
 
 def generate_pages(spark: SparkSession, n_pages: int, seed: int = 42,
                    partitions: int | None = None) -> DataFrame:
-    rng = spark.range(0, n_pages, numPartitions=partitions or 32)
+    rng = spark.range(0, n_pages, numPartitions=partitions)
     n, s = n_pages, seed
 
     def gen(batches):
