@@ -165,14 +165,13 @@ def test_sssp_superstep_edge_side_stays_put(spark):
 
 @pytest.mark.parametrize("weighted", [False, True], ids=["unweighted", "w"])
 def test_pagerank_message_step_edge_side_stays_put(spark, weighted):
-    """The PageRank family's shared message step (``_contribs``: pagerank,
-    PPR, teleport, warm start, topic PPR, dangling, katz, weighted) must
-    probe the colocated edge cache without re-shuffling it: a
-    ShuffledHashJoin whose edge branch is a bare InMemoryTableScan, so
-    only the |V|-sized state side moves each superstep. A ``w`` edge
-    column (pagerank_weighted) must not change that."""
-    from ugfraud_spark.operators.pagerank import _contribs
-    from ugfraud_spark.operators.superstep import colocate_edges
+    """The shared message step (``_contribs``: the PageRank family, HITS,
+    eigenvector centrality, SALSA, BiRank) must probe the colocated edge
+    cache without re-shuffling it: a ShuffledHashJoin whose edge branch
+    is a bare InMemoryTableScan, so only the |V|-sized state side moves
+    each superstep. A ``w`` edge column (pagerank_weighted, BiRank) must
+    not change that."""
+    from ugfraud_spark.operators.superstep import _contribs, colocate_edges
 
     edges = spark.createDataFrame(
         [(i % 7, (i * 3) % 11, 1.0 + i % 5) for i in range(60)],

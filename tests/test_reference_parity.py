@@ -390,116 +390,6 @@ def test_speagle_parity_at_convergence(ref, ref_graph, spark):
     assert dr < 1e-6, f"review belief diff {dr}"
 
 
-def test_speagle_demo_schedule_parity(ref, ref_graph):
-    """VERDICT r3 #6: the reference demo's exact parameters (2 async
-    Gauss–Seidel sweeps over the BFS-from-degree-desc schedule, reverse
-    then forward, tol=1e-3 — ``Demo/eval_SpEagle.py``) reproduced by
-    ``speagle_demo`` to ≤1e-6 per belief on every node type. This is the
-    driver-side parity mode; the distributed Jacobi path keeps its
-    convergence-parity contract (test above)."""
-    from ugfraud_spark.operators.speagle_demo import speagle_demo
-
-    from reference_loader import edge_prior, hash_prior
-
-    edges, _g, _maps = ref_graph
-    users = sorted({e[0] for e in edges})[:150]
-    keep = set(users)
-    sub = [e for e in edges if e[0] in keep]
-    g, maps = build_reference_graph(sub)
-
-    eps_n, eps = 1e-5, 0.1
-    urp = np.log(np.array([[1 - eps_n, eps_n], [eps_n, 1 - eps_n]]))
-    rpp = np.log(np.array([[1 - eps, eps], [eps, 1 - eps]]))
-    pots = {"u_r": urp, "r_u": urp, "r_p": rpp, "p_r": rpp}
-    model = ref["SpEagle"].SpEagle(g, pots, message=None, max_iters=4)
-    model.schedule(schedule_type="bfs")
-    model.run_bp(start_iter=0, max_iters=2, tol=1e-3)
-    u_ref, r_ref, p_ref = model.classify()
-
-    # the SAME ordered edge list build_reference_graph feeds networkx
-    # (sorted users, sorted products per user) with the same priors,
-    # keyed by the reference's string ids so beliefs compare directly
-    u_map, p_map = maps["u_map"], maps["p_map"]
-    by_user: dict = {}
-    for s, d, _sg in sub:
-        by_user.setdefault(s, []).append(d)
-    edge_list = [(u_map[u], p_map[d])
-                 for u in sorted(by_user) for d in sorted(by_user[u])]
-    up = {u_map[u]: hash_prior(u) for u in by_user}
-    pp = {p_map[d]: hash_prior(d) for _u, ds in by_user.items() for d in ds}
-    rp = {(u_map[s], p_map[d]): edge_prior(s, d) for s, d, _sg in sub}
-
-    u_eng, p_eng, r_eng = speagle_demo(
-        edge_list, up, pp, rp, numerical_eps=eps_n, eps=eps,
-        max_iters=2, tol=1e-3,
-    )
-    du = max(abs(u_eng[k] - v) for k, v in u_ref.items())
-    dp = max(abs(p_eng[k] - v) for k, v in p_ref.items())
-    dr = max(abs(r_eng[k] - v) for k, v in r_ref.items())
-    assert len(u_eng) == len(u_ref) and len(r_eng) == len(r_ref)
-    assert du < 1e-6, f"user belief diff {du}"
-    assert dp < 1e-6, f"prod belief diff {dp}"
-    assert dr < 1e-6, f"review belief diff {dr}"
-
-
-def test_speagle_local_schedule_parity(ref, ref_graph):
-    """The reference's Dijkstra ``local_schedule`` variant
-    (``SpEagle.py:381-421``, the incremental-update path): seeds at hop
-    cost 0, nodes within num_hops in heap-pop order, then the same
-    alternating sweeps. ``speagle_demo(starting_nodes=...)`` must
-    reproduce every belief — including untouched nodes, whose beliefs
-    stay at the normalized prior — to ≤1e-6."""
-    from ugfraud_spark.operators.speagle_demo import speagle_demo
-
-    from reference_loader import edge_prior, hash_prior
-
-    edges, _g, _maps = ref_graph
-    users = sorted({e[0] for e in edges})[:150]
-    keep = set(users)
-    sub = [e for e in edges if e[0] in keep]
-    g, maps = build_reference_graph(sub)
-
-    eps_n, eps = 1e-5, 0.1
-    urp = np.log(np.array([[1 - eps_n, eps_n], [eps_n, 1 - eps_n]]))
-    rpp = np.log(np.array([[1 - eps, eps], [eps, 1 - eps]]))
-    pots = {"u_r": urp, "r_u": urp, "r_p": rpp, "p_r": rpp}
-    u_map, p_map = maps["u_map"], maps["p_map"]
-    seeds = [u_map[u] for u in sorted(keep)[:5]]
-
-    model = ref["SpEagle"].SpEagle(g, pots, message=None, max_iters=4)
-    model.local_schedule(["u" + s for s in seeds], num_hops=4)
-    model.run_bp(start_iter=0, max_iters=2, tol=1e-3)
-    u_ref, r_ref, p_ref = model.classify()
-
-    by_user: dict = {}
-    for s, d, _sg in sub:
-        by_user.setdefault(s, []).append(d)
-    edge_list = [(u_map[u], p_map[d])
-                 for u in sorted(by_user) for d in sorted(by_user[u])]
-    up = {u_map[u]: hash_prior(u) for u in by_user}
-    pp = {p_map[d]: hash_prior(d) for _u, ds in by_user.items() for d in ds}
-    rp = {(u_map[s], p_map[d]): edge_prior(s, d) for s, d, _sg in sub}
-
-    u_eng, p_eng, r_eng = speagle_demo(
-        edge_list, up, pp, rp, numerical_eps=eps_n, eps=eps,
-        max_iters=2, tol=1e-3,
-        starting_nodes=[("u", s) for s in seeds], num_hops=4,
-    )
-    du = max(abs(u_eng[k] - v) for k, v in u_ref.items())
-    dp = max(abs(p_eng[k] - v) for k, v in p_ref.items())
-    dr = max(abs(r_eng[k] - v) for k, v in r_ref.items())
-    assert du < 1e-6, f"user belief diff {du}"
-    assert dp < 1e-6, f"prod belief diff {dp}"
-    assert dr < 1e-6, f"review belief diff {dr}"
-
-
-def test_speagle_demo_cap():
-    from ugfraud_spark.operators.speagle_demo import speagle_demo
-
-    with pytest.raises(ValueError, match="demo-parity"):
-        speagle_demo([("a", "b")] * 3, {}, {}, {}, max_edges=2)
-
-
 # ------------------------------------------------- Prior / ground truth
 
 def test_scale_value_bug_and_intent(ref, ref_graph):
@@ -602,24 +492,3 @@ def test_svd_classify_svc_parity(ref, spark):
         f"svd_classify margin {min_margin} too thin for an exact-match "
         "oracle — revisit the gate before it flakes"
     )
-
-
-def test_speagle_demo_hub_readout_finite():
-    """Hub nodes whose log-belief magnitude exceeds the float64 exp
-    range (~|total| > 745, i.e. degree ≳ 1075 at near-uniform messages)
-    must still read out a finite posterior: the classify stage uses the
-    max-stabilized softmax, equal in real arithmetic to the reference's
-    unstabilized exp readout (SpEagle.py:466-510) but immune to its
-    0/0 = NaN underflow."""
-    from ugfraud_spark.operators.speagle_demo import speagle_demo
-
-    n_prods = 1500  # hub degree far past the exp underflow threshold
-    edges = [("hub", f"p{i}") for i in range(n_prods)]
-    u_pri = {"hub": 0.5}
-    p_pri = {f"p{i}": 0.5 for i in range(n_prods)}
-    r_pri = {("hub", f"p{i}"): 0.5 for i in range(n_prods)}
-    u_out, p_out, r_out = speagle_demo(edges, u_pri, p_pri, r_pri)
-    assert np.isfinite(u_out["hub"])
-    assert 0.0 <= u_out["hub"] <= 1.0
-    assert all(np.isfinite(v) for v in p_out.values())
-    assert all(np.isfinite(v) for v in r_out.values())

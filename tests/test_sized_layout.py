@@ -14,8 +14,8 @@ from types import SimpleNamespace
 import pytest
 from pyspark.sql import functions as F
 
-from ugfraud_spark.operators import (bfs, components, fraudar, gang, hits,
-                                    labelprop, pagerank, zoobp)
+from ugfraud_spark.operators import (bfs, birank, components, fraudar, gang,
+                                    hits, labelprop, pagerank, salsa, zoobp)
 from ugfraud_spark.operators.linalg import sketch_partitions
 from ugfraud_spark.operators.superstep import (
     LAYOUT_ROWS_PER_PARTITION,
@@ -136,6 +136,9 @@ KERNELS = {
         t.e.withColumn("w", F.col("src") % 3 + 1), t.seeds),
     "hits": lambda t: hits.hits(t.e),
     "eigenvector_centrality": lambda t: hits.eigenvector_centrality(t.e),
+    "salsa": lambda t: salsa.salsa(t.e),
+    "birank": lambda t: birank.birank(t.bip.withColumn("weight", F.lit(1.0))),
+    "wl_refinement": lambda t: labelprop.wl_refinement(t.ab),
     "kcore": lambda t: hits.kcore(t.sym, k=3),
     "coreness": lambda t: hits.coreness(t.sym),
     # finish_max_edges=0: the Spark peel, not the driver finisher
@@ -175,3 +178,16 @@ def test_kernel_output_runs_at_sized_width(spark, name):
     tasks = [tracker.getStageInfo(sid).numTasks
              for j in jobs for sid in tracker.getJobInfo(j).stageIds]
     assert 8 not in tasks, tasks
+
+
+@pytest.mark.parametrize("name", ["hits", "eigenvector_centrality", "salsa",
+                                  "birank", "wl_refinement"])
+def test_kernel_releases_what_it_persisted(spark, name):
+    """A kernel unpersists every frame it persisted (colocated edges,
+    vertex bases) before it returns: one call leaves the session's
+    cache as it found it."""
+    cache = spark._jsparkSession.sharedState().cacheManager()
+    inputs = _tiny_inputs(spark)
+    before = cache.cachedData().size()
+    assert KERNELS[name](inputs).count() > 0
+    assert cache.cachedData().size() == before

@@ -1,19 +1,22 @@
 """Superstep loop fixed costs: Spark jobs per superstep, residuals
 observed inside the checkpoint job (PageRank's l1, connected
-components' Σlbl, SpEagle's Σ|Δmsg|), per-step metrics, and the
-CSR-block cogroup's executed width.
+components' Σlbl, SpEagle's Σ|Δmsg|), one job per link-analysis
+half-step (HITS, eigenvector centrality, SALSA, BiRank), per-step
+metrics, and the CSR-block cogroup's executed width.
 
-Results are pinned elsewhere (the pagerank-family, GANG and ZooBP
-oracle gates); these tests pin the mechanisms, so a refactor that
-brings back the second residual job or the n_blocks-wide cogroup fails
-here even though every output stays the same."""
+Results are pinned elsewhere (the pagerank-family, GANG, ZooBP and
+link-analysis oracle gates); these tests pin the mechanisms, so a
+refactor that brings back the second residual job, a per-half-step
+persist or collect, or the n_blocks-wide cogroup fails here even
+though every output stays the same."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from ugfraud_spark.operators import adjacency, components, pagerank, speagle
+from ugfraud_spark.operators import (adjacency, birank, components, hits,
+                                    pagerank, salsa, speagle)
 from ugfraud_spark.operators.superstep import (
     LAYOUT_ROWS_PER_PARTITION,
     l1_residual,
@@ -34,7 +37,9 @@ def _loop_jobs(monkeypatch, spark, group: str, module=pagerank) -> list[int]:
         finally:
             sc.setLocalProperty("spark.jobGroup.id", None)
             sc.setLocalProperty("spark.job.description", None)
-        jobs.extend(sc.statusTracker().getJobIdsForGroup(group))
+        sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
+        # the group holds every loop job so far (a kernel may loop twice)
+        jobs[:] = sc.statusTracker().getJobIdsForGroup(group)
         return res
 
     monkeypatch.setattr(module, "iterate", grouped)
@@ -129,6 +134,31 @@ def test_connected_components_one_job_per_superstep(spark, monkeypatch):
     assert {r["component"] for r in cc.collect()} == {0}
 
 
+LINK_ANALYSIS = {
+    # kernel, its module, supersteps (half-steps) for 3 iterations
+    "hits": (lambda e: hits.hits(e, iters=3), hits, 6),
+    "eigenvector_centrality": (
+        lambda e: hits.eigenvector_centrality(e, iters=3), hits, 3),
+    # two chains (authority, hub) of 2 half-steps per iteration
+    "salsa": (lambda e: salsa.salsa(e, iters=3), salsa, 12),
+    "birank": (lambda e: birank.birank(
+        e.select("src", (F.col("dst") + 1000).alias("dst"),
+                 F.lit(1.0).alias("weight")), iters=3), birank, 6),
+}
+
+
+@pytest.mark.parametrize("name", sorted(LINK_ANALYSIS))
+def test_link_analysis_runs_one_job_per_half_step(spark, monkeypatch, name):
+    """HITS, eigenvector centrality, SALSA and BiRank run every
+    half-step as one ``iterate`` superstep of one Spark job: the HITS
+    norm is observed inside the checkpoint job, and no half-step
+    persists, collects or broadcasts on the side."""
+    kernel, module, steps = LINK_ANALYSIS[name]
+    jobs = _loop_jobs(monkeypatch, spark, f"test-{name}-loop", module)
+    assert kernel(_skewed_edges(spark)).count() > 0
+    assert len(jobs) == steps, jobs
+
+
 def _speagle_inputs(spark):
     e = spark.range(600).select(
         (F.col("id") % 41).alias("src"),
@@ -179,6 +209,7 @@ def test_speagle_runs_no_job_after_its_loop(spark, monkeypatch, max_iter):
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()  # status store is async
     assert sc.statusTracker().getJobIdsForGroup("test-speagle-after") == []
     assert res is out["loop"] and res.iterations == max_iter
     assert all(b.count() > 0 for b in beliefs)

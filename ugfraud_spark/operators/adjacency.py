@@ -10,7 +10,7 @@ block) followed by a shuffle-reduce of the partial messages
 Blocks shuffle the edges ONCE at build time; every superstep then moves
 only the (|V|-sized) state into the (pre-partitioned) blocks and the
 (≤|V|·fanout partial-aggregated) messages out. The join message step
-``pagerank._contribs`` moves the same two sides (its edges are pinned
+``superstep._contribs`` moves the same two sides (its edges are pinned
 on ``src`` by ``superstep.colocate_edges``), so blocks differ from it
 in the per-block kernel, not in edge traffic. ``tests/test_adjacency.py``
 checks ``spmv_arrow`` against that join step. Salting bounds the
@@ -170,7 +170,7 @@ def spmv_arrow(adj: AdjacencyBlocks, state: DataFrame) -> DataFrame:
     boundary): the block list arrays flatten to numpy ZERO-COPY from
     Arrow, and the state lookup is a sorted-array ``searchsorted``.
     Float summation order inside a block differs from the join message
-    step ``pagerank._contribs`` by ~1e-15; the two are asserted equal
+    step ``superstep._contribs`` by ~1e-15; the two are asserted equal
     to 1e-12 in tests."""
     import pyarrow as pa
 

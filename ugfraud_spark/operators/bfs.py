@@ -73,8 +73,8 @@ def sssp_weighted(edges_w: DataFrame, seeds: DataFrame, *,
 
     The distributed analog of the reference's Dijkstra ``local_schedule``
     node selection (``SpEagle.py:389-422``; its exact heap-order schedule
-    lives in ``speagle_demo(starting_nodes=...)`` — a sequential sweep by
-    construction). K supersteps bound path LENGTH (edge count), matching
+    is a sequential sweep by construction, which the engine does not
+    reproduce). K supersteps bound path LENGTH (edge count), matching
     the oracle's unrolled recurrence; dist is exact for every vertex whose
     shortest path uses ≤ ``iters`` edges.
 

@@ -14,12 +14,15 @@ house hash priors (sources.tables.vertex_priors — the stand-in for
 the reference's priors.pkl, UGFraud/Utils/helper.py).
 
 Scale shape: the normalized edge weight 1/sqrt(d_src·d_dst) is
-computed ONCE (two degree aggregates + two vertex-keyed joins) and
-cached colocated; each half-step is then one edge⋈state join + one
-map-side-combined sum — the identical shuffle class as the PageRank
-superstep, alternating sides. Float discipline: raw double arithmetic
-through the loop, ROUND 6 once at the end (the pagerank contract);
-the oracle unrolls the same recurrence.
+computed ONCE from the two sides' vertex bases (id, out_deg = weighted
+degree, x0 = prior) and laid out in both directions at the sized width.
+Each half-step is one ``iterate`` superstep: the shared message step
+``_contribs`` (edge⋈state on src, map-side-combined ``groupBy(dst)``
+sum, weighted by the normalized edge) joined onto the receiving side's
+base — the PageRank superstep's shuffle class, alternating sides, one
+Spark job per half-step with AQE off. Float discipline: raw double
+arithmetic through the loop, ROUND 6 once at the end (the pagerank
+contract); the oracle unrolls the same recurrence.
 """
 
 from __future__ import annotations
@@ -28,7 +31,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..sources.tables import vertex_priors
-from .superstep import colocate_edges
+from .superstep import (
+    _contribs,
+    colocate_edges,
+    colocate_edges_sized,
+    iterate,
+    sized_plan,
+)
 
 BIRANK_ALPHA = 0.85
 BIRANK_ITERS = 5
@@ -37,43 +46,52 @@ BIRANK_ITERS = 5
 def birank(bip: DataFrame, alpha: float = BIRANK_ALPHA,
            iters: int = BIRANK_ITERS) -> DataFrame:
     """bip(src, dst, weight) → (id, birank): both sides' final scores
-    (users = src namespace, products = dst namespace), 6dp-rounded."""
-    e = bip.select("src", "dst", F.col("weight").cast("double").alias("w"))
-    du = e.groupBy("src").agg(F.sum("w").alias("du"))
-    dp = e.groupBy("dst").agg(F.sum("w").alias("dp"))
-    en = colocate_edges(
-        e.join(du, "src").join(dp, "dst")
-        .select("src", "dst",
-                (F.col("w") / F.sqrt(F.col("du") * F.col("dp")))
-                .alias("s"))
-    )
-    u = vertex_priors(e.select(F.col("src").alias("id")).distinct()) \
-        .select("id", F.col("prior").alias("x"))
-    p0 = vertex_priors(e.select(F.col("dst").alias("id")).distinct()) \
-        .select("id", F.col("prior").alias("x0"))
-    u0 = u.select("id", F.col("x").alias("x0"))
-    a = float(alpha)
-    for _ in range(iters):
-        p = (
-            en.join(u.select(F.col("id").alias("src"), "x"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum(F.col("s") * F.col("x")).alias("m"))
-            .join(p0, "id")
-            .select("id", (F.lit(a) * F.col("m")
-                           + F.lit(1.0 - a) * F.col("x0")).alias("x"))
-        )
-        u = (
-            en.join(p.select(F.col("id").alias("dst"), "x"), "dst")
-            .groupBy(F.col("src").alias("id"))
-            .agg(F.sum(F.col("s") * F.col("x")).alias("m"))
-            .join(u0, "id")
-            .select("id", (F.lit(a) * F.col("m")
-                           + F.lit(1.0 - a) * F.col("x0")).alias("x"))
-            .localCheckpoint(eager=True)
-        )
-        p = p.localCheckpoint(eager=True)
-        last_p = p
+    (users = src namespace, products = dst namespace) after ``iters`` ≥
+    1 rounds, 6dp-rounded. The result projects the loop's last two
+    checkpointed states; every frame the kernel persisted is released
+    before it returns."""
+    e, m = colocate_edges_sized(
+        bip.select("src", "dst", F.col("weight").cast("double").alias("w")))
+    with sized_plan(e.sparkSession, m):
+        users, prods = _side(e, "src"), _side(e, "dst")
+        fwd = colocate_edges(
+            e.join(users.select(F.col("id").alias("src"),
+                                F.col("out_deg").alias("du")), "src")
+            .join(prods.select(F.col("id").alias("dst"),
+                               F.col("out_deg").alias("dp")), "dst")
+            .select("src", "dst",
+                    (F.col("w") / F.sqrt(F.col("du") * F.col("dp")))
+                    .alias("w")))
+        rev = colocate_edges(fwd.select(F.col("dst").alias("src"),
+                                        F.col("src").alias("dst"), "w"))
+        e.unpersist()
+        sides = [(fwd, prods), (rev, users)]
+        seen = []
+
+        def step(state: DataFrame, i: int) -> DataFrame:
+            edges, base = sides[i % 2]
+            seen.append(state)
+            return (
+                _contribs(edges, state, {"m": F.col("x")})
+                .join(base.hint("shuffle_hash"), "id")
+                .select("id", "out_deg", "x0",
+                        (F.lit(float(alpha)) * F.col("m")
+                         + F.lit(1.0 - alpha) * F.col("x0")).alias("x"))
+            )
+
+        u = iterate(users.withColumn("x", F.col("x0")), step,
+                    max_iter=2 * iters, checkpoint_every=1).state
+    for f in (fwd, rev, users, prods):
+        f.unpersist()
     return (
         u.select("id", F.round("x", 6).alias("birank"))
-        .unionAll(last_p.select("id", F.round("x", 6).alias("birank")))
+        .unionAll(seen[-1].select("id", F.round("x", 6).alias("birank")))
     )
+
+
+def _side(e: DataFrame, key: str) -> DataFrame:
+    """(id, out_deg, x0) for one side: its vertices under ``key``, their
+    weighted degree and their hash prior."""
+    d = e.groupBy(F.col(key).alias("id")).agg(F.sum("w").alias("out_deg"))
+    return d.join(vertex_priors(d), "id").select(
+        "id", "out_deg", F.col("prior").alias("x0")).persist()

@@ -47,7 +47,7 @@ def _linear_bp(edges: DataFrame, priors: DataFrame, *, coeff: float,
     ``b ← (prior − 0.5) + coeff · Σ_{u~v} [s(u,v) ·] b(u)`` over both
     directions of every edge. A ``sign`` column s weights each message
     (ZooBP's signed edges), the way a ``w`` edge column weights
-    ``pagerank._contribs``. The symmetric edges are laid out by
+    ``superstep._contribs``. The symmetric edges are laid out by
     ``colocate_edges_sized`` and the whole loop runs under
     ``sized_plan`` (AQE off)."""
     s = [] if sign is None else [sign.alias("s")]

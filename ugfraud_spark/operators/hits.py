@@ -1,4 +1,5 @@
-"""HITS hubs & authorities (Kleinberg) — standard web link-graph kernel.
+"""HITS hubs & authorities (Kleinberg) and eigenvector centrality —
+standard web link-graph kernels.
 
 Not in the reference (UGFraud's spectral scoring plays the analogous
 role via SVD — ``fBox.py:58``: the dominant singular triplet IS the HITS
@@ -8,113 +9,53 @@ link-graph engine over web pages. Synchronous supersteps:
     a_{t+1}(v) = Σ_{(u,v)∈E} h_t(u)      then a ← a / ‖a‖₂
     h_{t+1}(u) = Σ_{(u,v)∈E} a_{t+1}(v)  then h ← h / ‖h‖₂
 
-Fixed-iteration kernel mirrored by the unrolled DuckDB oracle; each
-half-step is one co-partitioned join + groupBy-sum plus one scalar agg
-for the norm (same plan shape as PageRank — see PLANS.md §2).
+Eigenvector centrality is the authority half-step iterated alone. Both
+are fixed-iteration kernels mirrored by the unrolled DuckDB oracles,
+and both run ``_l2_power``: every half-step is one ``iterate``
+superstep — the shared message step ``_contribs`` over the edge layout
+of its direction, joined onto that direction's vertex base for the
+next direction's out-degree (both sides are hash-partitioned on id at
+the sized width, so above one partition the join adds no exchange).
+The state is message-only: a vertex that receives no message has
+score exactly 0 and contributes nothing to the norm or the next step,
+so the |V| zero-fill join runs once, at the end. The L2 norm is observed on the raw messages inside
+the checkpoint job and divides the next half-step's contributions as a
+literal: one Spark job per half-step, AQE off.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .superstep import colocate_edges, colocate_edges_sized, sized_plan
+from .superstep import (
+    _contribs,
+    _vertex_base,
+    colocate_edges,
+    colocate_edges_sized,
+    iterate,
+    sized_plan,
+)
 
 
 def hits(edges: DataFrame, iters: int = 5) -> DataFrame:
     """edges(src, dst) directed → (id, hub, authority), L2-normalized.
-    The output is materialized inside the ``sized_plan`` scope (one
-    job), so its zero-fill joins run at the measured width too."""
+    Authorities follow the edges forward, hubs backward. The output is
+    materialized inside the ``sized_plan`` scope, and every frame the
+    kernel persisted is released before it returns."""
     fwd, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(fwd.sparkSession, m, adaptive_off=False):
-        return _hits_body(fwd, edges, iters).localCheckpoint(eager=True)
-
-
-def _hits_body(fwd: DataFrame, edges: DataFrame, iters: int) -> DataFrame:
-    rev = colocate_edges(edges.select(F.col("dst").alias("src"),
-                                      F.col("src").alias("dst")))
-    verts = (
-        fwd.select(F.col("src").alias("id"))
-        .unionAll(fwd.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition("id")
-        .persist()
-    )
-    verts.count()
-
-    def _propagate(edge_df: DataFrame, state_df: DataFrame,
-                   src_col: str, out_name: str) -> DataFrame:
-        msg = (
-            edge_df.join(
-                state_df.select(F.col("id").alias("src"),
-                                F.col(src_col).alias("x")).hint("shuffle_hash"),
-                "src",
-            )
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("x").alias(out_name))
-        )
-        return msg
-
-    if fwd.isEmpty():
-        raise ValueError("hits: empty edge set — hub/authority undefined "
-                         "(the L2 norms would be 0)")
-
-    # Message-only state between half-steps: a vertex that receives no
-    # message has score EXACTLY 0, contributes 0 to both the L2 norm
-    # (computed over the raw message rows, like the oracle's ar{t}/hr{t}
-    # CTEs) and the next propagation (join drops it = adding 0) — so the
-    # per-half-step |V| left-join back to the full vertex frame bought
-    # nothing and is done ONCE at the end instead. Per-dst sums keep the
-    # same terms in the same edge-cache probe order, so the output is
-    # bit-identical to the joined formulation. Saves 2 |V|-row
-    # shuffle-joins per iteration.
-    if iters < 1:  # degenerate: the pre-iteration all-ones state
-        return verts.select("id", F.lit(1.0).alias("hub"),
-                            F.lit(1.0).alias("authority"))
-
-    hub = verts.select("id", F.lit(1.0).alias("hub"))
-    auth = None
-    for i in range(iters):
-        # authorities from hubs (follow edges forward); the L2 norm rides
-        # along as a crossJoin'd 1-row subframe so the superstep stays lazy
-        # (no blocking driver collect per half-step). persist() each
-        # propagation: its subtree feeds BOTH the norm agg and the next
-        # propagation, and without the cache Spark evaluates the |E|-join
-        # twice per half-step (measured 21-26s → 9-13s for 5 iters at
-        # sf0.1; lazy cache preserves partitioning)
-        a = _propagate(fwd, hub, "hub", "a_raw").persist()
-        a_n = a.agg(F.sqrt(F.sum(F.col("a_raw") ** 2)).alias("_n"))
-        auth = a.crossJoin(a_n).select(
-            "id", (F.col("a_raw") / F.col("_n")).alias("auth")
-        )
-        # hubs from authorities (follow edges backward)
-        h = _propagate(rev, auth, "auth", "h_raw").persist()
-        h_n = h.agg(F.sqrt(F.sum(F.col("h_raw") ** 2)).alias("_n"))
-        hub = (
-            h.crossJoin(h_n)
-            .select("id", (F.col("h_raw") / F.col("_n")).alias("hub"))
-            .localCheckpoint(eager=True)
-        )
-        if i == iters - 1:
-            # the final output still needs this iteration's auth frame
-            # after `a` is unpersisted below — pin it now
-            auth = auth.localCheckpoint(eager=True)
-        # the eager localCheckpoint above materialized both half-steps —
-        # this iteration's propagation frames are dead; unpersist NOW so
-        # executor storage stays constant in iters instead of linear
-        a.unpersist()
-        h.unpersist()
-
-    # one zero-fill join at the end instead of two per iteration
-    return (
-        verts.join(hub, "id", "left")
-        .join(auth, "id", "left")
-        .select(
-            "id",
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-            F.coalesce("auth", F.lit(0.0)).alias("authority"),
-        )
-    )
+    with sized_plan(fwd.sparkSession, m):
+        rev = colocate_edges(fwd.select(F.col("dst").alias("src"),
+                                        F.col("src").alias("dst")))
+        out_b = _vertex_base(fwd).persist()
+        in_b = _vertex_base(rev).persist()
+        try:
+            return _l2_power(
+                out_b, {"authority": (fwd, in_b), "hub": (rev, out_b)}, iters
+            ).select("id", "hub", "authority")
+        finally:
+            for f in (fwd, rev, out_b, in_b):
+                f.unpersist()
 
 
 def eigenvector_centrality(edges: DataFrame, iters: int = 5) -> DataFrame:
@@ -122,51 +63,55 @@ def eigenvector_centrality(edges: DataFrame, iters: int = 5) -> DataFrame:
     x_{t+1} = Aᵀx_t / ‖Aᵀx_t‖₂ from x_0 ≡ 1 — the in-link prestige
     score (Bonacich): being linked by high-score pages is worth more,
     with no damping (PageRank) and no degree normalization (SALSA).
-    Exactly the HITS authority half-step iterated alone; same
-    message-only state discipline (a vertex receiving no message is an
-    exact 0 contributing nothing to the norm or the next step — the
-    |V| zero-fill join happens ONCE at the end), one co-partitioned
-    SpMV + one scalar norm agg per iteration. Like ``hits``, the output
-    is materialized inside the ``sized_plan`` scope."""
+    ``hits``' authority half-step iterated alone; materialized and
+    released like ``hits``."""
     fwd, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(fwd.sparkSession, m, adaptive_off=False):
-        return _eigenvector_body(fwd, iters).localCheckpoint(eager=True)
+    with sized_plan(fwd.sparkSession, m):
+        base = _vertex_base(fwd).persist()
+        try:
+            return _l2_power(base, {"eigen": (fwd, base)}, iters)
+        finally:
+            fwd.unpersist()
+            base.unpersist()
 
 
-def _eigenvector_body(fwd: DataFrame, iters: int) -> DataFrame:
-    verts = (
-        fwd.select(F.col("src").alias("id"))
-        .unionAll(fwd.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition("id")
-        .persist()
-    )
-    verts.count()
-    if fwd.isEmpty():
-        raise ValueError("eigenvector_centrality: empty edge set — the "
-                         "L2 norm would be 0")
+def _l2_power(verts: DataFrame, sides: dict[str, tuple[DataFrame, DataFrame]],
+              iters: int) -> DataFrame:
+    """(id, *sides) over ``verts`` (id, out_deg), materialized: ``iters``
+    rounds of one L2-normalized half-step per named ``(edges, base)``
+    of ``sides``, from x ≡ 1. Half-step i sends the previous
+    half-step's x / ‖x‖₂ along ``edges`` and joins the raw sums onto
+    ``base``, whose ``out_deg`` is the next direction's. A side's score
+    is its last half-step's normalized x, 0 for a vertex that got no
+    message, and 1 everywhere when ``iters`` is 0."""
+    if verts.count() == 0:  # the count also materializes the base
+        raise ValueError("empty edge set — the L2 norm would be 0")
+    k, pairs = len(sides), list(sides.values())
+    x0 = verts.withColumn("x", F.lit(1.0))
+    seen = [x0] * (k - 1)
+    norms: list[Observation] = []
 
-    x = verts.select("id", F.lit(1.0).alias("x"))
-    for i in range(iters):
-        m = (
-            fwd.join(
-                x.select(F.col("id").alias("src"), "x")
-                .hint("shuffle_hash"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("x").alias("raw"))
-            .persist()  # feeds BOTH the norm agg and the normalize
-        )
-        n = m.agg(F.sqrt(F.sum(F.col("raw") ** 2)).alias("_n"))
-        x = (
-            m.crossJoin(n)
-            .select("id", (F.col("raw") / F.col("_n")).alias("x"))
-            .localCheckpoint(eager=True)
-        )
-        m.unpersist()
-    return (
-        verts.join(x, "id", "left")
-        .select("id", F.coalesce("x", F.lit(0.0)).alias("eigen"))
-    )
+    def step(state: DataFrame, i: int) -> DataFrame:
+        edges, base = pairs[i % k]
+        n = norms[-1].get["n"] if norms else 1.0
+        norms.append(Observation())
+        seen.append(state)
+        msgs = _contribs(edges, state, {"x": F.col("x") / F.lit(n)})
+        # observed before the join, so the norm sums the raw messages in
+        # the message frame's row order (the join streams that side)
+        return msgs.observe(
+            norms[-1], F.sqrt(F.sum(F.col("x") ** 2)).alias("n")
+        ).join(base.hint("shuffle_hash"), "id")
+
+    res = iterate(x0, step, max_iter=k * iters, checkpoint_every=1)
+    out = verts.select("id")
+    for name, x, n in zip(sides, (seen + [res.state])[-k:],
+                          ([1.0] * k + [o.get["n"] for o in norms])[-k:]):
+        out = out.join(x.select("id", (F.col("x") / F.lit(n)).alias(name)),
+                       "id", "left")
+    return out.select(
+        "id", *[F.coalesce(c, F.lit(0.0)).alias(c) for c in sides]
+    ).localCheckpoint(eager=True)
 
 
 # kcore: below this per-round casualty count the edge filter switches

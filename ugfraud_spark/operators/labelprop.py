@@ -23,7 +23,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .superstep import colocate_edges, colocate_edges_sized, iterate, sized_plan
+from .superstep import colocate_edges_sized, iterate, sized_plan
 
 
 def lpa(edges_ab: DataFrame, iters: int = 4) -> DataFrame:
@@ -242,34 +242,41 @@ def wl_refinement(edges_ab: DataFrame, iters: int = WL_ITERS) -> DataFrame:
     partitioning dependence; md5 is the house portable hash. Scale
     shape per round: one edge⋈state join + one per-vertex sorted
     collect_list (bounded by degree — the same per-vertex state any
-    WL implementation must hold) + a narrow md5 map; class sizes are
-    one extra groupBy at the end."""
-    sym = colocate_edges(
+    WL implementation must hold) + a narrow md5 map, one ``iterate``
+    superstep per round at the sized width; the class-size join at the
+    end is materialized inside the ``sized_plan`` scope."""
+    sym, m = colocate_edges_sized(
         edges_ab.select(F.col("a").alias("src"), F.col("b").alias("dst"))
         .unionAll(edges_ab.select(F.col("b").alias("src"),
                                   F.col("a").alias("dst")))
     )
-    deg = (
-        sym.groupBy(F.col("src").alias("id"))
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    state = deg.select("id", F.col("d").cast("string").alias("c"))
-    for _ in range(iters):
-        state = (
-            sym.join(state.select(F.col("id").alias("src"),
-                                  F.col("c")).hint("shuffle_hash"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.array_sort(F.collect_list("c")).alias("nc"))
-            .join(state, "id")
-            .select(
-                "id",
-                F.md5(F.concat_ws("|", F.array(F.col("c")),
-                                  F.col("nc"))).alias("c"),
+    with sized_plan(sym.sparkSession, m):
+        state0 = (
+            sym.groupBy(F.col("src").alias("id"))
+            .agg(F.count(F.lit(1)).cast("string").alias("c"))
+        )
+
+        def step(state: DataFrame, _i: int) -> DataFrame:
+            return (
+                sym.join(state.select(F.col("id").alias("src"), "c")
+                         .hint("shuffle_hash"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg(F.array_sort(F.collect_list("c")).alias("nc"))
+                .join(state.hint("shuffle_hash"), "id")
+                .select(
+                    "id",
+                    F.md5(F.concat_ws("|", F.array(F.col("c")),
+                                      F.col("nc"))).alias("c"),
+                )
             )
+
+        state = iterate(state0, step, max_iter=iters,
+                        checkpoint_every=1).state
+        sizes = state.groupBy("c").agg(F.count(F.lit(1)).alias("class_size"))
+        out = (
+            state.join(sizes, "c")
+            .select("id", F.col("c").alias("wl_color"), "class_size")
             .localCheckpoint(eager=True)
         )
-    sizes = state.groupBy("c").agg(F.count(F.lit(1)).alias("class_size"))
-    return (
-        state.join(sizes, "c")
-        .select("id", F.col("c").alias("wl_color"), "class_size")
-    )
+    sym.unpersist()
+    return out

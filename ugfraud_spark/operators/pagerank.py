@@ -5,7 +5,8 @@ Every kernel here runs one superstep, written once:
     messages   = groupBy(dst).sum(edges ⋈ pruned state on src)
     next state = update(base ⟕ messages on id)
 
-``_contribs`` is the message step (SURVEY J2, ``A·x``): the state is
+``_contribs`` (in ``superstep``, shared with HITS, SALSA and BiRank) is
+the message step (SURVEY J2, ``A·x``): the state is
 pruned to vertices with out-edges, each keeps its per-source
 contribution (``value/out_deg`` for PageRank, ``value`` for Katz, one
 column per topic for ``topic_ppr``; a ``w`` edge column, as in
@@ -42,52 +43,13 @@ from pyspark.sql import functions as F
 
 from .superstep import (
     SuperstepResult,
+    _contribs,
+    _vertex_base,
     colocate_edges_sized,
     iterate,
     l1_residual,
     sized_plan,
 )
-
-
-def _vertex_base(edges: DataFrame) -> DataFrame:
-    """(id, out_deg) for every vertex — src occurrences counted, dst-only
-    vertices carried with out_deg NULL — via a single shuffle: union the
-    endpoint columns with an is_src marker, one groupBy(id) with partial
-    aggregation. Output is hash-partitioned on id, exactly what the
-    per-superstep state joins need. A ``w`` edge column is summed
-    instead of counted: out_deg is then the vertex's out-weight."""
-    one, zero = ((F.col("w"), F.lit(0.0)) if "w" in edges.columns
-                 else (F.lit(1), F.lit(0)))
-    marked = edges.select(F.col("src").alias("id"), one.alias("is_src")).unionAll(
-        edges.select(F.col("dst").alias("id"), zero.alias("is_src"))
-    )
-    counted = marked.groupBy("id").agg(F.sum("is_src").alias("_od"))
-    return counted.select(
-        "id", F.when(F.col("_od") > 0, F.col("_od")).alias("out_deg")
-    )
-
-
-def _contribs(edges: DataFrame, state: DataFrame,
-              sums: dict[str, Column]) -> DataFrame:
-    """The shared message step: (id, *sums) with
-    ``sums[k](v) = Σ_{(u,v)∈E} [w(u,v) ·] sums[k](u)``.
-
-    ``sums`` maps each message column to its per-source contribution,
-    an expression over a state row. Vertices with a NULL ``out_deg``
-    have no out-edges; pruning them is plan-only (the inner join would
-    drop them). The state side is hinted ``shuffle_hash`` against the
-    colocated edges, and one ``groupBy(dst)`` with map-side partial
-    aggregation sums every message column; a ``w`` edge column weights
-    each message."""
-    src = state.where(F.col("out_deg").isNotNull()).select(
-        F.col("id").alias("src"), *[c.alias(k) for k, c in sums.items()])
-    w = F.col("w") if "w" in edges.columns else None
-    return (
-        edges.join(src.hint("shuffle_hash"), "src")
-        .groupBy(F.col("dst").alias("id"))
-        .agg(*[F.sum(F.col(k) if w is None else F.col(k) * w).alias(k)
-               for k in sums])
-    )
 
 
 def _rank_contribs(edges: DataFrame) -> Callable[[DataFrame], DataFrame]:
@@ -414,7 +376,7 @@ def pagerank_dangling(
     simplification, closed here as a first-class oracle-gated
     variant). One extra scalar aggregation per superstep (the dangling
     mass), carried as a crossJoin'd 1-row frame so the superstep stays
-    lazy — the same trick as the HITS norms."""
+    lazy."""
     edges, m = colocate_edges_sized(edges.select("src", "dst"))
     with sized_plan(edges.sparkSession, m):
         base = _vertex_base(edges).persist()

@@ -24,12 +24,16 @@ nothing else (the known closed form — within one connected bipartite
 support component the stationary authority weight is proportional to
 in-degree — is pinned as a property test).
 
-Plan shape at scale: the edge frames are hash-partitioned once on the
-message-join key (``colocate_edges``) and every per-iteration join
-probes that cached layout; state frames are |V|-sized and
-localCheckpoint'ed per round to keep lineage flat. No collect, no
-driver loop over data — iteration count is a fixed hyperparameter the
-DuckDB oracle unrolls step-for-step.
+Plan shape: each chain is ``iterate`` over half-step supersteps —
+the shared message step ``_contribs`` sending x / out_deg (the
+PageRank contribution) over the edge layout of its direction, joined
+onto that direction's vertex base for the next direction's out-degree.
+The edge frames are hash-partitioned once on the message-join key and
+the two vertex bases (out- and in-degree, from ``_vertex_base``) on id,
+all at the sized width, so only the message side shuffles. One Spark
+job per half-step, AQE off; no collect inside the loop — the iteration
+count is a fixed hyperparameter the DuckDB oracle unrolls step for
+step.
 """
 
 from __future__ import annotations
@@ -37,7 +41,14 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .superstep import colocate_edges
+from .superstep import (
+    _contribs,
+    _vertex_base,
+    colocate_edges,
+    colocate_edges_sized,
+    iterate,
+    sized_plan,
+)
 
 
 def salsa(edges: DataFrame, iters: int = 5) -> DataFrame:
@@ -45,67 +56,49 @@ def salsa(edges: DataFrame, iters: int = 5) -> DataFrame:
 
     Authority/hub scores are each a probability distribution over the
     vertices with in-/out-degree > 0 (L1 = 1); vertices outside a
-    side's support get exactly 0.0 for that side.
+    side's support get exactly 0.0 for that side. The output is
+    materialized inside the ``sized_plan`` scope, and every frame the
+    kernel persisted is released before it returns.
     """
-    fwd = colocate_edges(edges.select("src", "dst"))
-    rev = colocate_edges(edges.select(F.col("dst").alias("src"),
-                                      F.col("src").alias("dst")))
-
-    # per-vertex degree dims double as the two sides' support sets
-    ind = (rev.groupBy(F.col("src").alias("id"))
-           .agg(F.count(F.lit(1)).alias("ind")).persist())
-    outd = (fwd.groupBy(F.col("src").alias("id"))
-            .agg(F.count(F.lit(1)).alias("outd")).persist())
-    verts = (
-        fwd.select(F.col("src").alias("id"))
-        .unionAll(fwd.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition("id")
-        .persist()
-    )
-    verts.count()
-
-    def _step(edge_df: DataFrame, state: DataFrame, deg: DataFrame,
-              deg_col: str) -> DataFrame:
-        # one SpMV half-step: divide state by its side's degree, push
-        # along edge_df, sum per destination. The degree join is
-        # |support|-sized and co-partitioned on id.
-        x = (
-            state.join(deg, "id")
-            .select(F.col("id").alias("src"),
-                    (F.col("x") / F.col(deg_col)).alias("x"))
-        )
-        return (
-            edge_df.join(x.hint("shuffle_hash"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg(F.sum("x").alias("x"))
-        )
-
-    # uniform init over each side's support; the 1-row count frames ride
-    # along as crossJoins so the init stays lazy (no driver collect)
-    na = ind.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    nh = outd.agg(F.count(F.lit(1)).cast("double").alias("_n"))
-    auth = ind.crossJoin(na).select("id", (F.lit(1.0) / F.col("_n")).alias("x"))
-    hub = outd.crossJoin(nh).select("id", (F.lit(1.0) / F.col("_n")).alias("x"))
-
-    for _ in range(iters):
-        # authority chain: backward (÷ind) then forward (÷outd)
-        auth = _step(fwd, _step(rev, auth, ind, "ind"), outd, "outd")
+    fwd, m = colocate_edges_sized(edges.select("src", "dst"))
+    with sized_plan(fwd.sparkSession, m):
+        rev = colocate_edges(fwd.select(F.col("dst").alias("src"),
+                                        F.col("src").alias("dst")))
+        # (id, out_deg): out- resp. in-degree, NULL outside the support
+        out_b = _vertex_base(fwd).persist()
+        in_b = _vertex_base(rev).persist()
+        # authority chain: backward (÷ind) then forward (÷outd);
         # hub chain: forward (÷outd) then backward (÷ind)
-        hub = _step(rev, _step(fwd, hub, outd, "outd"), ind, "ind")
-        # flat lineage; eager so the old state's plan is dropped now
-        auth = auth.localCheckpoint(eager=True)
-        hub = hub.localCheckpoint(eager=True)
-
-    out = (
-        verts.join(hub.withColumnRenamed("x", "hub"), "id", "left")
-        .join(auth.withColumnRenamed("x", "authority"), "id", "left")
-        .select(
-            "id",
-            F.coalesce("hub", F.lit(0.0)).alias("hub"),
-            F.coalesce("authority", F.lit(0.0)).alias("authority"),
+        auth = _walk(in_b, [(rev, out_b), (fwd, in_b)], iters)
+        hub = _walk(out_b, [(fwd, in_b), (rev, out_b)], iters)
+        out = (
+            out_b.join(hub.withColumnRenamed("x", "hub"), "id", "left")
+            .join(auth.withColumnRenamed("x", "authority"), "id", "left")
+            .select(
+                "id",
+                F.coalesce("hub", F.lit(0.0)).alias("hub"),
+                F.coalesce("authority", F.lit(0.0)).alias("authority"),
+            )
+            .localCheckpoint(eager=True)
         )
-    )
-    ind.unpersist()
-    outd.unpersist()
+    for f in (fwd, rev, out_b, in_b):
+        f.unpersist()
     return out
+
+
+def _walk(base: DataFrame, sides: list[tuple[DataFrame, DataFrame]],
+          iters: int) -> DataFrame:
+    """One chain: ``2·iters`` half-steps alternating over ``sides``
+    (``(edges, next base)`` pairs) from the uniform distribution over
+    ``base``'s support (its non-NULL ``out_deg``); returns (id, x)."""
+    x0 = base.where(F.col("out_deg").isNotNull())
+    x0 = x0.withColumn("x", F.lit(1.0) / F.lit(float(x0.count())))
+
+    def step(state: DataFrame, i: int) -> DataFrame:
+        edges, nxt = sides[i % 2]
+        return _contribs(
+            edges, state, {"x": F.col("x") / F.col("out_deg")}
+        ).join(nxt.hint("shuffle_hash"), "id")
+
+    res = iterate(x0, step, max_iter=2 * iters, checkpoint_every=1)
+    return res.state.select("id", "x")

@@ -34,11 +34,16 @@ Scale concerns handled here rather than in each algorithm:
   rows once (``colocate_edges_sized`` / ``layout_width``), runs its
   whole body, loop and final shuffle included, inside
   ``sized_plan(spark, m)``, and returns only materialized frames. AQE
-  is off for the hinted co-partitioned join loops (per-stage
-  re-planning there is pure driver overhead: pagerank 2.6 s → 2.2 s,
-  label_propagation 3.3 s → 2.6 s on the sf0.1 suite) and kept on for
-  broadcast-frontier and peeling loops, which it speeds up (hits
-  12.2 s → 6.7 s, kcore 5.1 s → 1.6 s, bfs_hops 4.0 s → 3.2 s).
+  is off for the hinted co-partitioned join loops — the PageRank
+  family, HITS, eigenvector centrality, SALSA, BiRank, label
+  propagation — where per-stage re-planning is pure driver overhead
+  (pagerank 2.6 s → 2.2 s, label_propagation 3.3 s → 2.6 s on the
+  sf0.1 suite). It is kept on for the broadcast-frontier and peeling
+  loops and SpEagle's |E|-sized state, which it speeds up (kcore
+  5.1 s → 1.6 s, bfs_hops 4.0 s → 3.2 s).
+- **One message step**: ``_contribs`` (edges ⋈ state on src,
+  ``groupBy(dst).sum``) is the SpMV every link-analysis kernel sends
+  its messages through, over a vertex base from ``_vertex_base``.
 """
 
 from __future__ import annotations
@@ -50,7 +55,7 @@ from contextlib import contextmanager
 from dataclasses import dataclass, field
 from typing import Callable
 
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import Column, DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 
@@ -91,13 +96,14 @@ def sized_plan(spark: SparkSession, shuffle_partitions: int,
     suite pagerank 2.6 s → 2.2 s, label_propagation 3.3 s → 2.6 s).
 
     ``adaptive_off=False`` scopes only the width and keeps AQE, for
-    loops that lean on broadcast frontiers, per-round 1-row-agg
-    crossJoins or localCheckpointed intermediates (HITS, k-core, BFS,
-    the Fraudar peel). They run faster with AQE's partition coalescing:
-    with AQE off at sf0.1, hits 6.7 s → 12.2 s, kcore 1.6 s → 5.1 s,
-    bfs_hops 3.2 s → 4.0 s. Their width should still track the data
-    (A/B at sf0.1, AQE on: hits 6.1-7.6 s at 32 partitions vs
-    4.1-5.1 s at 10).
+    loops that lean on broadcast frontiers or anti-joins, or whose
+    state is |E|-sized (BFS and SSSP, k-core and coreness, the Fraudar
+    peel, SpEagle). They run faster with AQE's partition coalescing:
+    with AQE off at sf0.1, kcore 1.6 s → 5.1 s, bfs_hops 3.2 s →
+    4.0 s. Their width should still track the data. HITS left this
+    list when its per-half-step norm became an observation inside the
+    checkpoint job instead of a crossJoin'd 1-row aggregate: its
+    half-steps are now the hinted co-partitioned join shape.
 
     Assumes a single-threaded driver: the scope sets SESSION-global
     conf, so two queries running concurrently on one SparkSession
@@ -306,6 +312,49 @@ def iterate(
         residuals=residuals,
         wall_seconds=time.time() - t0,
         metrics=metrics,
+    )
+
+
+def _vertex_base(edges: DataFrame) -> DataFrame:
+    """(id, out_deg) for every vertex — src occurrences counted, dst-only
+    vertices carried with out_deg NULL — via a single shuffle: union the
+    endpoint columns with an is_src marker, one groupBy(id) with partial
+    aggregation. Output is hash-partitioned on id, exactly what the
+    per-superstep state joins need. A ``w`` edge column is summed
+    instead of counted: out_deg is then the vertex's out-weight."""
+    one, zero = ((F.col("w"), F.lit(0.0)) if "w" in edges.columns
+                 else (F.lit(1), F.lit(0)))
+    marked = edges.select(F.col("src").alias("id"), one.alias("is_src")).unionAll(
+        edges.select(F.col("dst").alias("id"), zero.alias("is_src"))
+    )
+    counted = marked.groupBy("id").agg(F.sum("is_src").alias("_od"))
+    return counted.select(
+        "id", F.when(F.col("_od") > 0, F.col("_od")).alias("out_deg")
+    )
+
+
+def _contribs(edges: DataFrame, state: DataFrame,
+              sums: dict[str, Column]) -> DataFrame:
+    """The shared message step of the link-analysis kernels (the
+    PageRank family, HITS, eigenvector centrality, SALSA, BiRank):
+    (id, *sums) with
+    ``sums[k](v) = Σ_{(u,v)∈E} [w(u,v) ·] sums[k](u)``.
+
+    ``sums`` maps each message column to its per-source contribution,
+    an expression over a state row. Vertices with a NULL ``out_deg``
+    have no out-edges; pruning them is plan-only (the inner join would
+    drop them). The state side is hinted ``shuffle_hash`` against the
+    colocated edges, and one ``groupBy(dst)`` with map-side partial
+    aggregation sums every message column; a ``w`` edge column weights
+    each message."""
+    src = state.where(F.col("out_deg").isNotNull()).select(
+        F.col("id").alias("src"), *[c.alias(k) for k, c in sums.items()])
+    w = F.col("w") if "w" in edges.columns else None
+    return (
+        edges.join(src.hint("shuffle_hash"), "src")
+        .groupBy(F.col("dst").alias("id"))
+        .agg(*[F.sum(F.col(k) if w is None else F.col(k) * w).alias(k)
+               for k in sums])
     )
 
 

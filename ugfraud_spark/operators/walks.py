@@ -226,7 +226,7 @@ def negative_samples(edges: DataFrame, k: int = 3, oversample: int = 4,
     Distributed shape: proposal j ∈ [0, k·oversample) for source s is
     the counter hash scramble(s·A + j·B + seed) mod lim, where lim =
     max vertex id + 1 (one scalar aggregate, carried as a crossJoin'd
-    1-row frame so the plan stays lazy — the HITS-norm trick). A
+    1-row frame so the plan stays lazy). A
     proposal survives if it is a REAL vertex (semi-join against the
     vertex set — the id space has holes), isn't s itself, and isn't a
     true edge (anti-join on (src, dst)); the first k survivors by
