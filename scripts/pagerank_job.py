@@ -59,12 +59,10 @@ def main() -> None:
         # state, laid out and scoped exactly as a fresh run
         from pyspark.sql import functions as F
 
-        from ugfraud_spark.operators.superstep import (colocate_edges_sized,
-                                                       sized_plan)
+        from ugfraud_spark.operators.superstep import sized_layout
 
-        e, m = colocate_edges_sized(edges.select("src", "dst"))
-        with sized_plan(spark, m):
-            base = pagerank._vertex_base(e).persist()
+        with sized_layout(edges.select("src", "dst")) as (e, _, keep):
+            base = keep(pagerank._vertex_base(e).persist())
             n = base.count()
             res = pagerank._propagate(
                 base, start_state, pagerank._rank_contribs(e),

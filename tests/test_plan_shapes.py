@@ -111,8 +111,9 @@ def test_block_spmv_edge_side_stays_put(spark):
     WITHOUT an Exchange above them: the one-time build repartitions on
     block_id and persists, so EnsureRequirements sees the partitioning
     and only the state-sized routed side shuffles each superstep. (A
-    localCheckpoint here scans as ExistingRDD[UnknownPartitioning] and
-    silently re-shuffles the |E| payload every iteration.)"""
+    localCheckpoint taken with AQE on scans as
+    ExistingRDD[UnknownPartitioning] and silently re-shuffles the |E|
+    payload every iteration.)"""
     from ugfraud_spark.operators.adjacency import (
         build_adjacency_blocks,
         spmv_arrow,
@@ -341,3 +342,27 @@ def test_host_mirror_pairs_plan_equi_join(spark):
     plan = _plan(host_mirror_pairs(docs))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+
+
+@pytest.mark.parametrize("aqe", ["false", "true"])
+def test_local_checkpoint_keeps_partitioning_only_with_aqe_off(spark, aqe):
+    """A local checkpoint keeps its hash partitioning only when it is
+    taken with AQE off: a ``groupBy(k)`` over ``repartition(4, k)
+    .localCheckpoint()`` plans no Exchange with AQE off and one with
+    AQE on (the checkpoint then scans as UnknownPartitioning). The
+    sized kernels' layouts run in both modes, which is why they
+    persist (``superstep.colocate_edges``); a Spark upgrade that
+    changes either half fails here."""
+    keys = ("spark.sql.adaptive.enabled", "spark.sql.shuffle.partitions")
+    prev = [spark.conf.get(k) for k in keys]
+    try:
+        spark.conf.set(keys[0], aqe)
+        spark.conf.set(keys[1], "4")
+        ck = (spark.range(1000).select((F.col("id") % 37).alias("k"))
+              .repartition(4, "k").localCheckpoint(eager=True))
+        plan = (ck.groupBy("k").count()._jdf.queryExecution()
+                .executedPlan().toString())
+    finally:
+        for k, v in zip(keys, prev):
+            spark.conf.set(k, v)
+    assert ("Exchange" in plan) == (aqe == "true"), plan

@@ -4,8 +4,10 @@ These pin the NEW mechanisms (not results — every consumer query stays
 oracle-gated): the sketch-partition sizing rule, the measured-size
 colocate variant, the conf restore discipline of ``sized_plan`` (a
 raise inside a loop must never leak AQE-off or a shrunken shuffle
-width into the rest of the session — the ADVICE-r3 failure mode), and
-that nothing a sized kernel returns runs outside its scope."""
+width into the rest of the session — the ADVICE-r3 failure mode),
+that nothing a sized kernel returns runs outside its scope, and that
+the scope releases what the kernel cached and nothing the caller
+cached."""
 
 from __future__ import annotations
 
@@ -19,6 +21,7 @@ from ugfraud_spark.operators import (bfs, birank, components, fraudar, gang,
 from ugfraud_spark.operators.linalg import sketch_partitions
 from ugfraud_spark.operators.superstep import (
     LAYOUT_ROWS_PER_PARTITION,
+    _vertex_base,
     colocate_edges_sized,
     sized_plan,
 )
@@ -91,15 +94,37 @@ def test_scoped_plan_contexts_restore_on_raise(spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == n0
 
 
-@pytest.mark.parametrize("kernel", [hits.hits, hits.eigenvector_centrality])
-def test_kernel_raise_restores_conf(spark, kernel):
-    # the empty-edge ValueError is raised inside the kernel's sized_plan
+def _cached(spark) -> int:
+    return spark._jsparkSession.sharedState().cacheManager().cachedData().size()
+
+
+RAISING = {
+    # the empty-edge ValueError is raised inside the kernel's scope,
+    # after the edge layout is cached
+    "hits": lambda spark: hits.hits(
+        spark.createDataFrame([], "src long, dst long")),
+    "eigenvector_centrality": lambda spark: hits.eigenvector_centrality(
+        spark.createDataFrame([], "src long, dst long")),
+    # no seed in the graph: raised after the layout and the kept vertex
+    # base are cached
+    "personalized_pagerank": lambda spark: pagerank.personalized_pagerank(
+        spark.createDataFrame([(1, 2), (2, 3)], "src long, dst long"),
+        spark.createDataFrame([(99,)], "id long")),
+}
+
+
+@pytest.mark.parametrize("name", sorted(RAISING))
+def test_kernel_raise_restores_conf(spark, name):
+    """A kernel that raises inside its scope restores the width, AQE
+    and the session's cache as it found them."""
     aqe0 = spark.conf.get("spark.sql.adaptive.enabled")
     n0 = spark.conf.get("spark.sql.shuffle.partitions")
+    cached0 = _cached(spark)
     with pytest.raises(ValueError):
-        kernel(spark.createDataFrame([], "src long, dst long"))
+        RAISING[name](spark)
     assert spark.conf.get("spark.sql.shuffle.partitions") == n0
     assert spark.conf.get("spark.sql.adaptive.enabled") == aqe0
+    assert _cached(spark) == cached0
 
 
 def _tiny_inputs(spark) -> SimpleNamespace:
@@ -177,17 +202,68 @@ def test_kernel_output_runs_at_sized_width(spark, name):
     assert jobs
     tasks = [tracker.getStageInfo(sid).numTasks
              for j in jobs for sid in tracker.getJobInfo(j).stageIds]
-    assert 8 not in tasks, tasks
+    assert max(tasks) < 8, tasks
 
 
-@pytest.mark.parametrize("name", ["hits", "eigenvector_centrality", "salsa",
-                                  "birank", "wl_refinement"])
+PAGERANK_FAMILY = {
+    "pagerank": KERNELS["pagerank"],
+    "personalized_pagerank": lambda t: pagerank.personalized_pagerank(
+        t.e, t.seeds, max_iter=3).state,
+    "teleport_pagerank": lambda t: pagerank.teleport_pagerank(
+        t.e, t.seeds.withColumn("w", F.lit(1.0)), max_iter=3).state,
+    "pagerank_from": lambda t: pagerank.pagerank_from(
+        t.e, t.seeds.withColumn("value", F.lit(1.0)), max_iter=3).state,
+    "topic_ppr": lambda t: pagerank.topic_ppr(
+        t.e, t.seeds.withColumn("topic", F.lit(0)), n_topics=1,
+        max_iter=3).state,
+    "pagerank_dangling": lambda t: pagerank.pagerank_dangling(
+        t.e, max_iter=3).state,
+    "katz": lambda t: pagerank.katz(t.e, max_iter=3).state,
+    "pagerank_blocks": lambda t: pagerank.pagerank_blocks(
+        t.e, max_iter=3).state,
+    "pagerank_weighted": lambda t: pagerank.pagerank_weighted(
+        t.e.withColumn("weight", F.col("src") % 3 + 1), max_iter=3).state,
+}
+
+
+@pytest.mark.parametrize("name", sorted(KERNELS.keys() | PAGERANK_FAMILY.keys()))
 def test_kernel_releases_what_it_persisted(spark, name):
-    """A kernel unpersists every frame it persisted (colocated edges,
-    vertex bases) before it returns: one call leaves the session's
-    cache as it found it."""
-    cache = spark._jsparkSession.sharedState().cacheManager()
+    """A kernel's scope releases every frame it persisted (edge
+    layouts, vertex bases, CSR blocks, per-round deltas) when it
+    returns: one call on a fresh input leaves the session's cache as
+    it found it, and the output still reads."""
+    kernel = KERNELS.get(name) or PAGERANK_FAMILY[name]
     inputs = _tiny_inputs(spark)
-    before = cache.cachedData().size()
-    assert KERNELS[name](inputs).count() > 0
-    assert cache.cachedData().size() == before
+    before = _cached(spark)
+    out = kernel(inputs)
+    assert _cached(spark) == before
+    assert out.count() > 0
+
+
+def test_kernel_keeps_what_the_caller_cached(spark):
+    """The cache matches plans, not frame objects: a frame the caller
+    cached before the call survives it, also when the kernel's own
+    ``persist()`` of an equal plan was a no-op. Here the caller holds
+    the input, pagerank's exact edge layout (one partition, the width
+    the tiny input sizes to) and its vertex base."""
+    t = _tiny_inputs(spark)
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", "1")
+    try:
+        layout = t.e.select("src", "dst").repartition(1, "src")
+        mine = [t.e.persist(), layout.persist(),
+                _vertex_base(layout).persist()]
+        for f in mine:
+            f.count()
+        before = _cached(spark)
+        ranks = pagerank.pagerank(t.e, max_iter=3).state
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+    try:
+        assert _cached(spark) == before
+        for f in mine:
+            assert f.storageLevel.useMemory, f.storageLevel
+        assert ranks.count() == 40
+    finally:
+        for f in reversed(mine):
+            f.unpersist()

@@ -1,6 +1,7 @@
 """Superstep loop fixed costs: Spark jobs per superstep, residuals
 observed inside the checkpoint job (PageRank's l1, connected
-components' Σlbl, SpEagle's Σ|Δmsg|), one job per link-analysis
+components' Σlbl, SpEagle's Σ|Δmsg|, ``pagerank_dangling``'s
+dangling mass), one job per link-analysis
 half-step (HITS, eigenvector centrality, SALSA, BiRank), per-step
 metrics, and the CSR-block cogroup's executed width.
 
@@ -16,7 +17,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from ugfraud_spark.operators import (adjacency, birank, components, hits,
-                                    pagerank, salsa, speagle)
+                                    pagerank, salsa, speagle, superstep)
 from ugfraud_spark.operators.superstep import (
     LAYOUT_ROWS_PER_PARTITION,
     l1_residual,
@@ -83,6 +84,40 @@ def test_converging_metrics_carry_residual_and_layout(spark):
     assert [m["residual"] for m in res.metrics] == res.residuals
     assert all(m["num_partitions"] >= 1 and m["aqe"] is False
                for m in res.metrics)
+
+
+def _dangling_edges(spark):
+    # dst 200..204 are never a src: their mass dangles every superstep
+    return _skewed_edges(spark).unionAll(spark.range(5).select(
+        F.col("id").alias("src"), (F.col("id") + 200).alias("dst")))
+
+
+@pytest.mark.parametrize("tol", [None, 1e-15])
+def test_pagerank_dangling_runs_one_job_per_superstep(spark, monkeypatch,
+                                                      tol):
+    """The dangling mass is observed inside the checkpoint job and read
+    as a literal by the next superstep: no side job per superstep."""
+    jobs = _loop_jobs(monkeypatch, spark, f"test-dangling-loop-{tol}")
+    res = pagerank.pagerank_dangling(_dangling_edges(spark), max_iter=4,
+                                     tol=tol)
+    assert res.iterations == 4
+    assert len(jobs) == 4, jobs
+    total = res.state.agg(F.sum("value")).first()[0]
+    assert total == pytest.approx(1.0, abs=1e-12)
+
+
+def test_pagerank_dangling_reads_a_planned_superstep(spark):
+    """With ``checkpoint_every=2`` every other superstep is only
+    planned, so the next one sums its dangling mass in a job of its
+    own; the ranks equal the checkpoint-every-step run's."""
+    edges = _dangling_edges(spark)
+    every = dict(pagerank.pagerank_dangling(edges, max_iter=5)
+                 .state.collect())
+    other = dict(pagerank.pagerank_dangling(edges, max_iter=5,
+                                            checkpoint_every=2)
+                 .state.collect())
+    assert other.keys() == every.keys()
+    assert all(other[v] == pytest.approx(every[v], rel=1e-12) for v in every)
 
 
 def _join_l1(old, new) -> float:
@@ -262,21 +297,23 @@ def test_block_cogroup_runs_at_sized_width(spark, monkeypatch, n_blocks,
 
     monkeypatch.setattr(adjacency, "build_adjacency_blocks", build)
     laid = []
-    real_layout = pagerank.colocate_edges_sized
+    real_layout = superstep.colocate_edges_sized
 
     def layout(*args, **kwargs):
         laid.append(real_layout(*args, **kwargs))
         return laid[-1]
 
-    monkeypatch.setattr(pagerank, "colocate_edges_sized", layout)
+    # sized_layout calls it through the module's globals
+    monkeypatch.setattr(superstep, "colocate_edges_sized", layout)
     jobs = _loop_jobs(monkeypatch, spark, f"test-blocks-{n_blocks}")
     res = pagerank.pagerank_blocks(edges, max_iter=2, n_blocks=n_blocks)
     assert res.iterations == 2
     assert built[0].n_blocks == n_blocks
     assert built[0].blocks.rdd.getNumPartitions() == width
-    # the |E| edge layout is released once blocks and base are built
-    level = laid[0][0].storageLevel
-    assert not (level.useMemory or level.useDisk), level
+    # the kernel's scope released the edge layout and the blocks
+    for frame in (laid[0][0], built[0].blocks, built[0].routes):
+        level = frame.storageLevel
+        assert not (level.useMemory or level.useDisk), level
 
     tracker = spark.sparkContext.statusTracker()
     tasks = set()
@@ -288,5 +325,3 @@ def test_block_cogroup_runs_at_sized_width(spark, monkeypatch, n_blocks,
             if info is not None and info.numCompletedTasks > 0:
                 tasks.add(info.numTasks)
     assert tasks == {width}, tasks
-    built[0].blocks.unpersist()
-    built[0].routes.unpersist()

@@ -79,15 +79,14 @@ def build_adjacency_blocks(
     salt), n_blocks)`` scatters the splits — ``n_blocks`` bounds the
     block-id domain only. The packed blocks are repartitioned on
     block_id to the scoped shuffle width (the width every later
-    cogroup plans at) and pinned with ``persist()`` (NOT
-    localCheckpoint — an ExistingRDD scan reports UnknownPartitioning
-    and the per-superstep cogroup would re-Exchange the |E|-sized block
-    payload every iteration, exactly the movement this layout exists to
-    avoid; InMemoryRelation keeps the HashPartitioning visible so
-    EnsureRequirements elides the block-side exchange, same mechanism as
-    ``superstep.colocate_edges``). ``routes`` is joined on id each
-    superstep and re-keyed to block_id regardless, so checkpointing it
-    is fine.
+    cogroup plans at) and pinned with ``persist()``: InMemoryRelation
+    keeps the HashPartitioning visible, so EnsureRequirements elides the
+    block-side exchange and the |E|-sized block payload never moves
+    again. ``routes`` is pinned the same way on id. Persist, not
+    ``localCheckpoint``, for ``superstep.colocate_edges``' reason (a
+    checkpoint keeps its partitioning only when taken with AQE off).
+    Both stay cached until the caller releases them
+    (``pagerank_blocks`` keeps them in its scope).
     """
     w = (
         edges.select("src", "dst", "weight")
@@ -139,12 +138,9 @@ def build_adjacency_blocks(
         .persist()
     )
     blocks.count()
-    # routes pinned as an id-partitioned CACHE (was localCheckpoint —
-    # an ExistingRDD scan reports UnknownPartitioning, so the
-    # per-superstep routes⋈state join re-exchanged the routes side
-    # every iteration; InMemoryRelation keeps the HashPartitioning
-    # visible and EnsureRequirements elides it, the colocate_edges
-    # mechanism applied to the routing dim)
+    # routes pinned as an id-partitioned cache: the colocate_edges
+    # mechanism applied to the routing dim (a localCheckpoint taken
+    # with AQE on re-exchanged the routes side every superstep)
     routes = (
         salted.select(F.col("src").alias("id"), "block_id")
         .distinct()

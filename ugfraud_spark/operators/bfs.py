@@ -18,8 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .superstep import (SuperstepResult, colocate_edges_sized,
-                        iterate, sized_plan)
+from .superstep import SuperstepResult, iterate, sized_layout
 
 
 def bfs_hops(edges_sym: DataFrame, seeds: DataFrame, *,
@@ -31,33 +30,33 @@ def bfs_hops(edges_sym: DataFrame, seeds: DataFrame, *,
     unrolls the same recurrence); dist is exact for every vertex within
     ``iters`` hops of a seed.
     """
-    edges_sym, m = colocate_edges_sized(edges_sym.select("src", "dst"))
-    state0 = seeds.select("id", F.lit(0).alias("dist"))
+    with sized_layout(edges_sym.select("src", "dst"),
+                      adaptive_off=False) as (edges_sym, _, _):
+        state0 = seeds.select("id", F.lit(0).alias("dist"))
 
-    def step(state: DataFrame, i: int) -> DataFrame:
-        # frontier-delta relaxation: with unit hops, a vertex's dist is
-        # final the round it is first reached, and a vertex first reached
-        # at round i carries dist == i exactly — so the frontier is a
-        # pure FILTER on the state (no old⋈new comparison join), and the
-        # gather join sees |frontier| rows instead of the whole reached
-        # set. Re-propagating already-settled vertices only re-derives
-        # minima that already won; output is identical to the full
-        # relaxation the oracle unrolls.
-        relaxed = (
-            edges_sym.join(
-                state.where(F.col("dist") == i)
-                .select(F.col("id").alias("src"), "dist").hint("shuffle_hash"),
-                "src",
+        def step(state: DataFrame, i: int) -> DataFrame:
+            # frontier-delta relaxation: with unit hops, a vertex's dist is
+            # final the round it is first reached, and a vertex first reached
+            # at round i carries dist == i exactly — so the frontier is a
+            # pure FILTER on the state (no old⋈new comparison join), and the
+            # gather join sees |frontier| rows instead of the whole reached
+            # set. Re-propagating already-settled vertices only re-derives
+            # minima that already won; output is identical to the full
+            # relaxation the oracle unrolls.
+            relaxed = (
+                edges_sym.join(
+                    state.where(F.col("dist") == i)
+                    .select(F.col("id").alias("src"), "dist").hint("shuffle_hash"),
+                    "src",
+                )
+                .select(F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
             )
-            .select(F.col("dst").alias("id"), (F.col("dist") + 1).alias("dist"))
-        )
-        return (
-            state.unionAll(relaxed)
-            .groupBy("id")
-            .agg(F.min("dist").alias("dist"))
-        )
+            return (
+                state.unionAll(relaxed)
+                .groupBy("id")
+                .agg(F.min("dist").alias("dist"))
+            )
 
-    with sized_plan(edges_sym.sparkSession, m, adaptive_off=False):
         res: SuperstepResult = iterate(
             state0, step, max_iter=iters,
             checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir,
@@ -92,30 +91,30 @@ def sssp_weighted(edges_w: DataFrame, seeds: DataFrame, *,
     |frontier|⋈|E| shuffle-hash gather + one groupBy min — the edge
     payload is colocated once and never moves again.
     """
-    edges_w, m = colocate_edges_sized(edges_w.select("src", "dst", "w"))
-    state0 = seeds.select(
-        "id", F.lit(0).cast("long").alias("dist"), F.lit(0).alias("upd"))
+    with sized_layout(edges_w.select("src", "dst", "w"),
+                      adaptive_off=False) as (edges_w, _, _):
+        state0 = seeds.select(
+            "id", F.lit(0).cast("long").alias("dist"), F.lit(0).alias("upd"))
 
-    def step(state: DataFrame, i: int) -> DataFrame:
-        relaxed = (
-            edges_w.join(
-                state.where(F.col("upd") == i)
-                .select(F.col("id").alias("src"), "dist").hint("shuffle_hash"),
-                "src",
+        def step(state: DataFrame, i: int) -> DataFrame:
+            relaxed = (
+                edges_w.join(
+                    state.where(F.col("upd") == i)
+                    .select(F.col("id").alias("src"), "dist").hint("shuffle_hash"),
+                    "src",
+                )
+                .select(F.col("dst").alias("id"),
+                        (F.col("dist") + F.col("w")).alias("dist"),
+                        F.lit(i + 1).alias("upd"))
             )
-            .select(F.col("dst").alias("id"),
-                    (F.col("dist") + F.col("w")).alias("dist"),
-                    F.lit(i + 1).alias("upd"))
-        )
-        return (
-            state.unionAll(relaxed)
-            .groupBy("id")
-            .agg(F.min(F.struct("dist", "upd")).alias("s"))
-            .select("id", F.col("s.dist").alias("dist"),
-                    F.col("s.upd").alias("upd"))
-        )
+            return (
+                state.unionAll(relaxed)
+                .groupBy("id")
+                .agg(F.min(F.struct("dist", "upd")).alias("s"))
+                .select("id", F.col("s.dist").alias("dist"),
+                        F.col("s.upd").alias("upd"))
+            )
 
-    with sized_plan(edges_w.sparkSession, m, adaptive_off=False):
         res: SuperstepResult = iterate(
             state0, step, max_iter=iters,
             checkpoint_every=checkpoint_every, checkpoint_dir=checkpoint_dir,

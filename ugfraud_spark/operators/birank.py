@@ -34,9 +34,8 @@ from ..sources.tables import vertex_priors
 from .superstep import (
     _contribs,
     colocate_edges,
-    colocate_edges_sized,
     iterate,
-    sized_plan,
+    sized_layout,
 )
 
 BIRANK_ALPHA = 0.85
@@ -48,23 +47,21 @@ def birank(bip: DataFrame, alpha: float = BIRANK_ALPHA,
     """bip(src, dst, weight) → (id, birank): both sides' final scores
     (users = src namespace, products = dst namespace) after ``iters`` ≥
     1 rounds, 6dp-rounded. The result projects the loop's last two
-    checkpointed states; every frame the kernel persisted is released
-    before it returns."""
-    e, m = colocate_edges_sized(
-        bip.select("src", "dst", F.col("weight").cast("double").alias("w")))
-    with sized_plan(e.sparkSession, m):
-        users, prods = _side(e, "src"), _side(e, "dst")
-        fwd = colocate_edges(
+    checkpointed states; the ``sized_layout`` scope releases every
+    frame the kernel persisted."""
+    with sized_layout(bip.select("src", "dst", F.col("weight")
+                                 .cast("double").alias("w"))) as (e, _, keep):
+        users, prods = keep(_side(e, "src")), keep(_side(e, "dst"))
+        fwd = keep(colocate_edges(
             e.join(users.select(F.col("id").alias("src"),
                                 F.col("out_deg").alias("du")), "src")
             .join(prods.select(F.col("id").alias("dst"),
                                F.col("out_deg").alias("dp")), "dst")
             .select("src", "dst",
                     (F.col("w") / F.sqrt(F.col("du") * F.col("dp")))
-                    .alias("w")))
-        rev = colocate_edges(fwd.select(F.col("dst").alias("src"),
-                                        F.col("src").alias("dst"), "w"))
-        e.unpersist()
+                    .alias("w"))))
+        rev = keep(colocate_edges(fwd.select(F.col("dst").alias("src"),
+                                             F.col("src").alias("dst"), "w")))
         sides = [(fwd, prods), (rev, users)]
         seen = []
 
@@ -81,8 +78,6 @@ def birank(bip: DataFrame, alpha: float = BIRANK_ALPHA,
 
         u = iterate(users.withColumn("x", F.col("x0")), step,
                     max_iter=2 * iters, checkpoint_every=1).state
-    for f in (fwd, rev, users, prods):
-        f.unpersist()
     return (
         u.select("id", F.round("x", 6).alias("birank"))
         .unionAll(seen[-1].select("id", F.round("x", 6).alias("birank")))

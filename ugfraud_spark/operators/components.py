@@ -27,7 +27,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
-from .superstep import colocate_edges_sized, iterate, sized_plan
+from .superstep import iterate, sized_layout
 
 
 def _sym(edges_ab: DataFrame) -> DataFrame:
@@ -103,14 +103,13 @@ def connected_components(edges_ab: DataFrame, max_iter: int = 100,
       Spark job."""
     sym_raw = _sym(edges_ab)
     verts_raw = sym_raw.select(F.col("src").alias("id")).distinct()
-    sym, m = colocate_edges_sized(
-        sym_raw.unionAll(verts_raw.select(F.col("id").alias("src"),
-                                          F.col("id").alias("dst")))
-    )
-    return _cc_doubling_loop(sym, m, max_iter, info)
+    with sized_layout(sym_raw.unionAll(
+            verts_raw.select(F.col("id").alias("src"),
+                             F.col("id").alias("dst")))) as (sym, _, _):
+        return _cc_doubling_loop(sym, max_iter, info)
 
 
-def _cc_doubling_loop(sym: DataFrame, m: int, max_iter: int,
+def _cc_doubling_loop(sym: DataFrame, max_iter: int,
                       info: dict | None) -> DataFrame:
     state0 = sym.select(F.col("src").alias("id")).distinct().withColumn(
         "lbl", F.col("id"))
@@ -180,10 +179,9 @@ def _cc_doubling_loop(sym: DataFrame, m: int, max_iter: int,
     def residual(_old: DataFrame, new: DataFrame):
         return observed(new), read
 
-    with sized_plan(sym.sparkSession, m):
-        res = iterate(state0, step, residual,
-                      max_iter=-(-max_iter // ROUNDS_PER_STEP), tol=0.5,
-                      checkpoint_every=1)
+    res = iterate(state0, step, residual,
+                  max_iter=-(-max_iter // ROUNDS_PER_STEP), tol=0.5,
+                  checkpoint_every=1)
     if info is not None:
         info["iterations"] = res.iterations * ROUNDS_PER_STEP
         info["converged"] = res.converged

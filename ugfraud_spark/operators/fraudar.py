@@ -426,13 +426,15 @@ def bulk_peel(edges: DataFrame, eps: float = 0.1,
     # default vs 5.4-6.1 s sized; conf-saturating sizes unchanged.
     spark = edges.sparkSession
     with sized_plan(spark, layout_width(spark, d.count()),
-                    adaptive_off=False):
-        return _bulk_peel_loop(spark, d, eps, max_rounds, bcast_ids,
+                    adaptive_off=False) as keep:
+        return _bulk_peel_loop(spark, d, keep, eps, max_rounds, bcast_ids,
                                finish_max_edges)
 
 
-def _bulk_peel_loop(spark, d, eps, max_rounds, bcast_ids,
+def _bulk_peel_loop(spark, d, keep, eps, max_rounds, bcast_ids,
                     finish_max_edges):
+    """The peel rounds inside ``bulk_peel``'s scope, which releases the
+    deltas the loop did not; the best prefix returns checkpointed."""
     cw = (
         d.groupBy("dst").agg(F.count(F.lit(1)).alias("_deg"))
         .select("dst", (1.0 / F.log(F.col("_deg") + 5.0)).alias("col_weight"))
@@ -449,7 +451,7 @@ def _bulk_peel_loop(spark, d, eps, max_rounds, bcast_ids,
         # combine (round-3: was two separate groupBy shuffles); the
         # persisted frame feeds the stats agg, (sometimes) the
         # best-prefix snapshot, and both keep filters
-        deltas = (
+        deltas = keep(
             e.select(F.col("src").alias("id"), F.lit("row").alias("side"),
                      "col_weight")
             .unionAll(e.select(F.col("dst").alias("id"),
@@ -474,8 +476,6 @@ def _bulk_peel_loop(spark, d, eps, max_rounds, bcast_ids,
             prev_deltas.unpersist()
         n_alive = row["n"]
         if n_alive == 0:
-            deltas.unpersist()
-            prev_deltas = None
             break
         if cap is None:
             cap = 2 * math.ceil(math.log(max(n_alive, 2))
@@ -486,17 +486,13 @@ def _bulk_peel_loop(spark, d, eps, max_rounds, bcast_ids,
             # distributed rounds, which at this size are pure scheduler
             # overhead (each is a full job + checkpoint over a frame
             # that fits in one task). Same per-round rule, run in numpy.
-            deltas.unpersist()
             pdf = e.select("src", "dst", "col_weight").toPandas()
             np_rows, np_cols, np_best, rounds = _peel_rounds_np(
                 pdf["src"].to_numpy(), pdf["dst"].to_numpy(),
                 pdf["col_weight"].to_numpy(np.float64),
                 eps, best_avg, prev_n, rounds, cap,
             )
-            prev_deltas = None
             if np_rows is not None and np_best > best_avg:
-                if best_deltas is not None:
-                    best_deltas.unpersist()
                 log.info("bulk_peel: driver finisher took the best prefix "
                          "after %d total rounds (cap %d)", rounds, cap)
                 import pandas as pd
@@ -535,17 +531,17 @@ def _bulk_peel_loop(spark, d, eps, max_rounds, bcast_ids,
                 .localCheckpoint(eager=True)
             )
         else:
-            keep = deltas.where(F.col("delta") > thr)
-            keep_r = keep.where(F.col("side") == "row").select(
+            alive = deltas.where(F.col("delta") > thr)
+            keep_r = alive.where(F.col("side") == "row").select(
                 F.col("id").alias("src"))
-            keep_c = keep.where(F.col("side") == "col").select(
+            keep_c = alive.where(F.col("side") == "col").select(
                 F.col("id").alias("dst"))
             e = (
                 e.join(keep_r, "src", "left_semi")
                 .join(keep_c, "dst", "left_semi")
                 .localCheckpoint(eager=True)
             )
-        prev_deltas = deltas  # unpersisted next round, after e realizes
+        prev_deltas = deltas  # released next round, after e realizes
         rounds += 1
         if rounds >= cap:
             log.warning(
@@ -554,12 +550,10 @@ def _bulk_peel_loop(spark, d, eps, max_rounds, bcast_ids,
                 "valid, the peel was truncated", cap, n_alive,
             )
             break
-    if prev_deltas is not None and prev_deltas is not best_deltas:
-        prev_deltas.unpersist()
     log.info("bulk_peel: finished after %d rounds (cap %s)", rounds, cap)
     if best_deltas is None:  # empty input edge frame
         return spark.createDataFrame([], "id long, side string")
-    return best_deltas.select("id", "side")
+    return best_deltas.select("id", "side").localCheckpoint(eager=True)
 
 
 def bulk_peel_invariant(edges: DataFrame, exact_density: DataFrame,
@@ -577,7 +571,7 @@ def bulk_peel_invariant(edges: DataFrame, exact_density: DataFrame,
     ``Fraudar.py:195-249``). Returns (ok, exact_density): ``ok`` is
     genuinely computed here; the DuckDB oracle recomputes
     ``exact_density`` from the same fixture parquet and pins ok = 1."""
-    blk = bulk_peel(edges, eps=eps).localCheckpoint(eager=True)
+    blk = bulk_peel(edges, eps=eps)
     rows = blk.where(F.col("side") == "row").select(F.col("id").alias("src"))
     cols = blk.where(F.col("side") == "col").select(F.col("id").alias("dst"))
     cw = fraudar_col_weights(edges).withColumnRenamed("id", "dst")

@@ -19,8 +19,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from .superstep import (SuperstepResult, colocate_edges_sized,
-                        iterate, l1_residual, sized_plan)
+from .superstep import SuperstepResult, iterate, l1_residual, sized_layout
 
 
 def gang(
@@ -47,19 +46,16 @@ def _linear_bp(edges: DataFrame, priors: DataFrame, *, coeff: float,
     ``b ← (prior − 0.5) + coeff · Σ_{u~v} [s(u,v) ·] b(u)`` over both
     directions of every edge. A ``sign`` column s weights each message
     (ZooBP's signed edges), the way a ``w`` edge column weights
-    ``superstep._contribs``. The symmetric edges are laid out by
-    ``colocate_edges_sized`` and the whole loop runs under
-    ``sized_plan`` (AQE off)."""
+    ``superstep._contribs``. The symmetric edges are laid out and the
+    whole loop runs in one ``sized_layout`` scope (AQE off)."""
     s = [] if sign is None else [sign.alias("s")]
-    sym, m = colocate_edges_sized(
-        edges.select("src", "dst", *s).unionAll(
-            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
-                         *s)))
     msg = F.col("value") if sign is None else F.col("value") * F.col("s")
-    with sized_plan(sym.sparkSession, m):
-        pri = priors.select(
+    with sized_layout(edges.select("src", "dst", *s).unionAll(
+            edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"),
+                         *s))) as (sym, _, keep):
+        pri = keep(priors.select(
             "id", (F.col("prior") - F.lit(0.5)).alias("p")
-        ).repartition("id").persist()
+        ).repartition("id").persist())
         pri.count()
 
         state0 = pri.select("id", F.col("p").alias("value"))

@@ -32,30 +32,24 @@ from .superstep import (
     _contribs,
     _vertex_base,
     colocate_edges,
-    colocate_edges_sized,
     iterate,
-    sized_plan,
+    sized_layout,
 )
 
 
 def hits(edges: DataFrame, iters: int = 5) -> DataFrame:
     """edges(src, dst) directed → (id, hub, authority), L2-normalized.
     Authorities follow the edges forward, hubs backward. The output is
-    materialized inside the ``sized_plan`` scope, and every frame the
-    kernel persisted is released before it returns."""
-    fwd, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(fwd.sparkSession, m):
-        rev = colocate_edges(fwd.select(F.col("dst").alias("src"),
-                                        F.col("src").alias("dst")))
-        out_b = _vertex_base(fwd).persist()
-        in_b = _vertex_base(rev).persist()
-        try:
-            return _l2_power(
-                out_b, {"authority": (fwd, in_b), "hub": (rev, out_b)}, iters
-            ).select("id", "hub", "authority")
-        finally:
-            for f in (fwd, rev, out_b, in_b):
-                f.unpersist()
+    materialized inside the ``sized_layout`` scope, which releases
+    every frame the kernel persisted."""
+    with sized_layout(edges.select("src", "dst")) as (fwd, _, keep):
+        rev = keep(colocate_edges(fwd.select(F.col("dst").alias("src"),
+                                             F.col("src").alias("dst"))))
+        out_b = keep(_vertex_base(fwd).persist())
+        in_b = keep(_vertex_base(rev).persist())
+        return _l2_power(
+            out_b, {"authority": (fwd, in_b), "hub": (rev, out_b)}, iters
+        ).select("id", "hub", "authority")
 
 
 def eigenvector_centrality(edges: DataFrame, iters: int = 5) -> DataFrame:
@@ -65,14 +59,9 @@ def eigenvector_centrality(edges: DataFrame, iters: int = 5) -> DataFrame:
     with no damping (PageRank) and no degree normalization (SALSA).
     ``hits``' authority half-step iterated alone; materialized and
     released like ``hits``."""
-    fwd, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(fwd.sparkSession, m):
-        base = _vertex_base(fwd).persist()
-        try:
-            return _l2_power(base, {"eigen": (fwd, base)}, iters)
-        finally:
-            fwd.unpersist()
-            base.unpersist()
+    with sized_layout(edges.select("src", "dst")) as (fwd, _, keep):
+        base = keep(_vertex_base(fwd).persist())
+        return _l2_power(base, {"eigen": (fwd, base)}, iters)
 
 
 def _l2_power(verts: DataFrame, sides: dict[str, tuple[DataFrame, DataFrame]],
@@ -131,10 +120,10 @@ def kcore(edges_sym: DataFrame, k: int, iters: int = 10) -> DataFrame:
     Each round: one degree agg + two semi-joins — all co-partitioned on
     the cached symmetric edge set; the shrinking edge frame is
     re-checkpointed per round to keep lineage flat. The survivor
-    ``distinct`` is materialized inside the ``sized_plan`` scope.
+    ``distinct`` is materialized inside the ``sized_layout`` scope.
     """
-    e, m = colocate_edges_sized(edges_sym.select("src", "dst"))
-    with sized_plan(e.sparkSession, m, adaptive_off=False):
+    with sized_layout(edges_sym.select("src", "dst"),
+                      adaptive_off=False) as (e, _, _):
         return _peel_edges(e, k, iters).select(
             F.col("src").alias("id")).distinct().localCheckpoint(eager=True)
 
@@ -203,9 +192,9 @@ def coreness(edges_sym: DataFrame, k_max: int = CORENESS_K_MAX,
     documented contract: vertices at coreness k_max may sit in deeper
     cores (the capped sweep is what bounded-budget pipelines run).
     The per-vertex max over the levels is materialized inside the
-    ``sized_plan`` scope."""
-    e, m = colocate_edges_sized(edges_sym.select("src", "dst"))
-    with sized_plan(e.sparkSession, m, adaptive_off=False):
+    ``sized_layout`` scope."""
+    with sized_layout(edges_sym.select("src", "dst"),
+                      adaptive_off=False) as (e, _, _):
         return _coreness_sweep(e, k_max, iters).localCheckpoint(eager=True)
 
 

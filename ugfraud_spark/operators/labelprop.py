@@ -23,16 +23,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .superstep import colocate_edges_sized, iterate, sized_plan
+from .components import _sym
+from .superstep import iterate, sized_layout
 
 
 def lpa(edges_ab: DataFrame, iters: int = 4) -> DataFrame:
-    sym, m = colocate_edges_sized(
-        edges_ab.select(F.col("a").alias("src"), F.col("b").alias("dst")).unionAll(
-            edges_ab.select(F.col("b").alias("src"), F.col("a").alias("dst"))
-        )
-    )
-    with sized_plan(sym.sparkSession, m):
+    with sized_layout(_sym(edges_ab)) as (sym, _, _):
         verts = sym.select(F.col("src").alias("id")).distinct()
         state0 = verts.withColumn("lbl", F.col("id"))
 
@@ -185,36 +181,28 @@ def label_spreading(edges_ab: DataFrame, seed_mod: int = LS_SEED_MOD,
     the clamp is a per-row expression recomputable from the id, so no
     seed table ever joins into the loop. Scores round to 6 dp at the
     END only (the pagerank discipline — groupBy sum order's low bits
-    are absorbed once). Sized like ``lpa``: the loop runs under
-    ``sized_plan`` at the measured layout width, AQE off."""
-    sym, m = colocate_edges_sized(
-        edges_ab.select(F.col("a").alias("src"),
-                        F.col("b").alias("dst")).unionAll(
-            edges_ab.select(F.col("b").alias("src"),
-                            F.col("a").alias("dst"))
-        )
-    )
-    verts = sym.select(F.col("src").alias("id")).distinct()
-
+    are absorbed once). Sized like ``lpa``: the loop runs inside
+    ``sized_layout`` at the measured layout width, AQE off."""
     def clamp(score_col):
         return F.when(
             F.col("id") % seed_mod == 0,
             (F.col("id") % 2).cast("double"),
         ).otherwise(score_col)
 
-    state0 = verts.select("id", clamp(F.lit(0.5)).alias("score"))
+    with sized_layout(_sym(edges_ab)) as (sym, _, _):
+        verts = sym.select(F.col("src").alias("id")).distinct()
+        state0 = verts.select("id", clamp(F.lit(0.5)).alias("score"))
 
-    def step(state: DataFrame, _i: int) -> DataFrame:
-        means = (
-            sym.join(
-                state.select(F.col("id").alias("src"), "score")
-                .hint("shuffle_hash"), "src")
-            .groupBy(F.col("dst").alias("id"))
-            .agg((F.sum("score") / F.count(F.lit(1))).alias("mean"))
-        )
-        return means.select("id", clamp(F.col("mean")).alias("score"))
+        def step(state: DataFrame, _i: int) -> DataFrame:
+            means = (
+                sym.join(
+                    state.select(F.col("id").alias("src"), "score")
+                    .hint("shuffle_hash"), "src")
+                .groupBy(F.col("dst").alias("id"))
+                .agg((F.sum("score") / F.count(F.lit(1))).alias("mean"))
+            )
+            return means.select("id", clamp(F.col("mean")).alias("score"))
 
-    with sized_plan(sym.sparkSession, m):
         res = iterate(state0, step, max_iter=iters, checkpoint_every=1)
     return res.state.select(
         "id", F.round("score", 6).alias("score"),
@@ -244,13 +232,8 @@ def wl_refinement(edges_ab: DataFrame, iters: int = WL_ITERS) -> DataFrame:
     collect_list (bounded by degree — the same per-vertex state any
     WL implementation must hold) + a narrow md5 map, one ``iterate``
     superstep per round at the sized width; the class-size join at the
-    end is materialized inside the ``sized_plan`` scope."""
-    sym, m = colocate_edges_sized(
-        edges_ab.select(F.col("a").alias("src"), F.col("b").alias("dst"))
-        .unionAll(edges_ab.select(F.col("b").alias("src"),
-                                  F.col("a").alias("dst")))
-    )
-    with sized_plan(sym.sparkSession, m):
+    end is materialized inside the ``sized_layout`` scope."""
+    with sized_layout(_sym(edges_ab)) as (sym, _, _):
         state0 = (
             sym.groupBy(F.col("src").alias("id"))
             .agg(F.count(F.lit(1)).cast("string").alias("c"))
@@ -273,10 +256,8 @@ def wl_refinement(edges_ab: DataFrame, iters: int = WL_ITERS) -> DataFrame:
         state = iterate(state0, step, max_iter=iters,
                         checkpoint_every=1).state
         sizes = state.groupBy("c").agg(F.count(F.lit(1)).alias("class_size"))
-        out = (
+        return (
             state.join(sizes, "c")
             .select("id", F.col("c").alias("wl_color"), "class_size")
             .localCheckpoint(eager=True)
         )
-    sym.unpersist()
-    return out

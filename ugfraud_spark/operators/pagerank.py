@@ -12,7 +12,7 @@ contribution (``value/out_deg`` for PageRank, ``value`` for Katz, one
 column per topic for ``topic_ppr``; a ``w`` edge column, as in
 ``pagerank_weighted``, weights each message and makes out_deg the
 out-weight), and it is joined to the edge layout pinned on ``src`` by
-``colocate_edges_sized`` with the state side hinted ``shuffle_hash`` —
+``sized_layout`` with the state side hinted ``shuffle_hash`` —
 the |E|-sized edge side never moves, only the |V|-sized state and the
 map-side-combined messages cross the wire. ``_propagate`` owns the rest:
 a left join of the messages onto the persisted vertex base
@@ -21,8 +21,10 @@ update expression, and the ``iterate`` loop (AQE off, L1 residual fused
 into the checkpoint job when ``tol`` is set). A variant only builds its
 vertex base, its initial state, its contribution columns and its update
 expression; ``pagerank_blocks`` swaps the join message step for the
-CSR-block ``spmv_arrow``, and ``pagerank_dangling`` adds a crossJoin'd
-dangling-mass row to the update.
+CSR-block ``spmv_arrow``, and ``pagerank_dangling`` adds the previous
+superstep's dangling mass, observed in its checkpoint job, as a
+literal. Every kernel runs inside ``sized_layout``, which releases the
+edge layout and the kept vertex bases when the kernel returns.
 
 Base kernel (deterministic, mirrored 1:1 by the DuckDB oracle in
 ``ugfraud_spark/oracle.py``):
@@ -38,16 +40,16 @@ from __future__ import annotations
 
 from typing import Callable
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
 
 from .superstep import (
     SuperstepResult,
     _contribs,
     _vertex_base,
-    colocate_edges_sized,
     iterate,
     l1_residual,
+    sized_layout,
     sized_plan,
 )
 
@@ -109,18 +111,16 @@ def pagerank(
     ``tol=None`` runs exactly ``max_iter`` supersteps (oracle-parity
     mode); a float runs to L1 residual < tol (convergence mode).
     """
-    edges, m = colocate_edges_sized(edges.select("src", "dst"))
-
     # the whole kernel (vertex base, state init, loop) plans under the
     # size-derived partition count + AQE off — see sized_plan
-    with sized_plan(edges.sparkSession, m):
+    with sized_layout(edges.select("src", "dst")) as (edges, _, keep):
         # vertex set + out-degree in ONE 2|E|-row shuffle with map-side
         # combine (was: distinct over the union + a second groupBy + a join
         # + an id-repartition — three full shuffles; measured as the bulk of
         # the probe's one-time build at 64M edges). Dangling nodes get
-        # out_deg = NULL. persist (not checkpoint) so the id-partitioning
-        # stays visible to the per-superstep left join against contribs.
-        base = _vertex_base(edges).persist()
+        # out_deg = NULL. persisted (see superstep.colocate_edges) so the
+        # id-partitioning stays visible to the per-superstep left join.
+        base = keep(_vertex_base(edges).persist())
         n = base.count()
         return _propagate(
             base, base.withColumn("value", F.lit(1.0 / n)), _rank_contribs(edges),
@@ -143,14 +143,11 @@ def personalized_pagerank(
     to every vertex — the standard seed-conditioned relevance score for
     web graphs (e.g. trust propagation from known-good hosts). Same
     superstep plan as ``pagerank``; only the teleport column differs."""
-    edges, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(edges.sparkSession, m):
-        # persist (not localCheckpoint): keeps the groupBy's hash(id)
-        # partitioning visible, so the base build below needs NO re-exchange
-        # of the vertex side and no explicit repartition (was: eager
-        # checkpoint → UnknownPartitioning → repartition("id") + an extra
-        # materialization job)
-        vb = _vertex_base(edges).persist()
+    with sized_layout(edges.select("src", "dst")) as (edges, _, keep):
+        # persisted like ``pagerank``'s base: the groupBy's hash(id)
+        # partitioning stays visible, so the base build below needs NO
+        # re-exchange of the vertex side and no explicit repartition
+        vb = keep(_vertex_base(edges).persist())
         # seeds outside the graph's vertex set get no state row — their teleport
         # mass would silently vanish; normalize by the *effective* seed count
         seeds = seeds.select("id").join(vb.select("id"), "id", "left_semi")
@@ -169,8 +166,7 @@ def personalized_pagerank(
             .drop("_seed")
             .persist()
         )
-        base.count()
-        vb.unpersist()
+        keep(base).count()
         return _propagate(
             base, base.withColumn("value", F.col("tp") / F.lit(1.0 - damping)),
             _rank_contribs(edges), {"value": _damped(F.col("tp"), damping)},
@@ -205,12 +201,10 @@ def teleport_pagerank(
     mass would vanish); vertices with no weight row get τ = 0. The
     normalizer Σw rides a broadcast 1-row crossJoin — no driver-side
     float re-enters the plan."""
-    edges, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(edges.sparkSession, m):
-        # persist, not localCheckpoint: keeps hash(id) visible so the base
-        # build skips the repartition + extra materialization (see
-        # personalized_pagerank)
-        vb = _vertex_base(edges).persist()
+    with sized_layout(edges.select("src", "dst")) as (edges, _, keep):
+        # persisted: keeps hash(id) visible so the base build skips the
+        # repartition + extra materialization (see personalized_pagerank)
+        vb = keep(_vertex_base(edges).persist())
         w = (weights.select("id", F.col("w").cast("double").alias("w"))
              .join(vb.select("id"), "id", "left_semi"))
         if w.where(F.col("w") > 0).limit(1).count() == 0:
@@ -224,8 +218,7 @@ def teleport_pagerank(
             .drop("w", "_tot")
             .persist()
         )
-        base.count()
-        vb.unpersist()
+        keep(base).count()
         return _propagate(
             base, base.withColumn("value", F.col("wn")), _rank_contribs(edges),
             {"value": _damped(F.lit(1.0 - damping) * F.col("wn"), damping)},
@@ -258,9 +251,8 @@ def pagerank_from(
     and physical plan are ``pagerank``'s verbatim — one edges⋈state join
     + one groupBy(dst) shuffle per superstep over the colocated edge
     frame; the init join happens ONCE, outside the loop."""
-    edges, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(edges.sparkSession, m):
-        base = _vertex_base(edges).persist()
+    with sized_layout(edges.select("src", "dst")) as (edges, _, keep):
+        base = keep(_vertex_base(edges).persist())
         n = base.count()
         state0 = (
             base.join(init.select("id", F.col("value").cast("double")
@@ -308,11 +300,9 @@ def topic_ppr(
     its surviving seeds. Raises when any topic ends up with zero seeds
     (its column would be identically zero — a silent config error).
     """
-    edges, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(edges.sparkSession, m):
-        # persist, not localCheckpoint — same partitioning rationale as
-        # personalized_pagerank
-        vb = _vertex_base(edges).persist()
+    with sized_layout(edges.select("src", "dst")) as (edges, _, keep):
+        # persisted — same partitioning rationale as personalized_pagerank
+        vb = keep(_vertex_base(edges).persist())
         topics = topics.select("id", "topic").join(
             vb.select("id"), "id", "left_semi")
         # K-row driver transfer (bounded by n_topics), mirrors the scalar
@@ -334,9 +324,8 @@ def topic_ppr(
                 F.when(F.col("topic") == t,
                        F.lit((1.0 - damping) / counts[t])).otherwise(F.lit(0.0)),
             )
-        base = base.drop("topic").persist()
+        base = keep(base.drop("topic").persist())
         base.count()
-        vb.unpersist()
         # same init as personalized_pagerank: v = tp / (1-d) → 1/n_t on
         # topic-t seeds, 0 elsewhere (division mirrored in the oracle SQL so
         # both engines run the identical IEEE op sequence)
@@ -374,29 +363,39 @@ def pagerank_dangling(
 
     so Σr stays exactly 1 (the ``pagerank`` kernel's documented
     simplification, closed here as a first-class oracle-gated
-    variant). One extra scalar aggregation per superstep (the dangling
-    mass), carried as a crossJoin'd 1-row frame so the superstep stays
-    lazy."""
-    edges, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(edges.sparkSession, m):
-        base = _vertex_base(edges).persist()
-        n = base.count()
+    variant). D_t enters superstep t+1 as a literal, observed on
+    superstep t's output in the job that checkpoints it: one Spark job
+    per superstep, as in ``pagerank`` (an input that was only planned,
+    ``tol=None`` with ``checkpoint_every`` > 1, is summed in a job of
+    its own)."""
+    with sized_layout(edges.select("src", "dst")) as (edges, _, keep):
+        base = keep(_vertex_base(edges).persist())
+        n, n_dangling = base.agg(
+            F.count(F.lit(1)), F.count(F.when(F.col("out_deg").isNull(), 1))
+        ).first()
         teleport = (1.0 - damping) / n
         contribs = _rank_contribs(edges)
+        dangling = F.sum(F.when(F.col("out_deg").isNull(), F.col("value")))
+        masses: list[Observation] = []
 
-        def step(state: DataFrame, _i: int) -> DataFrame:
-            dang = state.where(F.col("out_deg").isNull()).agg(
-                F.coalesce(F.sum("value"), F.lit(0.0)).alias("dm"))
+        def step(state: DataFrame, i: int) -> DataFrame:
+            if i == 0:
+                dm = n_dangling / n  # every vertex starts at 1/n
+            elif tol is not None or i % checkpoint_every == 0:
+                dm = masses[-1].get["dm"] or 0.0
+            else:  # superstep i was only planned
+                dm = state.agg(dangling).first()[0] or 0.0
+            masses.append(Observation())
             return (
                 base.join(contribs(state).hint("shuffle_hash"), "id", "left")
-                .crossJoin(dang)
                 .select(
                     "id",
                     "out_deg",
                     (F.lit(teleport) + F.lit(damping)
                      * (F.coalesce("mass", F.lit(0.0))
-                        + F.col("dm") / F.lit(float(n)))).alias("value"),
+                        + F.lit(dm) / F.lit(float(n)))).alias("value"),
                 )
+                .observe(masses[-1], dangling.alias("dm"))
             )
 
         return _iterate(
@@ -425,9 +424,8 @@ def katz(
     Fixed ``max_iter`` is the truncated-series semantics the oracle
     unrolls; convergence of the infinite series needs α < 1/λ_max,
     irrelevant at fixed iterations."""
-    edges, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(edges.sparkSession, m):
-        base = _vertex_base(edges).persist()
+    with sized_layout(edges.select("src", "dst")) as (edges, _, keep):
+        base = keep(_vertex_base(edges).persist())
         base.count()
         return _propagate(
             base, base.withColumn("value", F.lit(beta)),
@@ -460,9 +458,10 @@ def pagerank_blocks(
     far inside the driver gate's 6dp rounding.
 
     ``n_blocks`` is the block-id (salt) domain, not the partition
-    width. The edges are laid out by ``colocate_edges_sized`` and the
-    block build, vertex base and loop all run under ``sized_plan`` at
-    ``w = min(m, n_blocks)`` partitions, so each superstep's Python
+    width. The edges are laid out by ``sized_layout`` and the block
+    build, vertex base and loop all run under a nested ``sized_plan`` at
+    ``w = min(m, n_blocks)`` partitions, which keeps the blocks, routes
+    and base until the kernel returns, so each superstep's Python
     cogroup runs ``w`` tasks, each reducing several blocks — the cost
     of a Python task is paid per task, not per block. The cap applies
     to every stage of the kernel: when ``m > n_blocks`` (a cluster
@@ -472,13 +471,14 @@ def pagerank_blocks(
     local session ``m`` ≤ the core count ≤ ``n_blocks``."""
     from .adjacency import build_adjacency_blocks, spmv_arrow
 
-    edges, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(edges.sparkSession, min(m, n_blocks)):
+    with (sized_layout(edges.select("src", "dst")) as (edges, m, _),
+          sized_plan(edges.sparkSession, min(m, n_blocks)) as keep):
         adj = build_adjacency_blocks(edges, n_blocks=n_blocks,
                                      hub_cap=hub_cap)
-        base = _vertex_base(edges).persist()
+        keep(adj.blocks)
+        keep(adj.routes)
+        base = keep(_vertex_base(edges).persist())
         n = base.count()
-        edges.unpersist()  # blocks, routes and base are materialized
 
         def contribs(state: DataFrame) -> DataFrame:
             return spmv_arrow(adj, state.where(F.col("out_deg").isNotNull())
@@ -510,12 +510,11 @@ def pagerank_weighted(
     colocated once, W_out fused into the state, one state-side shuffle
     + one map-side-combined groupBy per round; dangling mass dropped
     (same documented simplification as the unweighted kernel)."""
-    edges, m = colocate_edges_sized(
-        edges_w.select("src", "dst", F.col(weight).cast("double").alias("w"))
-    )
-    with sized_plan(edges.sparkSession, m):
+    with sized_layout(edges_w.select(
+            "src", "dst", F.col(weight).cast("double").alias("w"))) as (
+            edges, _, keep):
         # the w column makes out_deg W_out(u) and weights every message
-        base = _vertex_base(edges).persist()
+        base = keep(_vertex_base(edges).persist())
         n = base.count()
         return _propagate(
             base, base.withColumn("value", F.lit(1.0 / n)), _rank_contribs(edges),

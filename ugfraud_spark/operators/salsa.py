@@ -45,9 +45,8 @@ from .superstep import (
     _contribs,
     _vertex_base,
     colocate_edges,
-    colocate_edges_sized,
     iterate,
-    sized_plan,
+    sized_layout,
 )
 
 
@@ -57,21 +56,20 @@ def salsa(edges: DataFrame, iters: int = 5) -> DataFrame:
     Authority/hub scores are each a probability distribution over the
     vertices with in-/out-degree > 0 (L1 = 1); vertices outside a
     side's support get exactly 0.0 for that side. The output is
-    materialized inside the ``sized_plan`` scope, and every frame the
-    kernel persisted is released before it returns.
+    materialized inside the ``sized_layout`` scope, which releases
+    every frame the kernel persisted.
     """
-    fwd, m = colocate_edges_sized(edges.select("src", "dst"))
-    with sized_plan(fwd.sparkSession, m):
-        rev = colocate_edges(fwd.select(F.col("dst").alias("src"),
-                                        F.col("src").alias("dst")))
+    with sized_layout(edges.select("src", "dst")) as (fwd, _, keep):
+        rev = keep(colocate_edges(fwd.select(F.col("dst").alias("src"),
+                                             F.col("src").alias("dst"))))
         # (id, out_deg): out- resp. in-degree, NULL outside the support
-        out_b = _vertex_base(fwd).persist()
-        in_b = _vertex_base(rev).persist()
+        out_b = keep(_vertex_base(fwd).persist())
+        in_b = keep(_vertex_base(rev).persist())
         # authority chain: backward (÷ind) then forward (÷outd);
         # hub chain: forward (÷outd) then backward (÷ind)
         auth = _walk(in_b, [(rev, out_b), (fwd, in_b)], iters)
         hub = _walk(out_b, [(fwd, in_b), (rev, out_b)], iters)
-        out = (
+        return (
             out_b.join(hub.withColumnRenamed("x", "hub"), "id", "left")
             .join(auth.withColumnRenamed("x", "authority"), "id", "left")
             .select(
@@ -81,9 +79,6 @@ def salsa(edges: DataFrame, iters: int = 5) -> DataFrame:
             )
             .localCheckpoint(eager=True)
         )
-    for f in (fwd, rev, out_b, in_b):
-        f.unpersist()
-    return out
 
 
 def _walk(base: DataFrame, sides: list[tuple[DataFrame, DataFrame]],

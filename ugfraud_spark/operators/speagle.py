@@ -105,10 +105,11 @@ def speagle(
         .withColumnRenamed("lp1", "r1")
         .select("src", "dst", *static_cols,
                 *[F.lit(0.0).alias(c) for c in msg_cols])
-        # no explicit repartition: the eager checkpoint below discards
-        # partitioning info (it scans as UnknownPartitioning), so the
-        # old repartition("src") — a full 16-column |E| exchange — bought
-        # no layout the loop could use
+        # no explicit repartition: the eager checkpoint below is taken
+        # at the session's AQE setting (on by default), and with AQE on
+        # a checkpoint scans as UnknownPartitioning, so the old
+        # repartition("src") — a full 16-column |E| exchange — bought
+        # no layout the AQE-on loop could use
         .localCheckpoint(eager=True)
     )
     # loop shuffle width from the measured state size (the count reads

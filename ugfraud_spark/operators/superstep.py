@@ -10,11 +10,12 @@ the reference's convergence checks (Δ<0.1 GANG, ≤1e-8 ZooBP, tol BP).
 Scale concerns handled here rather than in each algorithm:
 
 - **One job per converging superstep**: a residual is never a second
-  action over two checkpoints (a join that re-exchanges both, since
-  checkpoints report UnknownPartitioning). ``residual_fn(old, new)``
-  returns the frame to checkpoint with its convergence sum planted
-  in it (``DataFrame.observe``) plus a reader; the reader runs after
-  the ``localCheckpoint`` job that materializes the step anyway.
+  action over two checkpoints (one more job per superstep, and a join
+  that re-exchanges both when they were taken with AQE on).
+  ``residual_fn(old, new)`` returns the frame to checkpoint with its
+  convergence sum planted in it (``DataFrame.observe``) plus a reader;
+  the reader runs after the ``localCheckpoint`` job that materializes
+  the step anyway.
   ``l1_residual`` observes a null-skipping Σ|value − old| over a left
   join of the old value onto the step output.
 - **Lineage truncation**: an iterative DataFrame plan grows per
@@ -29,18 +30,20 @@ Scale concerns handled here rather than in each algorithm:
   the partitioning is reused across supersteps, so the per-superstep
   join against edges shuffles only the (smaller) message side when the
   planner can prove co-partitioning.
-- **One plan scope**: ``sized_plan`` is the only place that sets
-  ``spark.sql.shuffle.partitions`` and AQE. A kernel measures its edge
-  rows once (``colocate_edges_sized`` / ``layout_width``), runs its
-  whole body, loop and final shuffle included, inside
-  ``sized_plan(spark, m)``, and returns only materialized frames. AQE
-  is off for the hinted co-partitioned join loops — the PageRank
-  family, HITS, eigenvector centrality, SALSA, BiRank, label
-  propagation — where per-stage re-planning is pure driver overhead
-  (pagerank 2.6 s → 2.2 s, label_propagation 3.3 s → 2.6 s on the
-  sf0.1 suite). It is kept on for the broadcast-frontier and peeling
-  loops and SpEagle's |E|-sized state, which it speeds up (kcore
-  5.1 s → 1.6 s, bfs_hops 4.0 s → 3.2 s).
+- **One scope per kernel**: a kernel runs its whole body, loop and
+  final shuffle included, inside ``sized_layout`` (its edges laid out
+  by ``colocate_edges_sized`` at the measured width ``m``) or, when it
+  sizes from another frame, ``sized_plan(spark, layout_width(...))``.
+  ``sized_plan`` is the only place that sets
+  ``spark.sql.shuffle.partitions`` and AQE (off for the hinted
+  co-partitioned join loops, on for the frontier, peeling and SpEagle
+  loops; see its docstring). The scope is also the lifetime of what
+  the kernel caches: the edge layout is the resident operand of every
+  superstep and of nothing after the loop, so on exit, also on raise,
+  the scope unpersists it and every frame registered with ``keep``.
+  The cache matches plans, so a frame whose plan was cached before the
+  scope opened is the caller's and is never released. A kernel
+  returns only checkpointed frames.
 - **One message step**: ``_contribs`` (edges ⋈ state on src,
   ``groupBy(dst).sum``) is the SpMV every link-analysis kernel sends
   its messages through, over a vertex base from ``_vertex_base``.
@@ -71,21 +74,39 @@ from pyspark.sql import functions as F
 LAYOUT_ROWS_PER_PARTITION = 64_000
 
 
+def _cache(spark: SparkSession):
+    return spark._jsparkSession.sharedState().cacheManager()
+
+
+def _release(frames: list[DataFrame], before) -> None:
+    """Unpersist ``frames``, newest first (a frame before the frames it
+    was built from), except each whose cache entry is in ``before``,
+    the immutable entry sequence taken when the scope opened: that
+    entry is the caller's, and ``persist()`` of an equal plan was a
+    no-op."""
+    for frame in reversed(frames):
+        entry = _cache(frame.sparkSession).lookupCachedData(frame._jdf)
+        if entry.isDefined() and not before.contains(entry.get()):
+            frame.unpersist()
+
+
 @contextmanager
 def sized_plan(spark: SparkSession, shuffle_partitions: int,
                adaptive_off: bool = True):
-    """The one scope that sets a kernel's plan: it scopes
-    ``spark.sql.shuffle.partitions`` to ``shuffle_partitions`` (the
-    ``m`` of ``colocate_edges_sized`` or ``layout_width``) and, by
-    default, turns AQE off. Both values are restored when the body
-    exits, also when it raises.
+    """The one scope that sets a kernel's plan:
+    ``spark.sql.shuffle.partitions`` = ``shuffle_partitions`` (the ``m``
+    of ``sized_layout`` or ``layout_width``) and, by default, AQE off.
+    It yields ``keep``: ``keep(frame)`` registers a frame the kernel
+    persisted and returns it. On exit, also on raise, every kept frame
+    is unpersisted unless its plan was already cached when the scope
+    opened, and both confs are restored.
 
-    Contract: Spark reads these confs when a plan EXECUTES, so every
-    shuffle a sized kernel runs must run inside the scope. A kernel
-    returns either the state ``iterate`` checkpointed inside it or a
-    frame it materialized inside it (``localCheckpoint`` or a
-    persisted, counted frame); it never returns a lazy plan whose last
-    shuffle would run after the scope, at the session width.
+    Contract: Spark reads these confs when a plan EXECUTES, and a kept
+    frame is gone once the scope exits. So a kernel returns the state
+    ``iterate`` checkpointed inside the scope or a frame it
+    ``localCheckpoint``ed there; never a lazy plan whose last shuffle
+    would run after the scope, at the session width, or a plan over a
+    kept frame.
 
     AQE off (the default) is for a loop whose per-iteration plan is
     fixed, explicitly hinted and co-partitioned end to end
@@ -100,35 +121,62 @@ def sized_plan(spark: SparkSession, shuffle_partitions: int,
     state is |E|-sized (BFS and SSSP, k-core and coreness, the Fraudar
     peel, SpEagle). They run faster with AQE's partition coalescing:
     with AQE off at sf0.1, kcore 1.6 s → 5.1 s, bfs_hops 3.2 s →
-    4.0 s. Their width should still track the data. HITS left this
-    list when its per-half-step norm became an observation inside the
-    checkpoint job instead of a crossJoin'd 1-row aggregate: its
-    half-steps are now the hinted co-partitioned join shape.
+    4.0 s. Their width should still track the data.
 
     Assumes a single-threaded driver: the scope sets SESSION-global
     conf, so two queries running concurrently on one SparkSession
     would plan under each other's settings."""
     prev_n = spark.conf.get("spark.sql.shuffle.partitions")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    before = _cache(spark).cachedData()
+    kept: list[DataFrame] = []
+
+    def keep(frame: DataFrame) -> DataFrame:
+        kept.append(frame)
+        return frame
+
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     if adaptive_off:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        yield
+        yield keep
     finally:
-        spark.conf.set("spark.sql.shuffle.partitions", prev_n)
-        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        try:
+            _release(kept, before)
+        finally:
+            spark.conf.set("spark.sql.shuffle.partitions", prev_n)
+            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+
+
+@contextmanager
+def sized_layout(edges: DataFrame, key: str = "src", *,
+                 adaptive_off: bool = True):
+    """``sized_plan`` over an edge layout: lays ``edges`` out on ``key``
+    with ``colocate_edges_sized`` (its only caller, through this
+    module's globals, so a wrapper on the module attribute sees every
+    layout), opens ``sized_plan(spark, m, adaptive_off)`` at the
+    measured width ``m`` and yields ``(edges, m, keep)``. On exit, also
+    on raise, the layout is released with the kept frames."""
+    spark = edges.sparkSession
+    before = _cache(spark).cachedData()
+    laid, m = colocate_edges_sized(edges, key)
+    try:
+        with sized_plan(spark, m, adaptive_off) as keep:
+            yield laid, m, keep
+    finally:
+        _release([laid], before)
 
 
 def colocate_edges(edges: DataFrame, key: str = "src") -> DataFrame:
     """Shuffle the edge table ONCE onto the per-superstep join key and pin
     it with persist(). Every subsequent ``edges ⋈ state`` then shuffles
     only the |V|-sized state side — the |E|-sized payload never moves
-    again. persist (NOT localCheckpoint) is deliberate: a checkpointed
-    RDD scans as ``ExistingRDD [UnknownPartitioning]`` and Catalyst
-    re-exchanges it every superstep, while InMemoryRelation keeps the
-    HashPartitioning visible so EnsureRequirements elides the edge-side
-    exchange (verified in .explain: no Exchange above InMemoryTableScan).
+    again: InMemoryRelation keeps the HashPartitioning visible, so
+    EnsureRequirements elides the edge-side exchange (no Exchange above
+    InMemoryTableScan). A local checkpoint keeps it only when taken with
+    AQE off (``tests/test_plan_shapes.py`` pins both modes); the layout
+    loops run in both, so persist is the one mechanism, and the
+    kernel's scope releases it where checkpoint blocks wait for GC.
     Edges are static, so the constant-depth lineage needs no truncation.
 
     Per-superstep joins must also NOT broadcast the state (a driver-side
@@ -161,7 +209,8 @@ def colocate_edges_sized(edges: DataFrame,
     kernel under ``sized_plan(spark, m)`` with every shuffle at m
     partitions. Returns ``(edges, m)``. At conf-saturating sizes (the
     bench probe's 64M edges, any real-cluster run) m == conf and this
-    is exactly ``colocate_edges``."""
+    is exactly ``colocate_edges``. Kernels do not call it: they open
+    ``sized_layout``, which calls it and releases the layout."""
     spark = edges.sparkSession
     n = int(spark.conf.get("spark.sql.shuffle.partitions"))
     out = edges.repartition(n, key).persist()
