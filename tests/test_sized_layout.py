@@ -16,8 +16,9 @@ from types import SimpleNamespace
 import pytest
 from pyspark.sql import functions as F
 
-from ugfraud_spark.operators import (bfs, birank, components, fraudar, gang,
-                                    hits, labelprop, pagerank, salsa, zoobp)
+from ugfraud_spark.operators import (betweenness, bfs, birank, components,
+                                    fraudar, gang, hits, labelprop, pagerank,
+                                    salsa, triangles, walks, zoobp)
 from ugfraud_spark.operators.linalg import sketch_partitions
 from ugfraud_spark.operators.superstep import (
     LAYOUT_ROWS_PER_PARTITION,
@@ -226,13 +227,24 @@ PAGERANK_FAMILY = {
 }
 
 
-@pytest.mark.parametrize("name", sorted(KERNELS.keys() | PAGERANK_FAMILY.keys()))
+# kernels that run at the session width but cache an edge or neighbor
+# layout inside ``cache_scope``
+UNSIZED = {
+    "betweenness": lambda t: betweenness.betweenness(t.e),
+    "triangles_per_vertex": lambda t: triangles.triangles_per_vertex(t.ab),
+    "random_walks": lambda t: walks.random_walks(t.e),
+    "node2vec_walks": lambda t: walks.node2vec_walks(t.e),
+}
+
+
+@pytest.mark.parametrize(
+    "name", sorted(KERNELS.keys() | PAGERANK_FAMILY.keys() | UNSIZED.keys()))
 def test_kernel_releases_what_it_persisted(spark, name):
     """A kernel's scope releases every frame it persisted (edge
     layouts, vertex bases, CSR blocks, per-round deltas) when it
     returns: one call on a fresh input leaves the session's cache as
     it found it, and the output still reads."""
-    kernel = KERNELS.get(name) or PAGERANK_FAMILY[name]
+    kernel = {**KERNELS, **PAGERANK_FAMILY, **UNSIZED}[name]
     inputs = _tiny_inputs(spark)
     before = _cached(spark)
     out = kernel(inputs)

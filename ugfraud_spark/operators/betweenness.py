@@ -31,7 +31,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .superstep import colocate_edges
+from .superstep import cache_scope, colocate_edges
 
 N_PIVOTS = 8
 DEPTH = 5
@@ -53,77 +53,80 @@ def betweenness(edges: DataFrame, k: int = N_PIVOTS,
     from the k deterministic pivots, BFS truncated at ``depth``.
     Pivot rows themselves are excluded (a source's dependency on its
     own paths is 0 by definition); vertices on no shortest path get 0.
-    """
-    e = colocate_edges(edges.select("src", "dst"))
-    verts = (
-        e.select(F.col("src").alias("id"))
-        .unionAll(e.select(F.col("dst").alias("id")))
-        .distinct()
-        .repartition("id")
-        .persist()
-    )
-    verts.count()
-
-    piv = pivots(e, k)
-    f0 = piv.select(
-        "pivot", F.col("pivot").alias("id"),
-        F.lit(0).alias("dist"), F.lit(1).cast("long").alias("sigma"),
-    )
-    vis = f0.localCheckpoint(eager=True)
-    frontier = vis
-    # forward: path-count BFS, all pivots interleaved in one frame
-    for t in range(1, depth + 1):
-        cand = (
-            e.join(frontier.withColumnRenamed("id", "src")
-                   .hint("shuffle_hash"), "src")
-            .groupBy("pivot", F.col("dst").alias("id"))
-            .agg(F.sum("sigma").alias("sigma"))
+    The output is checkpointed before the edge layout and the vertex
+    set are released."""
+    with cache_scope(edges.sparkSession) as keep:
+        e = keep(colocate_edges(edges.select("src", "dst")))
+        verts = keep(
+            e.select(F.col("src").alias("id"))
+            .unionAll(e.select(F.col("dst").alias("id")))
+            .distinct()
+            .repartition("id")
+            .persist()
         )
-        frontier = (
-            cand.join(vis.select("pivot", "id"), ["pivot", "id"],
-                      "left_anti")
-            .select("pivot", "id", F.lit(t).alias("dist"), "sigma")
-            .localCheckpoint(eager=True)
-        )
-        vis = vis.unionAll(frontier).localCheckpoint(eager=True)
+        verts.count()
 
-    # backward: dependency accumulation level by level, deepest first.
-    # Level `depth` has no successors inside the truncation → δ = 0.
-    dl = (
-        vis.where(F.col("dist") == depth)
-        .select("pivot", "id", "sigma", F.lit(0.0).alias("delta"))
-    )
-    acc = dl.select("pivot", "id", "delta")
-    for lvl in range(depth - 1, -1, -1):
-        vl = vis.where(F.col("dist") == lvl).select("pivot", "id", "sigma")
-        msg = (
-            e.join(vl.withColumnRenamed("id", "src").hint("shuffle_hash"),
-                   "src")
-            .join(
-                dl.select("pivot", F.col("id").alias("dst"),
-                          F.col("sigma").alias("w_sigma"),
-                          F.col("delta").alias("w_delta")),
-                ["pivot", "dst"],
+        piv = pivots(e, k)
+        f0 = piv.select(
+            "pivot", F.col("pivot").alias("id"),
+            F.lit(0).alias("dist"), F.lit(1).cast("long").alias("sigma"),
+        )
+        vis = f0.localCheckpoint(eager=True)
+        frontier = vis
+        # forward: path-count BFS, all pivots interleaved in one frame
+        for t in range(1, depth + 1):
+            cand = (
+                e.join(frontier.withColumnRenamed("id", "src")
+                       .hint("shuffle_hash"), "src")
+                .groupBy("pivot", F.col("dst").alias("id"))
+                .agg(F.sum("sigma").alias("sigma"))
             )
-            .groupBy("pivot", F.col("src").alias("id"))
-            .agg(F.sum(
-                (F.col("sigma") / F.col("w_sigma"))
-                * (F.lit(1.0) + F.col("w_delta"))
-            ).alias("d"))
-        )
+            frontier = (
+                cand.join(vis.select("pivot", "id"), ["pivot", "id"],
+                          "left_anti")
+                .select("pivot", "id", F.lit(t).alias("dist"), "sigma")
+                .localCheckpoint(eager=True)
+            )
+            vis = vis.unionAll(frontier).localCheckpoint(eager=True)
+
+        # backward: dependency accumulation level by level, deepest first.
+        # Level `depth` has no successors inside the truncation → δ = 0.
         dl = (
-            vl.join(msg, ["pivot", "id"], "left")
-            .select("pivot", "id", "sigma",
-                    F.coalesce("d", F.lit(0.0)).alias("delta"))
+            vis.where(F.col("dist") == depth)
+            .select("pivot", "id", "sigma", F.lit(0.0).alias("delta"))
+        )
+        acc = dl.select("pivot", "id", "delta")
+        for lvl in range(depth - 1, -1, -1):
+            vl = vis.where(F.col("dist") == lvl).select("pivot", "id", "sigma")
+            msg = (
+                e.join(vl.withColumnRenamed("id", "src").hint("shuffle_hash"),
+                       "src")
+                .join(
+                    dl.select("pivot", F.col("id").alias("dst"),
+                              F.col("sigma").alias("w_sigma"),
+                              F.col("delta").alias("w_delta")),
+                    ["pivot", "dst"],
+                )
+                .groupBy("pivot", F.col("src").alias("id"))
+                .agg(F.sum(
+                    (F.col("sigma") / F.col("w_sigma"))
+                    * (F.lit(1.0) + F.col("w_delta"))
+                ).alias("d"))
+            )
+            dl = (
+                vl.join(msg, ["pivot", "id"], "left")
+                .select("pivot", "id", "sigma",
+                        F.coalesce("d", F.lit(0.0)).alias("delta"))
+                .localCheckpoint(eager=True)
+            )
+            acc = acc.unionAll(dl.select("pivot", "id", "delta"))
+
+        bc = (
+            acc.where(F.col("id") != F.col("pivot"))
+            .groupBy("id").agg(F.sum("delta").alias("bc"))
+        )
+        return (
+            verts.join(bc, "id", "left")
+            .select("id", F.round(F.coalesce("bc", F.lit(0.0)), 6).alias("bc"))
             .localCheckpoint(eager=True)
         )
-        acc = acc.unionAll(dl.select("pivot", "id", "delta"))
-
-    bc = (
-        acc.where(F.col("id") != F.col("pivot"))
-        .groupBy("id").agg(F.sum("delta").alias("bc"))
-    )
-    return (
-        verts.join(bc, "id", "left")
-        .select("id", F.round(F.coalesce("bc", F.lit(0.0)), 6).alias("bc"))
-    )

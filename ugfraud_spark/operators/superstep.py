@@ -91,6 +91,26 @@ def _release(frames: list[DataFrame], before) -> None:
 
 
 @contextmanager
+def cache_scope(spark: SparkSession):
+    """Yield ``keep``: ``keep(frame)`` registers a frame the caller
+    persisted and returns it. On exit, also on raise, every kept frame
+    is unpersisted unless its plan was already cached when the scope
+    opened. ``sized_plan`` opens one; a kernel that sets no width of
+    its own opens this alone."""
+    before = _cache(spark).cachedData()
+    kept: list[DataFrame] = []
+
+    def keep(frame: DataFrame) -> DataFrame:
+        kept.append(frame)
+        return frame
+
+    try:
+        yield keep
+    finally:
+        _release(kept, before)
+
+
+@contextmanager
 def sized_plan(spark: SparkSession, shuffle_partitions: int,
                adaptive_off: bool = True):
     """The one scope that sets a kernel's plan:
@@ -128,24 +148,15 @@ def sized_plan(spark: SparkSession, shuffle_partitions: int,
     would plan under each other's settings."""
     prev_n = spark.conf.get("spark.sql.shuffle.partitions")
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
-    before = _cache(spark).cachedData()
-    kept: list[DataFrame] = []
-
-    def keep(frame: DataFrame) -> DataFrame:
-        kept.append(frame)
-        return frame
-
     spark.conf.set("spark.sql.shuffle.partitions", str(shuffle_partitions))
     if adaptive_off:
         spark.conf.set("spark.sql.adaptive.enabled", "false")
     try:
-        yield keep
+        with cache_scope(spark) as keep:
+            yield keep
     finally:
-        try:
-            _release(kept, before)
-        finally:
-            spark.conf.set("spark.sql.shuffle.partitions", prev_n)
-            spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        spark.conf.set("spark.sql.shuffle.partitions", prev_n)
+        spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
 
 
 @contextmanager

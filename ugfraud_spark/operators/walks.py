@@ -40,6 +40,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .superstep import cache_scope
+
 WALK_A = 1_103_515_245
 WALK_B = 747_796_405
 WALK_C = 2_891_336_453
@@ -52,58 +54,59 @@ def random_walks(edges: DataFrame, n_walks: int = 2,
     truncated walks of ≤ ``length`` steps from every vertex with an
     out-edge; walk_id = start·n_walks + w. Deterministic in (edges,
     n_walks, length, seed)."""
-    e = edges.select("src", "dst")
-    # one-time neighbor layout: idx-addressable out-adjacency + degree.
-    # The window is per-src (bounded by the max out-degree), never global.
-    w_src = Window.partitionBy("src").orderBy("dst")
-    nbr = (
-        e.select("src", "dst",
-                 (F.row_number().over(w_src) - 1).alias("idx"))
-        .repartition("src")
-        .persist()
-    )
-    outd = nbr.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
+    with cache_scope(edges.sparkSession) as keep:
+        e = edges.select("src", "dst")
+        # one-time neighbor layout: idx-addressable out-adjacency + degree.
+        # The window is per-src (bounded by the max out-degree), never global.
+        w_src = Window.partitionBy("src").orderBy("dst")
+        nbr = keep(
+            e.select("src", "dst",
+                     (F.row_number().over(w_src) - 1).alias("idx"))
+            .repartition("src")
+            .persist()
+        )
+        outd = nbr.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
 
-    state = (
-        nbr.select("src").distinct()
-        .select(
-            F.col("src").alias("cur"),
-            F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("w"),
-        )
-        .select(
-            (F.col("cur") * n_walks + F.col("w")).alias("walk_id"), "cur",
-        )
-    )
-    out = state.select("walk_id", F.lit(0).alias("step"),
-                       F.col("cur").alias("vertex"))
-    for t in range(1, length + 1):
-        # every term is nonnegative and < 2^63 (cur and walk_id are
-        # bounded by the id namespace, multipliers < 2^32, and the
-        # scramble input is < P), so plain % agrees across engines
-        # with no pmod dance
-        h = (
-            F.col("cur") * F.lit(WALK_A)
-            + F.col("walk_id") * F.lit(WALK_B)
-            + F.lit(t * WALK_C + seed)
-        ) % F.lit(WALK_P)
-        h = (h * F.lit(WALK_A) + F.lit(WALK_B)) % F.lit(WALK_P)
-        step = (
-            state.join(outd.withColumnRenamed("src", "cur")
-                       .hint("shuffle_hash"), "cur")
-            .select("walk_id", "cur", (h % F.col("od")).alias("pick"))
-            .join(
-                nbr.select(F.col("src").alias("cur"),
-                           F.col("idx").alias("pick"),
-                           F.col("dst").alias("nxt")),
-                ["cur", "pick"],
+        state = (
+            nbr.select("src").distinct()
+            .select(
+                F.col("src").alias("cur"),
+                F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("w"),
             )
-            .select("walk_id", F.col("nxt").alias("cur"))
+            .select(
+                (F.col("cur") * n_walks + F.col("w")).alias("walk_id"), "cur",
+            )
         )
-        state = step.localCheckpoint(eager=True)
-        out = out.unionAll(
-            state.select("walk_id", F.lit(t).alias("step"),
-                         F.col("cur").alias("vertex")))
-    return out
+        out = state.select("walk_id", F.lit(0).alias("step"),
+                           F.col("cur").alias("vertex"))
+        for t in range(1, length + 1):
+            # every term is nonnegative and < 2^63 (cur and walk_id are
+            # bounded by the id namespace, multipliers < 2^32, and the
+            # scramble input is < P), so plain % agrees across engines
+            # with no pmod dance
+            h = (
+                F.col("cur") * F.lit(WALK_A)
+                + F.col("walk_id") * F.lit(WALK_B)
+                + F.lit(t * WALK_C + seed)
+            ) % F.lit(WALK_P)
+            h = (h * F.lit(WALK_A) + F.lit(WALK_B)) % F.lit(WALK_P)
+            step = (
+                state.join(outd.withColumnRenamed("src", "cur")
+                           .hint("shuffle_hash"), "cur")
+                .select("walk_id", "cur", (h % F.col("od")).alias("pick"))
+                .join(
+                    nbr.select(F.col("src").alias("cur"),
+                               F.col("idx").alias("pick"),
+                               F.col("dst").alias("nxt")),
+                    ["cur", "pick"],
+                )
+                .select("walk_id", F.col("nxt").alias("cur"))
+            )
+            state = step.localCheckpoint(eager=True)
+            out = out.unionAll(
+                state.select("walk_id", F.lit(t).alias("step"),
+                             F.col("cur").alias("vertex")))
+        return out.localCheckpoint(eager=True)
 
 
 def node2vec_walks(edges: DataFrame, n_walks: int = 2, length: int = 4,
@@ -139,80 +142,81 @@ def node2vec_walks(edges: DataFrame, n_walks: int = 2, length: int = 4,
         if not isinstance(w, int) or w <= 0:
             raise ValueError("node2vec_walks: weights must be positive "
                              "integers (the draw is integer-exact)")
-    e = edges.select("src", "dst")
-    w_src = Window.partitionBy("src").orderBy("dst")
-    nbr = (
-        e.select("src", "dst",
-                 (F.row_number().over(w_src) - 1).alias("idx"))
-        .repartition("src")
-        .persist()
-    )
-    outd = nbr.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
-
-    starts = (
-        nbr.select("src").distinct()
-        .select(
-            F.col("src").alias("cur"),
-            F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("w"),
+    with cache_scope(edges.sparkSession) as keep:
+        e = edges.select("src", "dst")
+        w_src = Window.partitionBy("src").orderBy("dst")
+        nbr = keep(
+            e.select("src", "dst",
+                     (F.row_number().over(w_src) - 1).alias("idx"))
+            .repartition("src")
+            .persist()
         )
-        .select((F.col("cur") * n_walks + F.col("w")).alias("walk_id"),
-                "cur")
-    )
-    out = starts.select("walk_id", F.lit(0).alias("step"),
-                        F.col("cur").alias("vertex"))
+        outd = nbr.groupBy("src").agg(F.count(F.lit(1)).alias("od"))
 
-    def _hash(t: int):
-        h = (
-            F.col("cur") * F.lit(WALK_A)
-            + F.col("walk_id") * F.lit(WALK_B)
-            + F.lit(t * WALK_C + seed)
-        ) % F.lit(WALK_P)
-        return (h * F.lit(WALK_A) + F.lit(WALK_B)) % F.lit(WALK_P)
-
-    # step 1: uniform, no prev — random_walks' formula verbatim
-    state = (
-        starts.join(outd.withColumnRenamed("src", "cur")
-                    .hint("shuffle_hash"), "cur")
-        .select("walk_id", "cur", (_hash(1) % F.col("od")).alias("pick"))
-        .join(nbr.select(F.col("src").alias("cur"),
-                         F.col("idx").alias("pick"),
-                         F.col("dst").alias("nxt")), ["cur", "pick"])
-        .select("walk_id", F.col("cur").alias("prev"),
-                F.col("nxt").alias("cur"))
-    ).localCheckpoint(eager=True)
-    out = out.unionAll(state.select("walk_id", F.lit(1).alias("step"),
-                                    F.col("cur").alias("vertex")))
-
-    adj = e.select(F.col("src").alias("prev"), F.col("dst").alias("x"),
-                   F.lit(1).alias("is_adj"))
-    w_walk = Window.partitionBy("walk_id").orderBy("idx")
-    for t in range(2, length + 1):
-        cand = (
-            state.join(nbr.select(F.col("src").alias("cur"), "idx",
-                                  F.col("dst").alias("x")), "cur")
-            .join(adj, ["prev", "x"], "left")
+        starts = (
+            nbr.select("src").distinct()
             .select(
-                "walk_id", "prev", "cur", "idx", "x",
-                F.when(F.col("x") == F.col("prev"), F.lit(w_ret))
-                .when(F.col("is_adj").isNotNull(), F.lit(w_adj))
-                .otherwise(F.lit(w_out)).alias("wt"),
+                F.col("src").alias("cur"),
+                F.explode(F.sequence(F.lit(0), F.lit(n_walks - 1))).alias("w"),
             )
+            .select((F.col("cur") * n_walks + F.col("w")).alias("walk_id"),
+                    "cur")
         )
-        cum = F.sum("wt").over(
-            w_walk.rowsBetween(Window.unboundedPreceding, 0))
-        tot = F.sum("wt").over(Window.partitionBy("walk_id"))
-        r = _hash(t) % tot
+        out = starts.select("walk_id", F.lit(0).alias("step"),
+                            F.col("cur").alias("vertex"))
+
+        def _hash(t: int):
+            h = (
+                F.col("cur") * F.lit(WALK_A)
+                + F.col("walk_id") * F.lit(WALK_B)
+                + F.lit(t * WALK_C + seed)
+            ) % F.lit(WALK_P)
+            return (h * F.lit(WALK_A) + F.lit(WALK_B)) % F.lit(WALK_P)
+
+        # step 1: uniform, no prev — random_walks' formula verbatim
         state = (
-            cand.select("walk_id", "cur", "x", "wt",
-                        cum.alias("cum"), r.alias("r"))
-            .where((F.col("cum") - F.col("wt") <= F.col("r"))
-                   & (F.col("r") < F.col("cum")))
+            starts.join(outd.withColumnRenamed("src", "cur")
+                        .hint("shuffle_hash"), "cur")
+            .select("walk_id", "cur", (_hash(1) % F.col("od")).alias("pick"))
+            .join(nbr.select(F.col("src").alias("cur"),
+                             F.col("idx").alias("pick"),
+                             F.col("dst").alias("nxt")), ["cur", "pick"])
             .select("walk_id", F.col("cur").alias("prev"),
-                    F.col("x").alias("cur"))
+                    F.col("nxt").alias("cur"))
         ).localCheckpoint(eager=True)
-        out = out.unionAll(state.select("walk_id", F.lit(t).alias("step"),
+        out = out.unionAll(state.select("walk_id", F.lit(1).alias("step"),
                                         F.col("cur").alias("vertex")))
-    return out
+
+        adj = e.select(F.col("src").alias("prev"), F.col("dst").alias("x"),
+                       F.lit(1).alias("is_adj"))
+        w_walk = Window.partitionBy("walk_id").orderBy("idx")
+        for t in range(2, length + 1):
+            cand = (
+                state.join(nbr.select(F.col("src").alias("cur"), "idx",
+                                      F.col("dst").alias("x")), "cur")
+                .join(adj, ["prev", "x"], "left")
+                .select(
+                    "walk_id", "prev", "cur", "idx", "x",
+                    F.when(F.col("x") == F.col("prev"), F.lit(w_ret))
+                    .when(F.col("is_adj").isNotNull(), F.lit(w_adj))
+                    .otherwise(F.lit(w_out)).alias("wt"),
+                )
+            )
+            cum = F.sum("wt").over(
+                w_walk.rowsBetween(Window.unboundedPreceding, 0))
+            tot = F.sum("wt").over(Window.partitionBy("walk_id"))
+            r = _hash(t) % tot
+            state = (
+                cand.select("walk_id", "cur", "x", "wt",
+                            cum.alias("cum"), r.alias("r"))
+                .where((F.col("cum") - F.col("wt") <= F.col("r"))
+                       & (F.col("r") < F.col("cum")))
+                .select("walk_id", F.col("cur").alias("prev"),
+                        F.col("x").alias("cur"))
+            ).localCheckpoint(eager=True)
+            out = out.unionAll(state.select("walk_id", F.lit(t).alias("step"),
+                                            F.col("cur").alias("vertex")))
+        return out.localCheckpoint(eager=True)
 
 
 def negative_samples(edges: DataFrame, k: int = 3, oversample: int = 4,

@@ -24,19 +24,23 @@ At scale: the corpus shingle + capped band-key frames are computed
 ONCE at stream start (`dedup.build_corpus_index`) and probed by every
 micro-batch — each micro-batch costs one directional band join sized
 by the batch, not the corpus.
+
+Every runner stages its source with ``drain.staged`` and drains it once
+with ``drain.drain``: into a parquet sink (``drain.to_parquet``) or
+through ``foreachBatch``, never into a memory sink, which holds every
+row on the driver: per-doc output stays distributed.
 """
 
 from __future__ import annotations
 
 import os
-import shutil
-import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..operators.dedup import build_corpus_index, incremental_dedup
+from .drain import drain, staged, to_parquet
 
 DOC_SCHEMA = T.StructType([
     T.StructField("doc_id", T.LongType(), True),
@@ -47,25 +51,16 @@ DOC_SCHEMA = T.StructType([
 ])
 
 
-def stage_stream_src(parquet_path: str, out_dir: str) -> str:
-    """Spark's parquet STREAM source requires a directory: expose the
-    file(s) through a symlinked dir (zero copies). Returns the staged
-    source dir; raises if no parquet files resolve."""
-    parquet_path = os.path.abspath(parquet_path)
-    src_dir = os.path.join(out_dir, "src")
-    os.makedirs(src_dir)
-    files = (
-        [parquet_path] if os.path.isfile(parquet_path)
-        else [os.path.join(parquet_path, f)
-              for f in sorted(os.listdir(parquet_path))
-              if f.endswith(".parquet")]
-    )
-    if not files:
-        raise FileNotFoundError(
-            f"stage_stream_src: no .parquet files under {parquet_path}")
-    for f in files:
-        os.symlink(f, os.path.join(src_dir, os.path.basename(f)))
-    return src_dir
+def _doc_stream(spark: SparkSession, src_dir: str,
+                max_files_per_trigger: int | None = None) -> DataFrame:
+    """The staged documents as a stream; ``max_files_per_trigger``
+    forces a MULTI-micro-batch run (one file per trigger at 1), which
+    the decomposability tests drive to prove batch-split invariance;
+    availableNow still drains everything."""
+    reader = spark.readStream.schema(DOC_SCHEMA)
+    if max_files_per_trigger:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.parquet(src_dir)
 
 
 def run_stream_quality(spark: SparkSession, parquet_path: str) -> DataFrame:
@@ -80,28 +75,13 @@ def run_stream_quality(spark: SparkSession, parquet_path: str) -> DataFrame:
 
     The returned frame is a distributed localCheckpoint of the sink
     (per-doc result — NEVER driver-collected, unlike the dup-pair
-    sibling whose output is small by construction); the temp sink is
-    removed once the checkpoint severs the file lineage, and any
-    failure path cleans the temp dir in the enclosing finally."""
+    sibling whose output is small by construction); the staged dir,
+    sink included, is removed once the checkpoint severs the file
+    lineage, also on raise."""
     from ..operators.quality import quality_filter
 
-    out_dir = tempfile.mkdtemp(prefix="stream_quality_")
-    sink = os.path.join(out_dir, "verdicts")
-    try:
-        src_dir = stage_stream_src(parquet_path, out_dir)
-        src = spark.readStream.schema(DOC_SCHEMA).parquet(src_dir)
-        q = (
-            quality_filter(src)
-            .writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", os.path.join(out_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+    with staged(parquet_path) as d:
+        return to_parquet(quality_filter(_doc_stream(spark, d)), d)
 
 
 def run_stream_incremental_dedup(spark: SparkSession, parquet_path: str,
@@ -116,46 +96,26 @@ def run_stream_incremental_dedup(spark: SparkSession, parquet_path: str,
     equals the one-shot batch `incremental_dedup` under any
     micro-batching, provided no batch-side band bucket exceeds the cap
     at one-shot scope (directionality + cap caveat — see module doc)."""
-    parquet_path = os.path.abspath(parquet_path)  # symlink targets must
-    # resolve from the temp src dir, not the caller's cwd
-    corpus = (
-        spark.read.schema(DOC_SCHEMA).parquet(parquet_path)
-        .where(F.col("doc_id") % mod != 0)
-    )
-    # corpus-side shingles + capped band keys: once per stream, probed
-    # by every micro-batch
-    corpus_index = build_corpus_index(corpus)
-    out_dir = tempfile.mkdtemp(prefix="incr_dedup_out_")
-    sink = os.path.join(out_dir, "pairs")
-    try:
-        src_dir = stage_stream_src(parquet_path, out_dir)
-    except FileNotFoundError:
-        shutil.rmtree(out_dir, ignore_errors=True)
-        raise
+    with staged(parquet_path) as d:
+        corpus = (
+            spark.read.schema(DOC_SCHEMA).parquet(parquet_path)
+            .where(F.col("doc_id") % mod != 0)
+        )
+        # corpus-side shingles + capped band keys: once per stream, probed
+        # by every micro-batch
+        corpus_index = build_corpus_index(corpus)
+        sink = os.path.join(d, "_pairs")
 
-    def _admit(batch_df: DataFrame, _epoch: int) -> None:
-        incremental_dedup(corpus, batch_df, threshold=threshold,
-                          corpus_index=corpus_index) \
-            .write.mode("append").parquet(sink)
+        def _admit(batch_df: DataFrame, _epoch: int) -> None:
+            incremental_dedup(corpus, batch_df, threshold=threshold,
+                              corpus_index=corpus_index) \
+                .write.mode("append").parquet(sink)
 
-    reader = spark.readStream.schema(DOC_SCHEMA)
-    if max_files_per_trigger:
-        # forces a MULTI-micro-batch run (one file per trigger) — the
-        # decomposability test drives this to prove batch-split
-        # invariance; availableNow still drains everything
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(src_dir).where(F.col("doc_id") % mod == 0)
-    q = (
-        src.writeStream.foreachBatch(_admit)
-        .trigger(availableNow=True)
-        .option("checkpointLocation", os.path.join(out_dir, "ckpt"))
-        .start()
-    )
-    q.awaitTermination()
-    try:
-        rows = spark.read.parquet(sink).collect()
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        src = (_doc_stream(spark, d, max_files_per_trigger)
+               .where(F.col("doc_id") % mod == 0))
+        drain(src.writeStream.foreachBatch(_admit), d)
+        # read as a glob: Spark warns on a ``_``-named root path
+        rows = spark.read.parquet(os.path.join(sink, "*.parquet")).collect()
     return spark.createDataFrame(
         rows,
         "new_id long, old_id long, jaccard double",
@@ -187,37 +147,20 @@ def run_stream_frontier(spark: SparkSession, parquet_path: str,
     hash join sized by the batch, never by history."""
     from ..operators.crawl import normalize_urls, synthetic_urls
 
-    parquet_path = os.path.abspath(parquet_path)
-    seen = (
-        normalize_urls(synthetic_urls(
-            spark.read.schema(DOC_SCHEMA).parquet(parquet_path)
-            .where((F.col("doc_id") % mod != 0)
-                   & (F.col("doc_id") % seen_mod == 0))))
-        .select("url_norm").distinct()
-        .localCheckpoint(eager=True)
-    )
-    out_dir = tempfile.mkdtemp(prefix="stream_frontier_")
-    sink = os.path.join(out_dir, "admitted")
-    try:
-        src_dir = stage_stream_src(parquet_path, out_dir)
-        reader = spark.readStream.schema(DOC_SCHEMA)
-        if max_files_per_trigger:
-            reader = reader.option("maxFilesPerTrigger",
-                                   max_files_per_trigger)
-        src = reader.parquet(src_dir).where(F.col("doc_id") % mod == 0)
+    with staged(parquet_path) as d:
+        seen = (
+            normalize_urls(synthetic_urls(
+                spark.read.schema(DOC_SCHEMA).parquet(parquet_path)
+                .where((F.col("doc_id") % mod != 0)
+                       & (F.col("doc_id") % seen_mod == 0))))
+            .select("url_norm").distinct()
+            .localCheckpoint(eager=True)
+        )
+        src = (_doc_stream(spark, d, max_files_per_trigger)
+               .where(F.col("doc_id") % mod == 0))
         admitted = (
             normalize_urls(synthetic_urls(src))
             .join(seen, "url_norm", "left_anti")
             .select("doc_id", "url", "url_norm", "host")
         )
-        q = (
-            admitted.writeStream.format("parquet")
-            .option("path", sink)
-            .option("checkpointLocation", os.path.join(out_dir, "ckpt"))
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-        return spark.read.parquet(sink).localCheckpoint(eager=True)
-    finally:
-        shutil.rmtree(out_dir, ignore_errors=True)
+        return to_parquet(admitted, d)

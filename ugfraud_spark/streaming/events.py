@@ -8,6 +8,11 @@ watermark + ``trigger(availableNow=True)``) or as plain batch on the same
 parquet — both paths produce identical results, which is exactly what the
 DuckDB oracle checks.
 
+Every ``run_stream_*`` runner stages its source with ``drain.staged``
+and drains once into a memory sink with ``drain.to_memory`` (the file
+sink cannot run complete or update mode); a runner holds only its own
+watermark, aggregation, output mode and post-processing.
+
 Design at 100 TB/day: the event source becomes Kafka/Iceberg CDC; the
 watermark bounds state for late data; output mode "append" with a
 window-closed trigger writes immutable parquet/Iceberg partitions keyed
@@ -17,9 +22,13 @@ by window start. The JSON ``props`` column is parsed with ``from_json``
 
 from __future__ import annotations
 
+import os
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from .drain import staged, to_memory
 
 EVENT_SCHEMA = T.StructType([
     T.StructField("event_id", T.LongType()),
@@ -31,6 +40,13 @@ EVENT_SCHEMA = T.StructType([
 ])
 
 PROPS_SCHEMA = T.StructType([T.StructField("k", T.LongType())])
+
+
+def _watermarked(spark: SparkSession, src_dir: str,
+                 watermark: str) -> DataFrame:
+    """The staged events as a stream, watermarked on ``ts``."""
+    return (spark.readStream.schema(EVENT_SCHEMA).parquet(src_dir)
+            .withWatermark("ts", watermark))
 
 
 def windowed_event_stats(events: DataFrame, minutes: int = 60) -> DataFrame:
@@ -114,76 +130,29 @@ def run_stream_sessionize(spark: SparkSession, parquet_path: str,
     Append-mode mechanics in a finite drain: the final watermark is
     max(event ts) − delay, so the last sessions of the real data would
     stay unflushed in state. A SENTINEL event (user_id −1, ts far past
-    every real session close) is staged next to the source file and
+    every real session close) is written into the staged dir and
     pushes the final watermark beyond every real close; the sentinel's
     own session is the only state left unflushed and its user is
     filtered from the result. At scale the stream never ends and the
     sentinel branch is dead — flushing is the watermark's job."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    import datetime
 
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    tmp_dir = tempfile.mkdtemp(prefix="events_stream_src_")
-    if os.path.isfile(parquet_path):
-        os.symlink(parquet_path,
-                   os.path.join(tmp_dir, os.path.basename(parquet_path)))
-        src_file = parquet_path
-    else:  # directory source: symlink every parquet file
-        for f in os.listdir(parquet_path):
-            if f.endswith(".parquet"):
-                os.symlink(os.path.join(parquet_path, f),
-                           os.path.join(tmp_dir, f))
-        src_file = next(os.path.join(parquet_path, f)
-                        for f in os.listdir(parquet_path)
-                        if f.endswith(".parquet"))
-
-    # sentinel: one row, same arrow schema as the source, ts 10 years
-    # past the real maximum
-    real = pq.read_table(src_file)
-    ts_col = real.column("ts")
-    max_ts = pa.compute.max(ts_col).as_py()
-    import datetime
-
-    sentinel_ts = max_ts + datetime.timedelta(days=3650)
-    row = {}
-    for field in real.schema:
-        if field.name == "ts":
-            row[field.name] = pa.array([sentinel_ts], type=field.type)
-        elif field.name == "user_id":
-            row[field.name] = pa.array([-1], type=field.type)
-        elif pa.types.is_integer(field.type):
-            row[field.name] = pa.array([0], type=field.type)
-        elif pa.types.is_floating(field.type):
-            row[field.name] = pa.array([0.0], type=field.type)
-        else:
-            row[field.name] = pa.array([""], type=field.type)
-    pq.write_table(pa.table(row, schema=real.schema),
-                   os.path.join(tmp_dir, "zz_sentinel.parquet"))
-
-    src = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .parquet(tmp_dir)
-        .withWatermark("ts", watermark)
-    )
-    agg = sessionize(src, gap_minutes=gap_minutes)
-    tag = hashlib.md5(parquet_path.encode()).hexdigest()[:10]
-    name = f"events_sessionize_{tag}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-    return spark.table(name).where(F.col("user_id") != -1)
+    with staged(parquet_path) as d:
+        # sentinel: one row, same arrow schema as the source, ts 10 years
+        # past the real maximum
+        real = pq.read_table(d, columns=EVENT_SCHEMA.fieldNames())
+        ts = (pa.compute.max(real.column("ts")).as_py()
+              + datetime.timedelta(days=3650))
+        sentinel = {"event_id": [0], "ts": [ts], "user_id": [-1],
+                    "event_type": [""], "value": [0.0], "props": [""]}
+        pq.write_table(pa.table(sentinel, schema=real.schema),
+                       os.path.join(d, "zz_sentinel.parquet"))
+        out = sessionize(_watermarked(spark, d, watermark),
+                         gap_minutes=gap_minutes)
+        return to_memory(out, d, "append").where(F.col("user_id") != -1)
 
 
 def parse_props(events: DataFrame) -> DataFrame:
@@ -204,23 +173,11 @@ def stateful_user_stats_stream(spark: SparkSession, parquet_path: str) -> DataFr
     wins) must equal the plain batch groupBy, which is exactly what the
     DuckDB oracle checks. At scale the state store is RocksDB-backed and
     the watermark bounds it; here the sandbox drain is single-batch."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
     from typing import Any, Iterator, Tuple
 
     import pandas as pd
-
-    tmp_dir = None
-    if os.path.isfile(parquet_path):
-        tmp_dir = tempfile.mkdtemp(prefix="events_state_src_")
-        os.symlink(parquet_path, os.path.join(tmp_dir, os.path.basename(parquet_path)))
-        src_path = tmp_dir
-    else:
-        src_path = parquet_path
-
-    src = spark.readStream.schema(EVENT_SCHEMA).parquet(src_path)
+    from pyspark.sql import Window
+    from pyspark.sql.streaming.state import GroupStateTimeout
 
     def update_state(key: Tuple[Any], pdfs: Iterator[pd.DataFrame],
                      state) -> Iterator[pd.DataFrame]:
@@ -232,40 +189,23 @@ def stateful_user_stats_stream(spark: SparkSession, parquet_path: str) -> DataFr
         yield pd.DataFrame({"user_id": [key[0]], "n_events": [n],
                             "sum_value": [s]})
 
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
-    out = src.groupBy("user_id").applyInPandasWithState(
-        update_state,
-        outputStructType="user_id long, n_events long, sum_value double",
-        stateStructType="n long, s double",
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-    tag = hashlib.md5(src_path.encode()).hexdigest()[:10]
-    name = f"stateful_user_stats_{tag}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("update")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if tmp_dir is not None:
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-
-    from pyspark.sql import Window
-    from pyspark.sql import functions as FF
-
-    sink = spark.table(name)
-    w = Window.partitionBy("user_id").orderBy(FF.desc("n_events"))
-    return (
-        sink.withColumn("_rn", FF.row_number().over(w))
-        .where(FF.col("_rn") == 1)
-        .select("user_id", "n_events", FF.round("sum_value", 6).alias("sum_value"))
-    )
+    with staged(parquet_path) as d:
+        src = spark.readStream.schema(EVENT_SCHEMA).parquet(d)
+        out = src.groupBy("user_id").applyInPandasWithState(
+            update_state,
+            outputStructType="user_id long, n_events long, sum_value double",
+            stateStructType="n long, s double",
+            outputMode="update",
+            timeoutConf=GroupStateTimeout.NoTimeout,
+        )
+        w = Window.partitionBy("user_id").orderBy(F.desc("n_events"))
+        return (
+            to_memory(out, d, "update")
+            .withColumn("_rn", F.row_number().over(w))
+            .where(F.col("_rn") == 1)
+            .select("user_id", "n_events",
+                    F.round("sum_value", 6).alias("sum_value"))
+        )
 
 
 def run_stream_dedup(spark: SparkSession, parquet_path: str,
@@ -284,46 +224,13 @@ def run_stream_dedup(spark: SparkSession, parquet_path: str,
     RocksDB; the key is the state-shuffle key, so dedup scales like any
     keyed aggregation. Append mode: each key emits once, on first
     sight."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    tmp_dir = tempfile.mkdtemp(prefix="events_dedup_src_")
-    files = (
-        [parquet_path] if os.path.isfile(parquet_path)
-        else [os.path.join(parquet_path, f)
-              for f in sorted(os.listdir(parquet_path))
-              if f.endswith(".parquet")]
-    )
-    for i in range(deliveries):
-        for f in files:
-            os.symlink(f, os.path.join(
-                tmp_dir, f"delivery{i}_{os.path.basename(f)}"))
-
-    src = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .parquet(tmp_dir)
-        .withWatermark("ts", watermark)
-    )
-    deduped = src.dropDuplicates(list(key_cols))
-    tag = hashlib.md5(f"{parquet_path}:{deliveries}".encode()).hexdigest()[:10]
-    name = f"events_stream_dedup_{tag}"
-    q = (
-        deduped.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        shutil.rmtree(tmp_dir, ignore_errors=True)
-    return spark.table(name).select(
-        "event_id", "ts", "user_id", "event_type",
-        F.round("value", 6).alias("value"),
-    )
+    with staged(parquet_path, deliveries) as d:
+        out = _watermarked(spark, d, watermark).dropDuplicates(
+            list(key_cols))
+        return to_memory(out, d, "append").select(
+            "event_id", "ts", "user_id", "event_type",
+            F.round("value", 6).alias("value"),
+        )
 
 
 def run_stream_once(spark: SparkSession, parquet_path: str,
@@ -335,43 +242,10 @@ def run_stream_once(spark: SparkSession, parquet_path: str,
     the drain finishes (the sandbox stand-in for a continuous cluster
     stream; at scale the sink is Iceberg and the trigger is processing-
     time)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    # the file-stream source requires a *directory* to monitor; a single
-    # parquet file is exposed through a temp dir of symlinks (at scale the
-    # source is a real directory/Iceberg table and this branch is dead)
-    tmp_dir = None
-    if os.path.isfile(parquet_path):
-        tmp_dir = tempfile.mkdtemp(prefix="events_stream_src_")
-        os.symlink(parquet_path, os.path.join(tmp_dir, os.path.basename(parquet_path)))
-        parquet_path = tmp_dir
-
-    src = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .parquet(parquet_path)
-        .withWatermark("ts", watermark)
-    )
-    agg = windowed_event_stats(src, minutes=minutes)
-    # unique per-source sink name: concurrent/repeated invocations must not
-    # silently share one global memory-sink temp view
-    tag = hashlib.md5(parquet_path.encode()).hexdigest()[:10]
-    name = f"events_windowed_stats_{tag}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if tmp_dir is not None:  # drained — the symlink dir is dead weight
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-    return spark.table(name)
+    with staged(parquet_path) as d:
+        out = windowed_event_stats(_watermarked(spark, d, watermark),
+                                   minutes=minutes)
+        return to_memory(out, d, "complete")
 
 
 def windowed_approx_distinct(events: DataFrame,
@@ -408,42 +282,11 @@ def run_stream_approx_distinct(spark: SparkSession, parquet_path: str,
                                minutes: int = 60,
                                watermark: str = "2 hours") -> DataFrame:
     """The HLL windowed-distinct sketch as a REAL Structured Streaming
-    query (same drain pattern as ``run_stream_once``: file source over
-    a symlink-staged dir, watermark, complete-mode memory sink,
-    ``trigger(availableNow=True)``)."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
-
-    tmp_dir = None
-    if os.path.isfile(parquet_path):
-        tmp_dir = tempfile.mkdtemp(prefix="events_stream_src_")
-        os.symlink(parquet_path,
-                   os.path.join(tmp_dir, os.path.basename(parquet_path)))
-        parquet_path = tmp_dir
-
-    src = (
-        spark.readStream.schema(EVENT_SCHEMA)
-        .parquet(parquet_path)
-        .withWatermark("ts", watermark)
-    )
-    agg = windowed_approx_distinct(src, minutes=minutes)
-    tag = hashlib.md5(parquet_path.encode()).hexdigest()[:10]
-    name = f"events_approx_distinct_{tag}"
-    q = (
-        agg.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("complete")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if tmp_dir is not None:
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-    return spark.table(name)
+    query: watermark, complete output mode."""
+    with staged(parquet_path) as d:
+        out = windowed_approx_distinct(_watermarked(spark, d, watermark),
+                                       minutes=minutes)
+        return to_memory(out, d, "complete")
 
 
 def purchase_attribution(purchases: DataFrame, clicks: DataFrame,
@@ -491,43 +334,17 @@ def run_stream_attribution(spark: SparkSession, parquet_path: str,
     watermarked streams off the same staged source, event-time-bounded
     inner join (append mode — the bound is what lets Spark expire the
     click-side state), availableNow drain into a memory sink."""
-    import hashlib
-    import os
-    import shutil
-    import tempfile
+    with staged(parquet_path) as d:
+        def _side(kind: str) -> DataFrame:
+            return (
+                spark.readStream.schema(EVENT_SCHEMA).parquet(d)
+                .where(F.col("event_type") == kind)
+                .withWatermark("ts", watermark)
+            )
 
-    tmp_dir = None
-    if os.path.isfile(parquet_path):
-        tmp_dir = tempfile.mkdtemp(prefix="events_stream_src_")
-        os.symlink(parquet_path,
-                   os.path.join(tmp_dir, os.path.basename(parquet_path)))
-        parquet_path = tmp_dir
-
-    def _side(kind: str) -> DataFrame:
-        return (
-            spark.readStream.schema(EVENT_SCHEMA)
-            .parquet(parquet_path)
-            .where(F.col("event_type") == kind)
-            .withWatermark("ts", watermark)
-        )
-
-    out = purchase_attribution(_side("purchase"), _side("click"),
-                               window_minutes=window_minutes)
-    tag = hashlib.md5(parquet_path.encode()).hexdigest()[:10]
-    name = f"events_attribution_{tag}"
-    q = (
-        out.writeStream.format("memory")
-        .queryName(name)
-        .outputMode("append")
-        .trigger(availableNow=True)
-        .start()
-    )
-    try:
-        q.awaitTermination()
-    finally:
-        if tmp_dir is not None:
-            shutil.rmtree(tmp_dir, ignore_errors=True)
-    return spark.table(name)
+        out = purchase_attribution(_side("purchase"), _side("click"),
+                                   window_minutes=window_minutes)
+        return to_memory(out, d, "append")
 
 
 def session_entry_exit(events: DataFrame,
